@@ -30,6 +30,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import sys
 import tempfile
@@ -73,12 +74,18 @@ SCALE_LANE = [
 ]
 
 
+def base_sf(src: str) -> float:
+    """Scale factor named by a data dir like `.../sf0.1`; 0.1 when the name
+    carries none."""
+    m = re.search(r"sf(\d+(?:\.\d+)?)", os.path.basename(src.rstrip("/")))
+    return float(m.group(1)) if m else 0.1
+
+
 def main() -> None:
     src = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    base_sf = float(os.path.basename(src.rstrip("/")).replace("sf", "") or 0.1)
     factor = int(os.environ.get("SPARK_GRAFT_SCALE_FACTOR", "10"))
 
-    from clinical_data_platform_spark.session import get_spark
+    from clinical_data_platform_spark.session import get_spark, spark_cpus
 
     import __spark_entry__ as E
     from tools.sf1_scale import replicate
@@ -126,9 +133,9 @@ def main() -> None:
                 "metric": "scale-lane wall-clock",
                 "value": total,
                 "unit": "sec",
-                "sf": round(base_sf * factor, 3),
+                "sf": round(base_sf(src) * factor, 3),
                 "n_queries": len(timings),
-                "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+                "cpus": spark_cpus(),
                 "factor": factor,
                 "rep_sec": rep_sec,
                 "queries": timings,

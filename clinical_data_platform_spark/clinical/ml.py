@@ -10,20 +10,23 @@ metrics areaUnderROC / areaUnderPR.
 Spark shape: VectorAssembler -> StandardScaler -> LogisticRegression in a
 pyspark.ml Pipeline; stratified split via sampleBy; evaluators from
 BinaryClassificationEvaluator. Batch scoring = model.transform + prob[1].
+5-fold CV fits its folds concurrently and refits no all-data model.
 """
 
 from __future__ import annotations
 
 import json
 import os
+from multiprocessing.pool import ThreadPool
 
+import numpy as np
 import pyspark.sql.functions as F
+from pyspark import inheritable_thread_target
 from pyspark.ml import Pipeline, PipelineModel
 from pyspark.ml.classification import LogisticRegression
 from pyspark.ml.evaluation import BinaryClassificationEvaluator
 from pyspark.ml.feature import StandardScaler, VectorAssembler
 from pyspark.ml.functions import vector_to_array
-from pyspark.ml.tuning import CrossValidator, ParamGridBuilder
 from pyspark.sql import DataFrame, Window
 
 FEATURES = ["AGE", "AE_COUNT", "SEVERE_AE_COUNT"]
@@ -83,36 +86,30 @@ def cross_validate(features_df: DataFrame, folds: int = 5, seed: int = 42) -> di
     """5-fold cross-validated AUC — parity with ml/train.py:135
     `cross_val_score(pipe, X_train, y_train, cv=5, scoring='roc_auc')`.
 
-    Spark shape: `CrossValidator(numFolds=5, foldCol='fold')` over the same
-    assembler->scaler->logreg pipeline, with deterministic stratified folds.
-    avgMetrics/stdMetrics give mean/std; per-fold scores come from evaluating
-    each collected sub-model on its own held-out fold (exactly what
-    avgMetrics averages)."""
+    Fold i fits the assembler->scaler->logreg pipeline on `fold != i` of the
+    deterministic stratified folds and scores AUC once on `fold == i`. The
+    folds run concurrently, one thread each under the caller's job group,
+    and no model is refit on all rows. mean/std are np.mean/np.std of the
+    fold scores, as pyspark's CrossValidator computes avgMetrics/stdMetrics."""
     data = with_folds(prepare(features_df), folds, seed).cache()
+
+    def fold_auc(i: int) -> float:
+        model = build_pipeline().fit(data.filter(F.col("fold") != i))
+        held_out = model.transform(data.filter(F.col("fold") == i))
+        return float(_evaluator("areaUnderROC").evaluate(held_out))
+
     try:
-        ev = _evaluator("areaUnderROC")
-        cv = CrossValidator(
-            estimator=build_pipeline(),
-            estimatorParamMaps=ParamGridBuilder().build(),
-            evaluator=ev,
-            numFolds=folds,
-            foldCol="fold",
-            collectSubModels=True,
-            parallelism=folds,
-            seed=seed,
-        )
-        cvm = cv.fit(data)
-        scores = [
-            float(ev.evaluate(cvm.subModels[i][0].transform(data.filter(F.col("fold") == i))))
-            for i in range(folds)
-        ]
-        return {
-            "mean_cv_auc": float(cvm.avgMetrics[0]),
-            "std_cv_auc": float(cvm.stdMetrics[0]),
-            "cv_scores": scores,
-        }
+        with ThreadPool(folds) as pool:
+            scores = pool.map(
+                inheritable_thread_target(data.sparkSession)(fold_auc), range(folds)
+            )
     finally:
         data.unpersist()
+    return {
+        "mean_cv_auc": float(np.mean(scores)),
+        "std_cv_auc": float(np.std(scores)),
+        "cv_scores": scores,
+    }
 
 
 def _confusion(scored: DataFrame) -> dict:
@@ -269,11 +266,12 @@ def train_with_report(
     5-fold cross-validate, and assemble the gate verdict — the Spark
     counterpart of ml/train.py:181-359. Returns (model, report,
     scored_test); does NOT raise on gate failure (the report carries the
-    verdict, as the reference's MLflow tag does)."""
+    verdict, as the reference's MLflow tag does). scored_test is cached for
+    its four readers (AUC, AP, confusion, curve_points): unpersist it after."""
     data = prepare(features_df)
     tr, te = stratified_split(data, 0.3, seed)
     model = build_pipeline().fit(tr)
-    scored = model.transform(te)
+    scored = model.transform(te).cache()
     report = model_report(model, tr, scored)
     report["cross_validation"] = cross_validate(features_df, folds, seed)
     auc = report["validation_metrics"]["auc"]

@@ -8,6 +8,12 @@ Each stage materializes to the medallion layout under ``workdir`` so any
 stage can be re-run/inspected independently; everything between
 materialization points is one lazy DataFrame DAG (SURVEY §3.1: the four
 process boundaries of the reference collapse to Spark-internal exchanges).
+Downstream stages read the outputs already written instead of re-deriving
+them: analytics queries read ``star/``, the analytics row counts come from
+the written CSVs, and the dashboard reads ``marts/fact_subject_outcomes``.
+The subject feature table is the one in-memory input with several readers
+(split, CV, scoring, dashboard), so it is cached for the ML and dashboard
+stages.
 """
 
 from __future__ import annotations
@@ -16,7 +22,7 @@ import json
 import os
 import time
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from ..operators import checks as C
 from . import analytics as A
@@ -58,6 +64,12 @@ DOMAIN_RULES = {
         C.cross_column("ex_dates_ordered", "EXSTDTC <= EXENDTC"),
     ],
 }
+
+
+def _read_back(df: DataFrame, path: str) -> DataFrame:
+    """``df`` as read from the parquet it was just written to. Its schema is
+    already known, so Spark runs no schema-inference job for the read."""
+    return df.sparkSession.read.schema(df.schema).parquet(path)
 
 
 def run_demo(
@@ -111,6 +123,7 @@ def run_demo(
     star_dir = os.path.join(workdir, "star")
     for name, df in star.items():
         df.write.mode("overwrite").parquet(os.path.join(star_dir, name))
+    star = {n: _read_back(df, os.path.join(star_dir, n)) for n, df in star.items()}
     stage("star")
 
     # 6. marts
@@ -134,34 +147,49 @@ def run_demo(
         ),
     }
     for name, df in qs.items():
-        df.coalesce(1).write.mode("overwrite").option("header", True).csv(
-            os.path.join(out_dir, name)
+        path = os.path.join(out_dir, name)
+        df.coalesce(1).write.mode("overwrite").option("header", True).csv(path)
+        report["analytics"][name] = (
+            spark.read.schema(df.schema).option("header", True).csv(path).count()
         )
-        report["analytics"][name] = df.count()
     stage("analytics")
 
     # 8. ML train + 5-fold CV + artifact export + batch score -> RISK parquet
-    feats = subject_level_features(silver["DM"], silver["AE"])
-    model, ml_report, scored_test = train_with_report(feats, seed)
-    if not ml_report["performance_gate"]["passed"]:
-        raise RuntimeError(f"performance gates failed: {ml_report['performance_gate']}")
-    export_artifacts(os.path.join(workdir, "model_artifacts"), ml_report, scored_test)
-    risks = score(model, feats)
-    risks.write.mode("overwrite").parquet(os.path.join(workdir, "predictions"))
-    closed_form_risk(feats.na.fill({"AGE": 0})).write.mode("overwrite").parquet(
-        os.path.join(workdir, "predictions_closed_form")
-    )
-    report["ml"] = {
-        "auc": round(ml_report["validation_metrics"]["auc"], 4),
-        "ap": round(ml_report["validation_metrics"]["average_precision"], 4),
-        "cv_auc": round(ml_report["cross_validation"]["mean_cv_auc"], 4),
-        "n_scored": risks.count(),
-    }
-    stage("ml")
+    feats = subject_level_features(silver["DM"], silver["AE"]).cache()
+    try:
+        model, ml_report, scored_test = train_with_report(feats, seed)
+        try:
+            if not ml_report["performance_gate"]["passed"]:
+                raise RuntimeError(
+                    f"performance gates failed: {ml_report['performance_gate']}"
+                )
+            export_artifacts(
+                os.path.join(workdir, "model_artifacts"), ml_report, scored_test
+            )
+        finally:
+            scored_test.unpersist()
+        risks = score(model, feats)
+        risks.write.mode("overwrite").parquet(os.path.join(workdir, "predictions"))
+        closed_form_risk(feats.na.fill({"AGE": 0})).write.mode("overwrite").parquet(
+            os.path.join(workdir, "predictions_closed_form")
+        )
+        report["ml"] = {
+            "auc": round(ml_report["validation_metrics"]["auc"], 4),
+            "ap": round(ml_report["validation_metrics"]["average_precision"], 4),
+            "cv_auc": round(ml_report["cross_validation"]["mean_cv_auc"], 4),
+            "n_scored": risks.count(),
+        }
+        stage("ml")
 
-    # 9. dashboard chart-data payload (ui/dashboard.py parity) — the
-    # serving layer exposes this JSON at /dashboard without touching Spark
-    payload = dashboard_payload(marts["fact_subject_outcomes"], feats)
+        # 9. dashboard chart-data payload (ui/dashboard.py parity) — the
+        # serving layer exposes this JSON at /dashboard without touching Spark
+        outcomes = _read_back(
+            marts["fact_subject_outcomes"],
+            os.path.join(marts_dir, "fact_subject_outcomes"),
+        )
+        payload = dashboard_payload(outcomes, feats)
+    finally:
+        feats.unpersist()
     with open(os.path.join(workdir, "dashboard.json"), "w") as f:
         json.dump(payload, f, indent=2)
     stage("dashboard")

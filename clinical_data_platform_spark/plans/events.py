@@ -2719,7 +2719,8 @@ def event_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pagerank 500k edges, CC 1M pairs): the transition table is counted
     # first and collected only under _MKV_MAX_CELLS; above the gate the
     # pre-r9 distributed squaring loop runs unchanged. Both paths are
-    # pinned equal by tests/test_matrixops.py (paths-agree).
+    # pinned equal by tests/test_wave64_ops.py::
+    # test_markov_driver_and_distributed_paths_agree.
     c = c.localCheckpoint()  # counted, then consumed by one of two paths
     if c.count() <= _MKV_MAX_CELLS:
         crows = [(r["cur"], r["nxt"], r["n"]) for r in c.collect()]

@@ -1,10 +1,10 @@
 """SparkSession factory.
 
-Defaults are tuned for the local[32] test harness but every setting is the
-one you'd want on a real cluster too: AQE on (runtime re-planning, skew-join
-splitting, partition coalescing), UTC session timezone (parity with naive
-parquet timestamps and the DuckDB oracle), Arrow enabled for the few
-pandas-UDF paths, snappy parquet.
+The default master is local[<host cores>] ($SPARK_GRAFT_CPUS overrides the
+core count). Every setting is the one you'd want on a real cluster too: AQE
+on (runtime re-planning, skew-join splitting, partition coalescing), UTC
+session timezone (parity with naive parquet timestamps and the DuckDB
+oracle), Arrow enabled for the few pandas-UDF paths, snappy parquet.
 
 At 100 TB the only knobs that change are ``spark.sql.shuffle.partitions``
 (set to ~2-3x total cores) and executor memory sizing; nothing in this
@@ -18,16 +18,22 @@ import os
 from pyspark.sql import SparkSession
 
 
+def spark_cpus() -> int:
+    """Cores for the local master: $SPARK_GRAFT_CPUS, else the cores this
+    process may run on (its CPU affinity, which `nproc` also reports)."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
+
+
 def get_spark(
     app_name: str = "clinical-data-platform-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = spark_cpus()
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
-        shuffle_partitions = int(cpus)
+        shuffle_partitions = cpus
     # The preloading daemon (below) is resolved by the WORKER python via
     # `python -m`; the driver may have imported this package through a
     # sys.path entry the child process never sees. Route the package

@@ -10,7 +10,15 @@ from clinical_data_platform_spark.clinical.pipeline import run_demo
 
 
 def test_run_demo_end_to_end(spark, tmp_path):
+    def persistent_ids():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    cached_before = persistent_ids()
     report = run_demo(spark, str(tmp_path), n_subjects=120, seed=42)
+    # every RDD run_demo caches is unpersisted before it returns. A set
+    # difference, not a size check: Spark's ContextCleaner may drop RDDs
+    # that earlier tests localCheckpointed while run_demo runs.
+    assert persistent_ids() - cached_before == set()
 
     # every stage ran
     assert list(report["stages"]) == [

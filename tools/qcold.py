@@ -9,7 +9,8 @@ the same warmup the bench does (one pass of event_type_counts), then is
 timed twice back-to-back. cold = run 1, warm = run 2, tail = cold - warm.
 
 Usage: python tools/qcold.py [--sf DIR] name [name ...]
-Prints one JSON line per query and a summary map.
+Prints one JSON line per query and a summary map. A query whose child
+times out or fails gets an {"name", "error"} line and the run goes on.
 """
 
 from __future__ import annotations
@@ -21,6 +22,7 @@ import subprocess
 import sys
 
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+TIMEOUT_S = 600
 
 _CHILD = r"""
 import json, os, sys, time
@@ -42,22 +44,25 @@ spark.stop()
 """
 
 
-def probe(name: str, sf: str) -> dict | None:
+def probe(name: str, sf: str) -> dict:
     code = _CHILD.format(here=HERE, sf=sf, name=name)
-    out = subprocess.run(
-        [sys.executable, "-c", code],
-        capture_output=True,
-        text=True,
-        timeout=600,
-        cwd=HERE,
-    )
+    try:
+        out = subprocess.run(
+            [sys.executable, "-c", code],
+            capture_output=True,
+            text=True,
+            timeout=TIMEOUT_S,
+            cwd=HERE,
+        )
+    except subprocess.TimeoutExpired:
+        return {"name": name, "error": f"timed out after {TIMEOUT_S} s"}
     for line in reversed(out.stdout.strip().splitlines()):
         try:
             return json.loads(line)
         except json.JSONDecodeError:
             continue
     print(out.stderr[-2000:], file=sys.stderr)
-    return None
+    return {"name": name, "error": "child failed"}
 
 
 def main() -> None:
@@ -68,11 +73,9 @@ def main() -> None:
     summary = {}
     for name in args.names:
         rec = probe(name, args.sf)
-        if rec is None:
-            print(json.dumps({"name": name, "error": "child failed"}), flush=True)
-            continue
         print(json.dumps(rec), flush=True)
-        summary[name] = rec
+        if "error" not in rec:
+            summary[name] = rec
     print(
         json.dumps(
             {
