@@ -8,16 +8,21 @@ driver's tail-capture buffer in round 3, leaving BENCH_r03 unparseable):
   holds only the slowest 10 — small enough to always survive a tail
   capture;
 - the FULL per-query timing map is written to BENCH_LOCAL.json in the
-  repo root ({"total_sec", "core_sec", "sf", "n_queries", "queries"}).
+  repo root ({"total_sec", "core_sec", "sf", "n_queries", "queries"}),
+  with each query's profile record beside it under "layers".
 
 BENCH_CORE is the frozen 50-query regression subset (the r2 driver
 snapshot's 35 + the slowest-15 of the round-3 suite): full-suite totals
 move +-15% with host load across 200+ queries, so round-over-round
 diffs compare the pinned core first ("core_sec"), full suite second.
 
-Each query is forced end-to-end with the noop sink (full evaluation of
-every output column, no driver collect cost). One JVM warmup pass on a
-small query precedes timing.
+Each query runs through observability.profile_query: forced end-to-end
+with the noop sink (full evaluation of every output column, no driver
+collect cost) under its own job group, so its record also carries the
+builder/job/stage/task split and executor, shuffle and spill totals. A
+query that raises is reported on stderr and in its "layers" record and
+left out of the timings. One JVM warmup pass on a small query precedes
+timing.
 
 HOST CALIBRATION (r7 verdict item 2 — the 97.6 -> 102.8 -> 118.5 s core
 drift needed a measurement, not a narrative): a fixed-work, data-free
@@ -40,7 +45,9 @@ next stall is classifiable (GC, page cache, CPU steal) instead of argued.
 from __future__ import annotations
 
 import json
+import math
 import os
+import re
 import shutil
 import subprocess
 import sys
@@ -48,6 +55,8 @@ import threading
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from clinical_data_platform_spark.observability import profile_query  # noqa: E402
 
 HEADLINE = [
     # relational core
@@ -470,8 +479,10 @@ def _jcmd() -> str | None:
 class _StallWatchdog(threading.Thread):
     """Captures JVM thread + GC state WHILE a query is stalled (r7
     verdict item 2: classify the ~60 s stalls instead of narrating
-    them). Daemon thread; polls the (query, t0) slot the timing loop
-    updates; one dump per query, bounded per run; never raises."""
+    them). Daemon thread; polls the (query, monotonic t0) slot that
+    run_suite updates — monotonic, because a wall-clock step on a VM
+    host reads as a stall; one dump per query, bounded per run; never
+    raises."""
 
     def __init__(self, dump_dir: str) -> None:
         super().__init__(daemon=True)
@@ -487,7 +498,7 @@ class _StallWatchdog(threading.Thread):
             if slot is None:
                 continue
             name, t0 = slot
-            elapsed = time.time() - t0
+            elapsed = time.monotonic() - t0
             if (
                 elapsed < _STALL_THRESH_SEC
                 or name in self.dumped
@@ -532,6 +543,39 @@ class _StallWatchdog(threading.Thread):
         print(f"[stall-watchdog] {name} at {elapsed:.1f}s -> {path}", file=sys.stderr)
 
 
+def base_sf(src: str) -> float:
+    """Scale factor named by a data dir like `.../sf0.1`; 0.1 when the name
+    carries none."""
+    m = re.search(r"sf(\d+(?:\.\d+)?)", os.path.basename(src.rstrip("/")))
+    return float(m.group(1)) if m else 0.1
+
+
+def run_suite(spark, qs, names, sf_dir: str, repeat: int = 1, watchdog=None):
+    """``repeat`` whole-suite passes over ``names``, each query profiled once
+    per pass. Returns (records, passes): per query the record of its
+    fastest pass (an error record if it never ran), and per pass the
+    {name: wall_s} map of the queries that ran. A stall watchdog, if
+    given, is told each query's name and start time."""
+    records: dict[str, dict] = {}
+    passes: list[dict[str, float]] = []
+    for _ in range(repeat):
+        passes.append({})
+        for name in names:
+            if watchdog is not None:
+                watchdog.slot = (name, time.monotonic())
+            rec = profile_query(spark, name, lambda: qs[name](spark, sf_dir))
+            if watchdog is not None:
+                watchdog.slot = None
+            if "error" in rec:
+                print(f"FAIL {name}: {rec['error']}", file=sys.stderr)
+            else:
+                passes[-1][name] = rec["wall_s"]
+            best = records.setdefault(name, rec)
+            if rec.get("wall_s", math.inf) < best.get("wall_s", math.inf):
+                records[name] = rec
+    return records, passes
+
+
 def _calibrate(spark, sf_dir: str) -> dict[str, float]:
     """Fixed-work host-speed probes, min-of-3 each. The JVM probe is
     pure codegen arithmetic over spark.range (no IO, no shuffle beyond
@@ -541,38 +585,38 @@ def _calibrate(spark, sf_dir: str) -> dict[str, float]:
     warmup probe precedes each timed triple — the probes' own codegen/JIT
     warmup otherwise inflates the PRE sample ~2x relative to POST
     (measured r8), which would masquerade as within-run host drift."""
-    jvm_times, scan_times = [], []
-    spark.range(2_000_000_000).selectExpr(
-        "sum((id * 2654435761) % 1000000007) AS s"
-    ).collect()
-    for _ in range(3):
-        t0 = time.time()
+    lineitem = os.path.join(sf_dir, "lineitem.parquet")
+    return {
         # Knuth-hash product folded mod 1e9+7 per term so the 2e9-term
         # sum stays inside int64 under ANSI arithmetic
-        spark.range(2_000_000_000).selectExpr(
-            "sum((id * 2654435761) % 1000000007) AS s"
-        ).collect()
-        jvm_times.append(time.time() - t0)
-    spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).selectExpr(
-        "count(*) AS c", "sum(l_extendedprice) AS s", "sum(l_quantity) AS q"
-    ).collect()
-    for _ in range(3):
-        t0 = time.time()
-        spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).selectExpr(
-            "count(*) AS c",
-            "sum(l_extendedprice) AS s",
-            "sum(l_quantity) AS q",
-        ).collect()
-        scan_times.append(time.time() - t0)
-    return {
-        "jvm_sec": round(min(jvm_times), 3),
-        "scan_sec": round(min(scan_times), 3),
+        "jvm_sec": min_time(
+            lambda: spark.range(2_000_000_000)
+            .selectExpr("sum((id * 2654435761) % 1000000007) AS s")
+            .collect()
+        ),
+        "scan_sec": min_time(
+            lambda: spark.read.parquet(lineitem)
+            .selectExpr("count(*) AS c", "sum(l_extendedprice) AS s", "sum(l_quantity) AS q")
+            .collect()
+        ),
     }
+
+
+def min_time(probe, n: int = 3) -> float:
+    """One untimed warmup call of ``probe``, then the minimum seconds of
+    ``n`` timed calls."""
+    probe()
+    times = []
+    for _ in range(n):
+        t0 = time.perf_counter()
+        probe()
+        times.append(time.perf_counter() - t0)
+    return round(min(times), 3)
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
+    sf = base_sf(sf_dir)
 
     from clinical_data_platform_spark.session import get_spark
 
@@ -580,17 +624,10 @@ def main() -> None:
 
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
-    # keep stderr progress bars out of the driver's tail capture
-    try:
-        spark.conf.set("spark.ui.showConsoleProgress", "false")
-    except Exception:
-        pass
     qs = E.queries()
 
     # warmup: JVM/codegen/parquet-footer caches
-    qs["event_type_counts"](spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
+    profile_query(spark, "warmup", lambda: qs["event_type_counts"](spark, sf_dir))
 
     calib_pre = _calibrate(spark, sf_dir)
     here = os.path.dirname(os.path.abspath(__file__))
@@ -603,27 +640,9 @@ def main() -> None:
     # rarely in both, so round-over-round diffs stop needing the ±15%
     # variance caveat. The driver (env unset) keeps the single-pass contract.
     repeat = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPEAT", "1")))
-    passes: list[dict[str, float]] = []
-    try:
-        for _ in range(repeat):
-            t: dict[str, float] = {}
-            for name in HEADLINE:
-                t0 = time.time()
-                watchdog.slot = (name, t0)
-                try:
-                    qs[name](spark, sf_dir).write.format("noop").mode(
-                        "overwrite"
-                    ).save()
-                finally:
-                    # always clear, even when a query raises — a stale slot
-                    # would let the daemon attribute a later stall dump to
-                    # the dead query's name/t0 (r8 ADVICE)
-                    watchdog.slot = None
-                t[name] = round(time.time() - t0, 3)
-            passes.append(t)
-    finally:
-        watchdog.stop_flag = True
-    timings = {n: min(p[n] for p in passes) for n in HEADLINE}
+    records, passes = run_suite(spark, qs, HEADLINE, sf_dir, repeat, watchdog)
+    watchdog.stop_flag = True
+    timings = {n: r["wall_s"] for n, r in records.items() if "error" not in r}
 
     calib_post = _calibrate(spark, sf_dir)
     calib = {
@@ -648,6 +667,7 @@ def main() -> None:
         "n_queries": len(timings),
         "calib": calib,
         "queries": timings,
+        "layers": records,
     }
     if repeat > 1:
         full["protocol"] = f"min of {repeat} back-to-back passes, one warm JVM"

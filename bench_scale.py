@@ -13,7 +13,10 @@ the per-job floor, so core-count scaling is measurable again.
 Contract (same as bench.py):
 - data source from $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
   master local[$SPARK_GRAFT_CPUS] via clinical_data_platform_spark.session;
-- every query forced end-to-end with the noop sink;
+- every query runs through bench.run_suite (observability.profile_query,
+  noop sink, min of $SPARK_GRAFT_BENCH_REPEAT whole-lane passes); each
+  query's profile record is printed as one JSON line as the lane ends,
+  and a query that raises is left out of the timings;
 - the LAST stdout line is ONE COMPACT JSON object {"metric", "value",
   "unit", "sf", "n_queries", "queries", "cpus", "factor", "rep_sec"}.
 
@@ -30,13 +33,15 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import shutil
 import sys
 import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from bench import base_sf, run_suite  # noqa: E402
+from clinical_data_platform_spark.observability import profile_query  # noqa: E402
 
 # The corpus-heavy families: every query here does per-row tokenize /
 # hash / pair-expansion work that grows with the corpus, so at 10x data
@@ -74,13 +79,6 @@ SCALE_LANE = [
 ]
 
 
-def base_sf(src: str) -> float:
-    """Scale factor named by a data dir like `.../sf0.1`; 0.1 when the name
-    carries none."""
-    m = re.search(r"sf(\d+(?:\.\d+)?)", os.path.basename(src.rstrip("/")))
-    return float(m.group(1)) if m else 0.1
-
-
 def main() -> None:
     src = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     factor = int(os.environ.get("SPARK_GRAFT_SCALE_FACTOR", "10"))
@@ -92,10 +90,6 @@ def main() -> None:
 
     spark = get_spark("bench-scale")
     spark.sparkContext.setLogLevel("ERROR")
-    try:
-        spark.conf.set("spark.ui.showConsoleProgress", "false")
-    except Exception:
-        pass
     qs = E.queries()
 
     out = tempfile.mkdtemp(prefix="cdp_scale_lane_")
@@ -104,24 +98,12 @@ def main() -> None:
     rep_sec = round(time.time() - t0, 1)
 
     # warmup: JVM/codegen/parquet-footer caches (same as bench.py)
-    qs["event_type_counts"](spark, out).write.format("noop").mode(
-        "overwrite"
-    ).save()
-
+    profile_query(spark, "warmup", lambda: qs["event_type_counts"](spark, out))
     repeat = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPEAT", "1")))
-    passes: list[dict[str, float]] = []
-    for _ in range(repeat):
-        t: dict[str, float] = {}
-        for name in SCALE_LANE:
-            spark.sparkContext.setJobDescription(f"scale-lane: {name}")
-            t1 = time.time()
-            qs[name](spark, out).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            t[name] = round(time.time() - t1, 3)
-        passes.append(t)
-    spark.sparkContext.setJobDescription(None)
-    timings = {n: min(p[n] for p in passes) for n in SCALE_LANE}
+    records, _ = run_suite(spark, qs, SCALE_LANE, out, repeat)
+    for rec in records.values():
+        print(json.dumps(rec), flush=True)
+    timings = {n: r["wall_s"] for n, r in records.items() if "error" not in r}
     total = round(sum(timings.values()), 3)
 
     shutil.rmtree(out, ignore_errors=True)

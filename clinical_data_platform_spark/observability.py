@@ -1,23 +1,26 @@
-"""Observability: per-query execution metrics, a Prometheus-style latency
+"""Observability: a per-query profiler, a Prometheus-style latency
 histogram, and a streaming progress listener.
 
 Parity targets in the reference: api/telemetry.py:27-31 (REQUEST_DURATION
 histogram, 14 buckets 5ms..10s), observability/freshness_sli.json (SLI
 artifact shape — the freshness SLI itself lives in the validation layer),
 and the Prometheus middleware counters. Here the instrumented unit is a
-QUERY rather than an HTTP request: metrics come from the executed plan's
-own SQLMetrics (rows/bytes/files at every scan, shuffle bytes at every
-exchange), so the numbers are what Spark actually did, not wrapper-side
-guesses.
+QUERY rather than an HTTP request: ``profile_query`` runs it under its own
+job group and reads what Spark did from its status store (jobs, stages,
+tasks, executor time, input/shuffle/spill bytes), so the numbers cover
+every job the query ran, including the eager ones its builder ran before
+the final plan, not wrapper-side guesses.
 """
 
 from __future__ import annotations
 
-import json
 import time
+import uuid
 from dataclasses import dataclass, field
+from typing import Callable
 
-from pyspark.sql import DataFrame
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame, SparkSession
 
 # the reference's REQUEST_DURATION bucket ladder (api/telemetry.py:27-31)
 LATENCY_BUCKETS_S = [
@@ -25,62 +28,101 @@ LATENCY_BUCKETS_S = [
     0.75, 1.0, 2.5, 5.0, 7.5, 10.0,
 ]
 
-
-@dataclass
-class QueryMetrics:
-    name: str
-    wall_s: float
-    output_rows: int
-    scan_rows: int
-    scan_bytes: int
-    shuffle_bytes: int
-
-    def to_json(self) -> str:
-        return json.dumps(self.__dict__)
-
-
-def _sum_metric(plan, keys: tuple[str, ...], leaf_only: bool = False) -> int:
-    """Walk the executed SparkPlan (through AQE wrappers: an
-    AdaptiveSparkPlanExec holds its final plan behind executedPlan(), and
-    each *QueryStageExec holds its stage behind plan()) and sum the named
-    internal SQLMetrics. ``leaf_only`` restricts to scan nodes so e.g.
-    'rows read from files' is not conflated with every operator's output."""
-    name = plan.getClass().getSimpleName()
-    if name == "AdaptiveSparkPlanExec":
-        return _sum_metric(plan.executedPlan(), keys, leaf_only)
-    if name.endswith("QueryStageExec"):
-        return _sum_metric(plan.plan(), keys, leaf_only)
-    total = 0
-    if not leaf_only or name == "FileSourceScanExec":
-        it = plan.metrics().iterator()
-        while it.hasNext():
-            kv = it.next()
-            if kv._1() in keys:
-                total += kv._2().value()
-    ch = plan.children().iterator()
-    while ch.hasNext():
-        total += _sum_metric(ch.next(), keys, leaf_only)
-    return total
+# status-store StageData getter -> record field (BENCHMARK.json per_layer name)
+_STAGE_FIELDS = {
+    "numTasks": "sched.tasks",
+    "numFailedTasks": "sched.failed_tasks",
+    "executorRunTime": "exec.run_s",
+    "executorCpuTime": "exec.cpu_s",
+    "jvmGcTime": "exec.gc_s",
+    "inputBytes": "io.input_bytes",
+    "shuffleReadBytes": "shuffle.read_bytes",
+    "shuffleWriteBytes": "shuffle.write_bytes",
+    "diskBytesSpilled": "spill.disk_bytes",
+    "memoryBytesSpilled": "spill.mem_bytes",
+}
+# run and GC time are milliseconds, CPU time nanoseconds
+_TO_SECONDS = {"exec.run_s": 1e-3, "exec.gc_s": 1e-3, "exec.cpu_s": 1e-9}
+# the local properties setJobGroup sets; saved and restored around a profile
+_GROUP_PROPS = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
 
 
-def run_with_metrics(df: DataFrame, name: str = "query") -> QueryMetrics:
-    """Execute the DataFrame's OWN QueryExecution (an RDD count on the
-    executed plan — JVM-side, nothing shipped to the driver) and read the
-    SQLMetrics the run left behind. A df.write(...) would not work here:
-    writes plan a fresh QueryExecution, so the metrics would stay zero on
-    the DataFrame being instrumented."""
-    plan = df._jdf.queryExecution().executedPlan()
-    t0 = time.time()
-    plan.execute().count()
-    wall = time.time() - t0
-    return QueryMetrics(
-        name=name,
-        wall_s=round(wall, 4),
-        output_rows=_sum_metric(plan, ("numOutputRows",)),
-        scan_rows=_sum_metric(plan, ("numOutputRows",), leaf_only=True),
-        scan_bytes=_sum_metric(plan, ("filesSize",)),
-        shuffle_bytes=_sum_metric(plan, ("shuffleBytesWritten",)),
-    )
+def _group_jobs(sc, group: str) -> list[int]:
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _group_layers(sc, group: str) -> dict:
+    """Jobs, stages and executor totals over every stage that ran in
+    ``group``'s jobs; skipped stages never ran and are left out."""
+    tracker, store = sc.statusTracker(), sc._jsc.sc().statusStore()
+    jobs = _group_jobs(sc, group)
+    stage_ids = set()
+    for jid in jobs:
+        info = tracker.getJobInfo(jid)
+        if info is not None:
+            stage_ids.update(info.stageIds)
+    out = {"sched.jobs": len(jobs), "sched.stages": 0}
+    out.update(dict.fromkeys(_STAGE_FIELDS.values(), 0))
+    for sid in stage_ids:
+        try:
+            stage = store.lastStageAttempt(sid)
+        except Py4JJavaError:  # a stage never attempted has no attempt to read
+            continue
+        if stage.status().toString() == "SKIPPED":
+            continue
+        out["sched.stages"] += 1
+        for getter, key in _STAGE_FIELDS.items():
+            out[key] += getattr(stage, getter)()
+    for key, scale in _TO_SECONDS.items():
+        out[key] = round(out[key] * scale, 3)
+    return out
+
+
+def profile_query(
+    spark: SparkSession, name: str, build: Callable[[], DataFrame], repeat: int = 1
+) -> dict:
+    """Run ``build()`` and force its DataFrame with the noop sink (every
+    output column evaluated, nothing shipped to the driver), ``repeat``
+    times, each run under its own job group. Returns one JSON-able record:
+
+    - ``runs``: each run's wall seconds; ``wall_s``: their minimum;
+    - the fastest run's layers, named as BENCHMARK.json's ``per_layer``:
+      ``plans.builder_s`` and ``plans.builder_jobs`` (the time and jobs
+      spent inside ``build()`` — eager checkpoints and collects that a walk
+      of the final plan never sees); ``sched.jobs``, ``sched.stages`` and
+      ``sched.tasks`` over the whole run; executor run, CPU and GC seconds
+      and input, shuffle and spill bytes.
+
+    A build or write that raises yields ``{"name", "runs", "error"}``. The
+    caller's job group is restored either way, so the next call runs."""
+    sc = spark.sparkContext
+    saved = {k: sc.getLocalProperty(k) for k in _GROUP_PROPS}
+    rec: dict = {"name": name, "runs": []}
+    best = None
+    try:
+        for _ in range(repeat):
+            group = f"profile-{uuid.uuid4().hex}-{name}"
+            sc.setJobGroup(group, name)
+            t0 = time.perf_counter()
+            df = build()
+            builder_s = time.perf_counter() - t0
+            builder_jobs = len(_group_jobs(sc, group))  # off the clock
+            t1 = time.perf_counter()
+            df.write.format("noop").mode("overwrite").save()
+            wall = round(builder_s + time.perf_counter() - t1, 3)
+            rec["runs"].append(wall)
+            if best is None or wall < best[0]:
+                best = (wall, round(builder_s, 3), builder_jobs, group)
+    except Exception as e:  # noqa: BLE001 - a failure is per query
+        rec["error"] = f"{type(e).__name__}: {e}"[:2000]
+        return rec
+    finally:
+        for k, v in saved.items():
+            sc.setLocalProperty(k, v)
+    rec["wall_s"], rec["plans.builder_s"], rec["plans.builder_jobs"], group = best
+    rec.update(_group_layers(sc, group))
+    return rec
 
 
 @dataclass

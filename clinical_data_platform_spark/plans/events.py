@@ -3174,7 +3174,18 @@ def absorbing_markov_visits(spark: SparkSession, sf_dir: str) -> DataFrame:
     # identical trajectory pinned by the unchanged chained-CTE oracle.
     from ..functions.driverexact import jfloor_long, jround
 
-    crows = [(r["cur"], r["nxt"], r["n"]) for r in c.collect()]
+    # The collect is bounded at event_markov_stationary's _MKV_MAX_CELLS:
+    # a data-sized event vocabulary is refused instead of shipped.
+    crows = [
+        (r["cur"], r["nxt"], r["n"])
+        for r in c.limit(_MKV_MAX_CELLS + 1).collect()
+    ]
+    if len(crows) > _MKV_MAX_CELLS:
+        raise ValueError(
+            f"absorbing_markov_visits: the transition table has more than "
+            f"{_MKV_MAX_CELLS} cells; the driver-side doublings are sized "
+            "for an enum-like event vocabulary."
+        )
     tot: dict = {}
     for cur, _, n in crows:
         tot[cur] = tot.get(cur, 0) + n

@@ -1,5 +1,5 @@
 """Host-derived defaults and per-item failure handling of the bench tools:
-the local master's core count, the scale lane's base-SF parse, and
+the local master's core count, the bench scripts' base-SF parse, and
 qcold's per-query timeout."""
 
 from __future__ import annotations
@@ -43,12 +43,14 @@ def test_get_spark_defaults_to_host_cores(monkeypatch):
     assert got["spark.sql.shuffle.partitions"] == str(cores)
 
 
-def test_bench_scale_base_sf_parse():
+def test_bench_base_sf_parse():
+    import bench
     import bench_scale
 
-    assert bench_scale.base_sf("/data/sf0.1") == 0.1
-    assert bench_scale.base_sf("/data/sf10/") == 10.0
-    assert bench_scale.base_sf("/data/corpus_x") == 0.1
+    assert bench_scale.base_sf is bench.base_sf  # one parser for both
+    assert bench.base_sf("/data/sf0.1") == 0.1
+    assert bench.base_sf("/data/sf10/") == 10.0
+    assert bench.base_sf("/data/corpus_x") == 0.1
 
 
 def test_qcold_timeout_is_a_per_query_error(monkeypatch, capsys):

@@ -129,3 +129,13 @@ def test_absorbing_visits_structure(spark):
         # the chain starts at s: >= 1 visit to itself, and the truncated
         # series can only undercount
         assert vs[s] >= 1.0
+
+
+def test_absorbing_visits_refuses_oversized_transition_table(spark, monkeypatch):
+    import pytest
+
+    from clinical_data_platform_spark.plans import events
+
+    monkeypatch.setattr(events, "_MKV_MAX_CELLS", 1)
+    with pytest.raises(ValueError, match="more than 1 cells"):
+        events.absorbing_markov_visits(spark, SF)

@@ -2,8 +2,10 @@
 
 The reference's executor IS DuckDB, so this is the literal
 "matches-or-beats the reference's single-node throughput" measurement
-(BASELINE.md): run each driver query on Spark (noop sink) and its oracle
-SQL on DuckDB (materialized fetch) at the same scale factor.
+(BASELINE.md): run each driver query on Spark (observability.profile_query,
+noop sink) and its oracle SQL on DuckDB (materialized fetch) at the same
+scale factor. A Spark query that raises is reported on stderr and left out
+of the serial table.
 
 Two measurements, both reported:
 
@@ -41,6 +43,8 @@ import duckdb
 
 sys.path.insert(0, ".")
 
+from bench import _calibrate, min_time  # noqa: E402
+
 
 def _calibrate_duck(sf_dir: str) -> dict[str, float]:
     """DuckDB twin of bench.py's _calibrate: a fixed-work CPU probe
@@ -57,22 +61,12 @@ def _calibrate_duck(sf_dir: str) -> dict[str, float]:
         "SELECT count(*), sum(l_extendedprice), sum(l_quantity) "
         f"FROM read_parquet('{os.path.join(sf_dir, 'lineitem.parquet')}')"
     )
-    cpu_times, scan_times = [], []
-    con.execute(cpu_sql).fetchall()
-    for _ in range(3):
-        t0 = time.time()
-        con.execute(cpu_sql).fetchall()
-        cpu_times.append(time.time() - t0)
-    con.execute(scan_sql).fetchall()
-    for _ in range(3):
-        t0 = time.time()
-        con.execute(scan_sql).fetchall()
-        scan_times.append(time.time() - t0)
-    con.close()
-    return {
-        "cpu_sec": round(min(cpu_times), 3),
-        "scan_sec": round(min(scan_times), 3),
+    duck = {
+        "cpu_sec": min_time(lambda: con.execute(cpu_sql).fetchall()),
+        "scan_sec": min_time(lambda: con.execute(scan_sql).fetchall()),
     }
+    con.close()
+    return duck
 
 
 def main() -> None:
@@ -81,25 +75,33 @@ def main() -> None:
 
     import __spark_entry__ as E
     from clinical_data_platform_spark import catalog
+    from clinical_data_platform_spark.observability import profile_query
     from clinical_data_platform_spark.session import get_spark
 
     spark = get_spark("bench-compare")
     spark.sparkContext.setLogLevel("ERROR")
-    con = duckdb.connect()
-    for t in catalog.TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+
+    def connect() -> duckdb.DuckDBPyConnection:
+        c = duckdb.connect()
+        for t in catalog.TABLES:
+            c.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
+        return c
+
+    con = connect()
 
     qs, oracles = E.queries(), E.oracle_sql()
     names = [n for n in oracles if not n.startswith("stream_")]
     # streaming runtime isn't comparable to a SQL fetch -> excluded
 
-    # warmup both engines
-    qs["event_type_counts"](spark, sf_dir).write.format("noop").mode("overwrite").save()
-    con.execute(oracles["event_type_counts"]).fetchall()
+    def run_spark(name: str) -> dict:
+        rec = profile_query(spark, name, lambda: qs[name](spark, sf_dir))
+        if "error" in rec:
+            print(f"FAIL {name}: {rec['error']}", file=sys.stderr, flush=True)
+        return rec
 
-    from bench import _calibrate
+    # warmup both engines
+    run_spark("event_type_counts")
+    con.execute(oracles["event_type_counts"]).fetchall()
 
     calib_pre_spark = _calibrate(spark, sf_dir)
     calib_pre_duck = _calibrate_duck(sf_dir)
@@ -108,22 +110,17 @@ def main() -> None:
     rows = []
     for name in names:
         print(f"serial {name}", file=sys.stderr, flush=True)
-        t0 = time.time()
-        qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        t_spark = time.time() - t0
+        rec = run_spark(name)
         t0 = time.time()
         con.execute(oracles[name]).fetchall()
         t_duck = time.time() - t0
-        rows.append((name, round(t_spark, 3), round(t_duck, 3)))
+        if "error" not in rec:
+            rows.append((name, rec["wall_s"], round(t_duck, 3)))
 
     # --- batched suite (cached scans + concurrent submission) ---------------
     catalog.enable_scan_cache(True)
     for t in catalog.TABLES:  # materialize caches once, off the clock
         catalog.table(spark, sf_dir, t).count()
-
-    def run_spark(name: str) -> None:
-        print(f"batch-spark {name}", file=sys.stderr, flush=True)
-        qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
 
     # One INDEPENDENT connection per worker thread: cursors of a shared
     # connection contend on its lock/memory budget, and the 8-cursor
@@ -136,13 +133,7 @@ def main() -> None:
 
     def _duck() -> duckdb.DuckDBPyConnection:
         if not hasattr(_tls, "con"):
-            c = duckdb.connect()
-            for t in catalog.TABLES:
-                c.execute(
-                    f"CREATE VIEW {t} AS SELECT * FROM "
-                    f"read_parquet('{sf_dir}/{t}.parquet')"
-                )
-            _tls.con = c
+            _tls.con = connect()
         return _tls.con
 
     def run_duck(name: str) -> None:

@@ -6,11 +6,13 @@ queries is 2-4x the warm time (token_spectral 10.9 s cold vs 3.0 s warm
 in r9). This tool measures that axis honestly: each named query runs in
 its OWN fresh JVM (so no codegen/JIT state leaks between queries), with
 the same warmup the bench does (one pass of event_type_counts), then is
-timed twice back-to-back. cold = run 1, warm = run 2, tail = cold - warm.
+profiled twice back-to-back by observability.profile_query. cold = run 1,
+warm = run 2, tail = cold - warm.
 
 Usage: python tools/qcold.py [--sf DIR] name [name ...]
-Prints one JSON line per query and a summary map. A query whose child
-times out or fails gets an {"name", "error"} line and the run goes on.
+Prints one JSON line per query (the profile record plus cold/warm/tail)
+and a summary map. A query whose child raises, times out or fails gets a
+line with "error" and the run goes on.
 """
 
 from __future__ import annotations
@@ -25,21 +27,20 @@ HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 TIMEOUT_S = 600
 
 _CHILD = r"""
-import json, os, sys, time
+import json, sys
 sys.path.insert(0, {here!r})
+from clinical_data_platform_spark.observability import profile_query
 from clinical_data_platform_spark.session import get_spark
 import __spark_entry__ as E
 spark = get_spark("qcold")
 spark.sparkContext.setLogLevel("ERROR")
 qs = E.queries()
-qs["event_type_counts"](spark, {sf!r}).write.format("noop").mode("overwrite").save()
-times = []
-for _ in range(2):
-    t0 = time.time()
-    qs[{name!r}](spark, {sf!r}).write.format("noop").mode("overwrite").save()
-    times.append(round(time.time() - t0, 3))
-print(json.dumps({{"name": {name!r}, "cold": times[0], "warm": times[1],
-                   "tail": round(times[0] - times[1], 3)}}), flush=True)
+profile_query(spark, "warmup", lambda: qs["event_type_counts"](spark, {sf!r}))
+rec = profile_query(spark, {name!r}, lambda: qs[{name!r}](spark, {sf!r}), repeat=2)
+if "error" not in rec:
+    cold, warm = rec["runs"]
+    rec.update(cold=cold, warm=warm, tail=round(cold - warm, 3))
+print(json.dumps(rec), flush=True)
 spark.stop()
 """
 
@@ -75,16 +76,8 @@ def main() -> None:
         rec = probe(name, args.sf)
         print(json.dumps(rec), flush=True)
         if "error" not in rec:
-            summary[name] = rec
-    print(
-        json.dumps(
-            {
-                n: {"cold": r["cold"], "warm": r["warm"], "tail": r["tail"]}
-                for n, r in summary.items()
-            }
-        ),
-        flush=True,
-    )
+            summary[name] = {k: rec[k] for k in ("cold", "warm", "tail")}
+    print(json.dumps(summary), flush=True)
 
 
 if __name__ == "__main__":

@@ -1,13 +1,16 @@
-"""Per-query optimization probe (r9): isolated timing + job counts.
+"""Per-query optimization probe (r9): isolated timing + layer records.
 
 Usage: python tools/qprobe.py [--sf DIR] [--n N] name [name ...]
 
-For each named registered query: runs it N times (noop sink, warm JVM,
-one warmup pass of event_type_counts first), records per-run wall
-seconds, min, and the number of Spark jobs the query submits (via a
-per-query job group) — the job count is the direct measure of the
-driver/scheduling floor the optimization guide's §7.3 talks about.
-Prints one JSON line per query and a compact summary map at the end.
+For each named registered query: runs it N times through
+observability.profile_query (noop sink, warm JVM, one warmup pass of
+event_type_counts first) and prints its record as one JSON line: per-run
+wall seconds, the minimum, builder seconds and jobs, and the
+jobs/stages/tasks and executor, shuffle and spill totals of the fastest
+run — the job count is the direct measure of the driver/scheduling floor
+the optimization guide's §7.3 talks about. An unknown or failing query
+gets its error record and the run goes on. Ends with a compact
+{name: {"min", "jobs"}} summary map.
 """
 
 from __future__ import annotations
@@ -16,7 +19,6 @@ import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -28,6 +30,7 @@ def main() -> None:
     ap.add_argument("--n", type=int, default=2)
     args = ap.parse_args()
 
+    from clinical_data_platform_spark.observability import profile_query
     from clinical_data_platform_spark.session import get_spark
 
     import __spark_entry__ as E
@@ -36,48 +39,15 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     qs = E.queries()
     # warm the JVM / codegen / parquet footer caches
-    qs["event_type_counts"](spark, args.sf).write.format("noop").mode(
-        "overwrite"
-    ).save()
+    profile_query(spark, "warmup", lambda: qs["event_type_counts"](spark, args.sf))
 
-    sc = spark.sparkContext
-    st = sc.statusTracker()
     out: dict[str, dict] = {}
     for name in args.names:
-        if name not in qs:
-            print(json.dumps({"name": name, "error": "unknown"}), flush=True)
-            continue
-        runs = []
-        njobs = nstages = 0
-        for i in range(args.n):
-            group = f"qprobe-{name}-{i}"
-            sc.setJobGroup(group, name)
-            t0 = time.time()
-            qs[name](spark, args.sf).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            dt = time.time() - t0
-            sc.setJobGroup(None, None)
-            runs.append(round(dt, 3))
-            jids = st.getJobIdsForGroup(group)
-            njobs = len(jids)
-            nstages = sum(
-                len(st.getJobInfo(j).stageIds)
-                for j in jids
-                if st.getJobInfo(j) is not None
-            )
-        rec = {
-            "runs": runs,
-            "min": min(runs),
-            "jobs": njobs,
-            "stages": nstages,
-        }
-        out[name] = rec
-        print(json.dumps({"name": name, **rec}), flush=True)
-    print(
-        json.dumps({n: {"min": r["min"], "jobs": r["jobs"]} for n, r in out.items()}),
-        flush=True,
-    )
+        rec = profile_query(spark, name, lambda: qs[name](spark, args.sf), args.n)
+        print(json.dumps(rec), flush=True)
+        if "error" not in rec:
+            out[name] = {"min": rec["wall_s"], "jobs": rec["sched.jobs"]}
+    print(json.dumps(out), flush=True)
     spark.stop()
 
 

@@ -7,7 +7,10 @@ driver's sf0.1 tables 10x with structure-preserving remaps, runs BENCH_CORE
 plus the dedup/ER family at both scales, and writes SCALE.md with per-query
 sf0.1 -> sf1 wall-clock ratios. Linear operators land near the data ratio
 (10x) or below (per-query job overhead amortizes; output-bounded queries
-stay flat); anything clearly super-linear is a plan bug to note.
+stay flat); anything clearly super-linear is a plan bug to note. Every
+query is timed by bench.run_suite (observability.profile_query, noop
+sink); one that raises at either scale is reported on stderr and left out
+of the table.
 
 Replication rules (why the 10x corpus is a FAIR scale-up, not 10 copies of
 the same problem):
@@ -40,6 +43,8 @@ import tempfile
 import time
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."))
+
+from bench import BENCH_CORE, run_suite  # noqa: E402
 
 # the queries whose at-scale behavior round 4 asked to validate empirically
 DEDUP_ER_FAMILY = [
@@ -218,17 +223,9 @@ NOTES = {
 }
 
 
-def run_suite(spark, qs, names, sf_dir: str, extra=None) -> dict[str, float]:
-    timings = {}
-    for name in names:
-        t0 = time.time()
-        qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        timings[name] = round(time.time() - t0, 3)
-    for name, fn in (extra or {}).items():
-        t0 = time.time()
-        fn(sf_dir).write.format("noop").mode("overwrite").save()
-        timings[name] = round(time.time() - t0, 3)
-    return timings
+def walls(spark, qs, names, sf_dir: str) -> dict[str, float]:
+    """One profiled pass over ``names``: {name: wall_s} of those that ran."""
+    return run_suite(spark, qs, names, sf_dir)[1][0]
 
 
 def main() -> None:
@@ -236,7 +233,7 @@ def main() -> None:
     factor = int(sys.argv[2]) if len(sys.argv) > 2 else 10
 
     import __spark_entry__ as E
-    from bench import BENCH_CORE
+    from clinical_data_platform_spark.observability import profile_query
     from clinical_data_platform_spark.session import get_spark
 
     spark = get_spark("sf1-scale")
@@ -250,15 +247,17 @@ def main() -> None:
     t_rep = round(time.time() - t0, 1)
 
     # warmup both dirs (JVM, codegen, parquet footers)
-    qs["event_type_counts"](spark, src).write.format("noop").mode("overwrite").save()
-    qs["event_type_counts"](spark, out).write.format("noop").mode("overwrite").save()
+    for d in (src, out):
+        profile_query(spark, "warmup", lambda: qs["event_type_counts"](spark, d))
 
     # semantic_near_dup_k_scaled is a REGISTERED query since r6: it derives
     # k from the corpus count (k = clamp(ceil(n/32), 8, 4096)), so driving
     # it on the replicated corpus exercises the k-grows-with-n contract
     # with no hand-rolled twin (r5 verdict item 2).
-    t_small = run_suite(spark, qs, names, src)
-    t_big = run_suite(spark, qs, names, out)
+    t_small = walls(spark, qs, names, src)
+    t_big = walls(spark, qs, names, out)
+    # a query that raised at either scale has no ratio
+    names = [n for n in names if n in t_small and n in t_big]
 
     # r8 verdict item 4: the committed table used to carry SINGLE-PASS
     # ratios even for rows the diff notes had already re-probed down
@@ -278,10 +277,8 @@ def main() -> None:
     single_pass = {}
     for n in flagged:
         single_pass[n] = (t_small[n], t_big[n])
-        s2 = run_suite(spark, qs, [n], src)[n]
-        b2 = run_suite(spark, qs, [n], out)[n]
-        t_small[n] = min(t_small[n], s2)
-        t_big[n] = min(t_big[n], b2)
+        t_small[n] = min([t_small[n], *walls(spark, qs, [n], src).values()])
+        t_big[n] = min([t_big[n], *walls(spark, qs, [n], out).values()])
 
     rows = []
     for n in names:
