@@ -93,9 +93,9 @@ def main() -> None:
     qs = E.queries()
 
     out = tempfile.mkdtemp(prefix="cdp_scale_lane_")
-    t0 = time.time()
+    t0 = time.perf_counter()
     replicate(spark, src, out, factor)
-    rep_sec = round(time.time() - t0, 1)
+    rep_sec = round(time.perf_counter() - t0, 1)
 
     # warmup: JVM/codegen/parquet-footer caches (same as bench.py)
     profile_query(spark, "warmup", lambda: qs["event_type_counts"](spark, out))

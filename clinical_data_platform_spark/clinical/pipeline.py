@@ -77,11 +77,11 @@ def run_demo(
 ) -> dict:
     """Run the full pipeline; returns the JSON-able run report
     (shape of validation/validator.py:63-77 + stage timings)."""
-    t0 = time.time()
+    t0 = time.perf_counter()
     report: dict = {"stages": {}, "validation": {}, "analytics": {}, "ml": {}}
 
     def stage(name):
-        report["stages"][name] = round(time.time() - t0, 2)
+        report["stages"][name] = round(time.perf_counter() - t0, 2)
 
     # 1. generate + write raw CSVs (the landing zone)
     raw_dir = os.path.join(workdir, "raw")
@@ -108,9 +108,13 @@ def run_demo(
 
     # 4. standardize -> silver
     silver_dir = os.path.join(workdir, "silver")
-    standardize_bronze_to_sdtm(spark, f"{bronze}/study_id=STUDY001", silver_dir)
+    schemas = standardize_bronze_to_sdtm(
+        spark, f"{bronze}/study_id=STUDY001", silver_dir
+    )
     silver = {
-        d: DOMAIN_MAPPERS[d](spark.read.parquet(f"{silver_dir}/{d}.parquet"))
+        d: DOMAIN_MAPPERS[d](
+            spark.read.schema(schemas[d]).parquet(f"{silver_dir}/{d}.parquet")
+        )
         for d in DOMAIN_RULES
     }
     # ADaM deliverable lives beside the silver SDTM domains
@@ -194,7 +198,7 @@ def run_demo(
         json.dump(payload, f, indent=2)
     stage("dashboard")
 
-    report["wall_s"] = round(time.time() - t0, 2)
+    report["wall_s"] = round(time.perf_counter() - t0, 2)
     with open(os.path.join(workdir, "run_report.json"), "w") as f:
         json.dump(report, f, indent=2)
     return report

@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+from pyspark.sql.types import StructType
 
 # domain -> ordered {source_col: target_col}; values define the output
 # projection (extra input columns are dropped, mapper semantics)
@@ -63,11 +64,15 @@ DOMAIN_MAPPERS = {"DM": map_dm, "AE": map_ae, "LB": map_lb, "VS": map_vs, "EX": 
 
 def standardize_bronze_to_sdtm(
     spark, bronze_root: str, out_dir: str, domains: tuple[str, ...] = ("DM", "AE", "LB", "VS", "EX")
-) -> None:
+) -> dict[str, StructType]:
     """Bronze (study_id=/domain= partitioned parquet) -> silver parquet per
     domain (cdisc_sdtm_mapping.py:97-113). Partition pruning on domain= is
-    automatic from the path filter."""
+    automatic from the path filter. Returns ``{domain: schema written}`` so
+    a reader of ``<out_dir>/<domain>.parquet`` needs no schema inference."""
+    schemas = {}
     for domain in domains:
         src = f"{bronze_root}/domain={domain}"
-        df = spark.read.parquet(src)
-        DOMAIN_MAPPERS[domain](df).write.mode("overwrite").parquet(f"{out_dir}/{domain}.parquet")
+        df = DOMAIN_MAPPERS[domain](spark.read.parquet(src))
+        df.write.mode("overwrite").parquet(f"{out_dir}/{domain}.parquet")
+        schemas[domain] = df.schema
+    return schemas

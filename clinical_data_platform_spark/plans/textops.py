@@ -1903,7 +1903,8 @@ _RM3_EXP_TERMS = 5  # expansion terms kept
     oracle=f"""
     WITH t AS (
       SELECT doc_id,
-             string_split_regex(lower(trim(text)), '\\s+') AS ws
+             CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
+                  ELSE string_split_regex(lower(trim(text)), '\\s+') END AS ws
       FROM documents
     ),
     dl AS (SELECT doc_id, len(ws) AS doclen FROM t),
@@ -1994,7 +1995,8 @@ def rm3_query_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: ONE tokenize pass builds ONE posting table (doc, tok, tf)
     that feeds the base scorer, the feedback model, the df guard, the
     rescoring pass AND the doc-length stats (doclen = sum(tf) left-
-    joined from the doc-id list so empty docs keep their 0); both
+    joined from the doc-id list so empty docs keep their 0 and NULL-text
+    docs get a NULL doclen: counted in n_docs, not in avgdl); both
     scorers are the bm25_topk_docs shape (term-filter before the tf
     lookup, scalars broadcast); trunc6 lands on every score and on the
     RM1 weights BEFORE their ranks so all tie-breaks are engine-stable."""
@@ -2015,16 +2017,23 @@ def rm3_query_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
     # from n_docs/avgdl; the left join from the full doc-id list (a
     # column-pruned scan, no tokenize) + coalesce(.., 0) keeps them —
     # the semantics risk the r9 session correctly declined is closed,
-    # not waved away.
+    # not waved away. NULL text has no postings either, but its doclen
+    # is NULL (tokens(NULL) is NULL, as len(NULL) is in the oracle): it
+    # counts in n_docs and avg() skips it, so it must not become 0.
     dl = (
         T(spark, sf_dir, "documents")
-        .select("doc_id")
+        .select("doc_id", F.col("text").isNull().alias("null_text"))
         .join(
             post.groupBy("doc_id").agg(F.sum("tf").alias("dsum")),
             "doc_id",
             "left",
         )
-        .select("doc_id", F.coalesce("dsum", F.lit(0)).alias("doclen"))
+        .select(
+            "doc_id",
+            F.when(~F.col("null_text"), F.coalesce("dsum", F.lit(0))).alias(
+                "doclen"
+            ),
+        )
         .localCheckpoint()
     )
     stats = dl.agg(

@@ -111,9 +111,9 @@ def main() -> None:
     for name in names:
         print(f"serial {name}", file=sys.stderr, flush=True)
         rec = run_spark(name)
-        t0 = time.time()
+        t0 = time.perf_counter()
         con.execute(oracles[name]).fetchall()
-        t_duck = time.time() - t0
+        t_duck = time.perf_counter() - t0
         if "error" not in rec:
             rows.append((name, rec["wall_s"], round(t_duck, 3)))
 
@@ -140,14 +140,14 @@ def main() -> None:
         print(f"batch-duck {name}", file=sys.stderr, flush=True)
         _duck().execute(oracles[name]).fetchall()
 
-    t0 = time.time()
+    t0 = time.perf_counter()
     with ThreadPoolExecutor(max_workers=threads) as pool:
         list(pool.map(run_spark, names))
-    batched_spark = round(time.time() - t0, 2)
-    t0 = time.time()
+    batched_spark = round(time.perf_counter() - t0, 2)
+    t0 = time.perf_counter()
     with ThreadPoolExecutor(max_workers=threads) as pool:
         list(pool.map(run_duck, names))
-    batched_duck = round(time.time() - t0, 2)
+    batched_duck = round(time.perf_counter() - t0, 2)
     catalog.enable_scan_cache(False)
 
     calib_post_spark = _calibrate(spark, sf_dir)

@@ -242,9 +242,9 @@ def main() -> None:
     names = list(dict.fromkeys(BENCH_CORE + DEDUP_ER_FAMILY))
 
     out = tempfile.mkdtemp(prefix="cdp_sf1_")
-    t0 = time.time()
+    t0 = time.perf_counter()
     replicate(spark, src, out, factor)
-    t_rep = round(time.time() - t0, 1)
+    t_rep = round(time.perf_counter() - t0, 1)
 
     # warmup both dirs (JVM, codegen, parquet footers)
     for d in (src, out):
