@@ -43,6 +43,8 @@ import re
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from ..functions import driverexact
+
 
 END_OF_WORD = "</w>"
 
@@ -87,17 +89,11 @@ def _pair_counts(words: DataFrame) -> DataFrame:
     )
 
 
-#: Size gate for the r9 driver-side merge loop: below this many DISTINCT
-#: words the (word, count) table is collected and the merge loop runs in
-#: plain Python (``reference_bpe`` — the exact implementation the tests
-#: already pin the distributed trainer against), replacing ~2 Spark jobs
-#: PER MERGE with one collect. 64k words x ~16 bytes is driver-trivial,
-#: and below this size the per-merge pure-Python pass is well under the
-#: per-job scheduling floor the distributed loop pays. Above the gate
-#: (any real corpus: 1e6-1e8 distinct words at 100 TB) the distributed
-#: loop below runs unchanged — same candidate math, same
-#: (count DESC, pair ASC) tie-break, pinned equal by
-#: tests/test_bpe.py::test_driver_and_distributed_paths_agree.
+#: Driver-replay bound for the merge loop, in DISTINCT words: 64k words x
+#: ~16 bytes is driver-trivial, and below it a pure-Python merge pass
+#: (``reference_bpe``) is well under the per-job floor the distributed
+#: loop pays twice per merge. A real corpus (1e6-1e8 distinct words) runs
+#: distributed. The gate itself is functions/driverexact.driver_rows.
 DRIVER_MAX_WORDS = 65536
 
 
@@ -106,25 +102,19 @@ def train_bpe_merges(
     text_col: str = "text",
     num_merges: int = 20,
     checkpoint_every: int = 10,
-    driver_max_words: int = DRIVER_MAX_WORDS,
 ) -> list[dict]:
     """Learn ``num_merges`` BPE merges; returns them in rank order as
     [{rank, left, right, merged, pair_count}, ...]. Bounded driver
     state: one 1-row collect per merge (distributed path) or one
-    word-table collect (size-gated driver path, see DRIVER_MAX_WORDS)."""
-    wc = word_counts(docs, text_col).cache()
-    try:
-        if wc.count() <= driver_max_words:
-            rows = [(r["word"], r["count"]) for r in wc.collect()]
-            return reference_bpe(rows, num_merges=num_merges)
-        # wc stays cached until the loop's first materialization has
-        # derived `words` from it (unpersisting earlier would re-run the
-        # corpus-scale pass); it is dropped in the outer finally.
-        words = wc.select(_to_symbols(F.col("word")).alias("syms"), "count").cache()
-        merges = _merge_loop(words, num_merges, checkpoint_every)
-    finally:
-        wc.unpersist()
-    return merges
+    word-table fetch (size-gated driver path, see DRIVER_MAX_WORDS)."""
+    wc, tbl = driverexact.driver_rows(
+        word_counts(docs, text_col), DRIVER_MAX_WORDS
+    )
+    if tbl is not None:
+        rows = [(r["word"], r["count"]) for r in tbl.to_pylist()]
+        return reference_bpe(rows, num_merges=num_merges)
+    words = wc.select(_to_symbols(F.col("word")).alias("syms"), "count").cache()
+    return _merge_loop(words, num_merges, checkpoint_every)
 
 
 def _merge_loop(

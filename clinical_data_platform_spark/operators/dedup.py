@@ -21,6 +21,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from ..functions import driverexact
 from ..functions.text import fingerprint, tokens, word_shingles
 
 
@@ -481,19 +482,15 @@ def containment_pairs(
     )
 
 
-# Pair count below which connected_components solves the graph on the
-# driver (union-find over the collected pair list) instead of running the
-# distributed propagation loop. 1M pairs is ~16 MB of long pairs — the
-# same order as Spark's own autoBroadcastJoinThreshold, i.e. "small
-# enough to ship to one node" by the engine's own standard. The candidate
-# PAIR set is the heavily-pruned output of banded/df-capped generation,
-# not the corpus: at 100 TB a pair graph can exceed any driver, and then
-# the distributed loop below takes over unchanged.
+# connected_components' driver-replay bound: 1M long pairs is ~16 MB, the
+# order of Spark's own autoBroadcastJoinThreshold. The candidate pair set
+# is the pruned output of banded/df-capped generation, not the corpus.
+# The gate itself is functions/driverexact.driver_rows.
 _CC_LOCAL_MAX_PAIRS = 1_000_000
 
 
-def _cc_local(pairs: DataFrame) -> DataFrame:
-    """Driver-side union-find for a bounded candidate-pair graph.
+def _cc_local(pairs: DataFrame, tbl) -> DataFrame:
+    """Driver-side union-find over ``tbl``, the fetched rows of ``pairs``.
 
     Classic weighted quick-union with path halving over the Arrow-fetched
     pair list, then each class is relabeled to its MIN member id — the
@@ -502,7 +499,6 @@ def _cc_local(pairs: DataFrame) -> DataFrame:
     _CC_LOCAL_MAX_PAIRS gate admits, and zero Spark jobs beyond the
     fetch, which is what retires the per-round scheduling floor the r8
     stall forensics measured on this operator."""
-    pdf = pairs.toPandas()
     parent: dict = {}
 
     def find(x):
@@ -513,7 +509,8 @@ def _cc_local(pairs: DataFrame) -> DataFrame:
             parent[x], x = root, parent[x]
         return root
 
-    for a, b in zip(pdf["src"].tolist(), pdf["dst"].tolist()):
+    src, dst = (tbl.column(c).to_pandas().tolist() for c in ("src", "dst"))
+    for a, b in zip(src, dst):
         if a not in parent:
             parent[a] = a
         if b not in parent:
@@ -540,14 +537,13 @@ def connected_components(
     a_col: str = "id_a",
     b_col: str = "id_b",
     max_iter: int = 20,
-    local_max_pairs: int = _CC_LOCAL_MAX_PAIRS,
 ) -> DataFrame:
     """Dedup clusters: connected components over candidate pairs.
 
     Size-adaptive (r8 verdict item 3 — the per-round driver/scheduling
     cost of the propagation loop was THE measured stall class of the
-    suite): the pair list is materialized once and counted; below
-    ``local_max_pairs`` the graph is solved with driver-side union-find
+    suite): below the ``_CC_LOCAL_MAX_PAIRS`` gate (``driver_rows``)
+    the graph is solved with driver-side union-find
     (``_cc_local``) — the same small-side escape hatch Spark's AQE applies
     to joins — otherwise iterative min-label propagation runs
     distributed: each round one join + one groupBy over a self-looped
@@ -563,14 +559,12 @@ def connected_components(
     """
     from ..catalog import iter_checkpoint
 
-    # materialize the candidate pairs once: the count gate and the union
-    # branches below would otherwise each re-execute the (expensive)
-    # pair-generation subtree
-    pairs = pairs.select(
-        F.col(a_col).alias("src"), F.col(b_col).alias("dst")
-    ).localCheckpoint(eager=True)
-    if pairs.count() <= local_max_pairs:
-        return _cc_local(pairs)
+    pairs, tbl = driverexact.driver_rows(
+        pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst")),
+        _CC_LOCAL_MAX_PAIRS,
+    )
+    if tbl is not None:
+        return _cc_local(pairs, tbl)
 
     sym = pairs.unionByName(
         pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))

@@ -33,6 +33,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..catalog import fan_out_scan, table as T
+from ..functions import driverexact
 from ..functions.text import tokens, word_shingles
 from .corpusqc import _gram_sql, _grams, _trunc6, _TRUNC6
 from .registry import query
@@ -466,11 +467,9 @@ def dunning_g2_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SPEC_ITERS = 4
 
-# Driver-replay gate (r10): the PPMI edge table is collected and the four
-# power iterations replayed on the driver only when the graph is small
-# enough to ship to one node — same 500k-edge standard as
-# graphops._GRAPH_LOCAL_MAX_EDGES (pagerank_frame). Above it the
-# distributed mat-vec loop below runs unchanged.
+# token_spectral_centrality's driver-replay bound: the same 500k-edge
+# standard as graphops._GRAPH_LOCAL_MAX_EDGES (pagerank_frame). The gate
+# itself is functions/driverexact.driver_rows.
 _SPEC_LOCAL_MAX_EDGES = 500_000
 
 
@@ -677,17 +676,12 @@ def token_spectral_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("s")
         )
         .select("s.*")
-        .localCheckpoint()
     )
-    # r10: size-gated driver replay of the four power iterations (the
-    # pagerank_frame pattern): at any realistic vocabulary the PPMI
-    # graph is token-vocab-bounded, and the distributed loop was ~20
-    # jobs of join+agg+window over a KB-scale state — pure scheduling
-    # and per-iteration codegen floor. Above the gate the distributed
-    # loop runs unchanged; both paths pinned equal by
-    # tests/test_wave50_ops.py (paths-agree).
-    if e.count() <= _SPEC_LOCAL_MAX_EDGES:
-        erows = [(r["w1"], r["w2"], r["ppmi"]) for r in e.collect()]
+    # The PPMI graph is vocab-bounded: below the gate the four power
+    # iterations replay on the driver.
+    e, tbl = driverexact.driver_rows(e, _SPEC_LOCAL_MAX_EDGES)
+    if tbl is not None:
+        erows = [(r["w1"], r["w2"], r["ppmi"]) for r in tbl.to_pylist()]
         return spark.createDataFrame(
             _spec_power_driver(erows), "token string, loading double"
         )

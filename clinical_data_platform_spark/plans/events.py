@@ -8,6 +8,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..catalog import table as T
+from ..functions import driverexact
 from ..functions.scalars import NORMAL_SF_SQL
 from ..operators.sessionize import session_summary
 from .registry import query
@@ -2484,11 +2485,9 @@ def seasonal_naive_mase(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _MKV_SQUARINGS = 6  # P^(2^6) = P^64 — far past mixing for a 5-state chain
 
-# Driver-replay gate (r10, r9 verdict item 5): collect the transition
-# matrix only when it is actually enum-like-small. 4096 cells = a 64-type
-# vocabulary's worst case, ~100 KB collected — the same "small enough to
-# ship to one node" standard as the bpe/pagerank/CC gates. Above it, the
-# distributed squaring loop below runs unchanged.
+# event_markov_stationary's driver-replay bound, in transition cells:
+# 4096 = a 64-type vocabulary's worst case, ~100 KB fetched. The gate
+# itself is functions/driverexact.driver_rows.
 _MKV_MAX_CELLS = 4096
 
 
@@ -2708,25 +2707,13 @@ def event_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("cur", "nxt")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
     )
-    # r9 optimization: everything past the transition-count aggregate is
-    # |types|^2-bounded for an enum-like event vocabulary, so the counts
-    # are collected ONCE (they also provide the empirical marginals) and
-    # the squarings replayed on the driver with the bit-exact scalar
-    # replicas in functions/driverexact.py (the absorbing_markov_visits
-    # pattern; was 49 jobs / 2.7 s of coalesce(1)+localCheckpoint rounds).
-    # r10 (r9 verdict item 5): the collect is now SIZE-GATED like every
-    # other data-derived driver replay in the family (bpe 65536 words,
-    # pagerank 500k edges, CC 1M pairs): the transition table is counted
-    # first and collected only under _MKV_MAX_CELLS; above the gate the
-    # pre-r9 distributed squaring loop runs unchanged. Both paths are
-    # pinned equal by tests/test_wave64_ops.py::
-    # test_markov_driver_and_distributed_paths_agree.
-    c = c.localCheckpoint()  # counted, then consumed by one of two paths
-    if c.count() <= _MKV_MAX_CELLS:
-        crows = [(r["cur"], r["nxt"], r["n"]) for r in c.collect()]
-        rows = _mkv_driver_replay(crows)
+    # Past the aggregate everything is |types|^2-bounded: below the gate
+    # the counts (also the empirical marginals) replay on the driver.
+    c, tbl = driverexact.driver_rows(c, _MKV_MAX_CELLS)
+    if tbl is not None:
+        crows = [(r["cur"], r["nxt"], r["n"]) for r in tbl.to_pylist()]
         return spark.createDataFrame(
-            rows,
+            _mkv_driver_replay(crows),
             "state string, stationary_prob double, convergence_gap double, "
             "empirical_freq double",
         )

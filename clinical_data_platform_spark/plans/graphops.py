@@ -30,17 +30,15 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..catalog import iter_checkpoint
 from ..catalog import table as T
+from ..functions import driverexact
 from .registry import query
 
 _PR_ITERS = 5
 _PR_D = 0.85  # damping
 
-# Edge count below which the iterative graph loops replay on the driver
-# (same small-side escape hatch as operators/dedup.connected_components):
-# 500k (src, dst, w, wout) rows is a few MB — well under the engine's own
-# broadcast standard — and at that size the distributed loop is pure
-# per-round scheduling floor. Above it the distributed loops run
-# unchanged.
+# pagerank_frame's driver-replay bound: 500k (src, dst, w) rows is a few
+# MB, under the engine's own broadcast standard. The gate itself is
+# functions/driverexact.driver_rows.
 _GRAPH_LOCAL_MAX_EDGES = 500_000
 
 _EDGES_SQL = """
@@ -141,7 +139,6 @@ def pagerank_frame(
     iters: int = _PR_ITERS,
     damping: float = _PR_D,
     teleport: float = 1.0 - _PR_D,
-    local_max_edges: int = _GRAPH_LOCAL_MAX_EDGES,
 ) -> DataFrame:
     """Weighted PageRank over an (src, dst, w) edge frame -> (node, r).
 
@@ -155,21 +152,14 @@ def pagerank_frame(
     the cross-engine oracle; ``teleport`` is a separate literal (not
     computed as 1 - damping) because ``1.0 - 0.85`` and the literal
     ``0.15`` differ by an ulp and the oracle writes the literal."""
-    # r9 optimization: the edge table is materialized ONCE (the old
-    # shape re-executed the upstream edge build for the node set, the
-    # semi-join, and each count). Below the edge gate the whole
-    # iteration is replayed on the driver — the node set, the dst
-    # semi-join filter, and the integer out-weight sums are exact, and
-    # the per-round rank expressions are bit-exact scalar replicas
-    # (functions/driverexact.py); the contribution sum's float order was
-    # never pinned by the distributed plan either — the per-round
-    # round(x, 12) re-sync is what both engines already rely on. Above
-    # the gate (web-scale graphs) the distributed loop runs unchanged.
-    ecp = edges.localCheckpoint(eager=True)
-    if ecp.count() <= local_max_edges:
-        from ..functions.driverexact import jround
-
-        rows0 = [(r["src"], r["dst"], r["w"]) for r in ecp.collect()]
+    # Below the gate the iteration replays on the driver: the node set,
+    # dst semi-join and integer out-weights are exact, and the rank
+    # updates use the driverexact replicas. The contribution sum's float
+    # order was never pinned by the distributed plan either; the
+    # per-round round(x, 12) re-sync is what both engines rely on.
+    ecp, tbl = driverexact.driver_rows(edges, _GRAPH_LOCAL_MAX_EDGES)
+    if tbl is not None:
+        rows0 = [(r["src"], r["dst"], r["w"]) for r in tbl.to_pylist()]
         nlist = sorted({src for src, _, _ in rows0})
         nset = set(nlist)
         erows = [(s, d, w) for s, d, w in rows0 if d in nset]
@@ -185,7 +175,7 @@ def pagerank_frame(
                     w
                 ) / float(wout[src])
             r = {
-                nd: jround(
+                nd: driverexact.jround(
                     teleport / cnt + damping * contrib.get(nd, 0.0), 12
                 )
                 for nd in nlist

@@ -41,3 +41,39 @@ def duck(silver):
         con.register(f"pdf_{name.lower()}", pdf)
         con.execute(f"CREATE VIEW {name.lower()} AS SELECT * FROM pdf_{name.lower()}")
     return con
+
+
+@pytest.fixture(scope="session")
+def corpus_duck():
+    """DuckDB over the sf0.001 corpus tables (the registered oracles'
+    side)."""
+    from __spark_entry__ import SF_SMOKE_DIR
+
+    from clinical_data_platform_spark.catalog import TABLES
+
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_SMOKE_DIR}/{t}.parquet')"
+        )
+    return con
+
+
+@pytest.fixture
+def force_distributed(monkeypatch):
+    """Send every size-gated driver replay down its distributed branch:
+    ``driverexact.driver_rows`` sees bound 0, so only an empty input
+    still replays on the driver. Returns the branch each gate took, in
+    call order ("driver" or "distributed")."""
+    from clinical_data_platform_spark.functions import driverexact
+
+    real = driverexact.driver_rows
+    branches: list[str] = []
+
+    def forced(df, max_rows):
+        cp, tbl = real(df, 0)
+        branches.append("driver" if tbl is not None else "distributed")
+        return cp, tbl
+
+    monkeypatch.setattr(driverexact, "driver_rows", forced)
+    return branches

@@ -27,7 +27,7 @@ def _reference_from_df(docs_df, num_merges):
     return reference_bpe(list(zip(wc.word, wc["count"])), num_merges=num_merges)
 
 
-def test_trainer_matches_reference_small(spark):
+def test_trainer_matches_reference_small(spark, force_distributed):
     docs = _corpus(
         spark,
         [
@@ -37,25 +37,25 @@ def test_trainer_matches_reference_small(spark):
             "new newer newest knew",
         ],
     )
-    # driver_max_words=0 forces the DISTRIBUTED merge loop (the size
-    # gate would otherwise route a vocabulary this small to the driver
-    # path, which IS reference_bpe — making this equality vacuous)
-    got = train_bpe_merges(docs, num_merges=20, driver_max_words=0)
+    # forced DISTRIBUTED merge loop (the size gate would otherwise route
+    # a vocabulary this small to the driver path, which IS reference_bpe
+    # — making this equality vacuous)
+    got = train_bpe_merges(docs, num_merges=20)
     want = _reference_from_df(docs, 20)
     assert got == want
     assert len(got) == 20 and [m["rank"] for m in got] == list(range(1, 21))
 
 
-def test_trainer_matches_reference_on_testdata(spark):
+def test_trainer_matches_reference_on_testdata(spark, force_distributed):
     from clinical_data_platform_spark.catalog import table as T
 
     docs = T(spark, "/root/testdata/sf0.001", "documents")
-    got = train_bpe_merges(docs, num_merges=8, driver_max_words=0)
+    got = train_bpe_merges(docs, num_merges=8)
     want = _reference_from_df(docs, 8)
     assert got == want
 
 
-def test_driver_and_distributed_paths_agree(spark):
+def test_driver_and_distributed_paths_agree(spark, request):
     """r9 size gate: the driver path (gate above vocab size) and the
     distributed loop (gate forced to 0) must produce the identical merge
     sequence on real fixture data — the same paths-agree pin the
@@ -64,17 +64,19 @@ def test_driver_and_distributed_paths_agree(spark):
 
     docs = T(spark, "/root/testdata/sf0.01", "documents")
     via_driver = train_bpe_merges(docs, num_merges=12)  # gate: driver path
-    via_cluster = train_bpe_merges(docs, num_merges=12, driver_max_words=0)
+    branches = request.getfixturevalue("force_distributed")
+    via_cluster = train_bpe_merges(docs, num_merges=12)
+    assert branches == ["distributed"]
     assert via_driver == via_cluster
 
 
-def test_greedy_left_to_right_overlap(spark):
+def test_greedy_left_to_right_overlap(spark, force_distributed):
     # merging ("a","a") inside "a a a </w>" must produce "aa a </w>",
     # not "a aa </w>" — non-overlapping left-to-right, like greedy BPE
     docs = _corpus(spark, ["aaa aaa"])
     # forced distributed: this test pins the regexp_replace path's
     # left-to-right non-overlapping behaviour specifically
-    got = train_bpe_merges(docs, num_merges=2, driver_max_words=0)
+    got = train_bpe_merges(docs, num_merges=2)
     want = _reference_from_df(docs, 2)
     assert got == want
     assert (got[0]["left"], got[0]["right"], got[0]["pair_count"]) == ("a", "a", 4)

@@ -157,7 +157,7 @@ def test_connected_components_shapes(spark):
     assert comp[20] == comp[21] == 20
 
 
-def test_connected_components_paths_agree(spark):
+def test_connected_components_paths_agree(spark, request):
     """connected_components is size-adaptive since r9: below the
     _CC_LOCAL_MAX_PAIRS gate it solves the pair graph with driver-side
     union-find, above it the distributed min-label loop runs. Both must
@@ -178,10 +178,11 @@ def test_connected_components_paths_agree(spark):
         (r.node, r.component)
         for r in connected_components(pairs).collect()
     }
+    branches = request.getfixturevalue("force_distributed")
     dist = {
-        (r.node, r.component)
-        for r in connected_components(pairs, local_max_pairs=0).collect()
+        (r.node, r.component) for r in connected_components(pairs).collect()
     }
+    assert branches == ["distributed"]
     assert local == dist and len(local) == 19
     assert {c for n, c in local if n >= 30} == {30}
 

@@ -4,25 +4,13 @@ the same at sf0.01."""
 
 from __future__ import annotations
 
-import duckdb
 import pytest
 
-from clinical_data_platform_spark.catalog import TABLES
 from clinical_data_platform_spark.plans import all_oracles, all_queries
 
 from .helpers import assert_frames_match
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-@pytest.fixture(scope="module")
-def corpus_duck():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
-    return con
 
 
 _QUERIES = sorted(all_queries())
@@ -110,3 +98,30 @@ def test_driver_window_spans_all_modules():
     from clinical_data_platform_spark.plans import QUERIES
 
     assert sorted(ordered) == sorted(QUERIES) and len(ordered) == len(QUERIES)
+
+
+def test_oracle_check_counts_and_fails_only_named_queries(
+    spark, monkeypatch, capsys
+):
+    """tools/oracle_check.py given names: a registered name is checked, an
+    unknown one is a FAIL line with exit code 1, and the summary counts
+    only those two."""
+    import importlib.util
+    import sys
+    from pathlib import Path
+
+    from clinical_data_platform_spark import session
+
+    path = Path(__file__).resolve().parents[1] / "tools" / "oracle_check.py"
+    spec = importlib.util.spec_from_file_location("oracle_check", path)
+    tool = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(tool)
+    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
+    monkeypatch.setattr(
+        sys, "argv", ["oracle_check.py", SF_DIR, "event_type_counts", "no_such_q"]
+    )
+    assert tool.main() == 1
+    out = capsys.readouterr().out
+    assert "ok    event_type_counts" in out
+    assert "FAIL  no_such_q: no such registered query" in out
+    assert "\n1/2 passed;" in out

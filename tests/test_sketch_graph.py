@@ -360,52 +360,3 @@ def test_hits_tracks_brute_force(spark):
     for nm in names:
         assert abs(got[nm][0] - round(h[idx[nm]], 6)) < 2e-6, nm
         assert abs(got[nm][1] - round(a[idx[nm]], 6)) < 2e-6, nm
-
-
-def test_pagerank_frame_driver_and_distributed_paths_agree(spark):
-    """r9 size gate: pagerank_frame's driver replay (gate above the edge
-    count) and the distributed loop (gate forced to 0) must produce the
-    identical rank table on real fixture data — the same paths-agree pin
-    the size-adaptive connected_components and BPE trainer carry."""
-    from clinical_data_platform_spark.plans.graphops import pagerank_frame
-
-    l = spark.read.parquet(f"{SF_DIR}/lineitem.parquet").select(
-        "l_orderkey", "l_suppkey"
-    )
-    o = spark.read.parquet(f"{SF_DIR}/orders.parquet").select(
-        "o_orderkey", "o_custkey"
-    )
-    su = spark.read.parquet(f"{SF_DIR}/supplier.parquet").select(
-        "s_suppkey", "s_nationkey"
-    )
-    c = spark.read.parquet(f"{SF_DIR}/customer.parquet").select(
-        "c_custkey", "c_nationkey"
-    )
-    n = spark.read.parquet(f"{SF_DIR}/nation.parquet").select(
-        "n_nationkey", "n_name"
-    )
-    edges = (
-        l.join(su, l.l_suppkey == su.s_suppkey)
-        .join(o, l.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(
-            n.withColumnRenamed("n_name", "src"),
-            F.col("s_nationkey") == F.col("n_nationkey"),
-        )
-        .drop("n_nationkey")
-        .join(
-            n.withColumnRenamed("n_name", "dst"),
-            F.col("c_nationkey") == F.col("n_nationkey"),
-        )
-        .groupBy("src", "dst")
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
-    via_driver = {
-        r["node"]: r["r"] for r in pagerank_frame(edges).collect()
-    }
-    via_cluster = {
-        r["node"]: r["r"]
-        for r in pagerank_frame(edges, local_max_edges=0).collect()
-    }
-    assert via_driver == via_cluster
-    assert len(via_driver) > 0

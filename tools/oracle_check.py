@@ -3,7 +3,9 @@
 Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` twin on
 DuckDB over the same sf dir, then compares row count, schema (pandas
 dtypes), and an order-insensitive value hash (columns sorted by name, rows
-sorted by all columns, values stringified). Exit code 1 on any mismatch.
+sorted by all columns, values stringified). Exit code 1 on any mismatch
+or on a named query that is not registered; the summary counts only the
+queries checked.
 
 Usage: python tools/oracle_check.py [sf_dir] [query ...]
 """
@@ -77,6 +79,9 @@ def main() -> int:
 
     qs, oracles = E.queries(), E.oracle_sql()
     failures, no_oracle = [], []
+    for name in sorted(only - qs.keys()):
+        print(f"FAIL  {name}: no such registered query")
+        failures.append(name)
     for name, fn in qs.items():
         if only and name not in only:
             continue
@@ -115,8 +120,9 @@ def main() -> int:
         else:
             print(f"ok    {name}: {len(sdf)} rows [{time.time()-t0:.1f}s]")
 
+    checked = len(only) if only else len(qs)
     print(
-        f"\n{len(qs) - len(failures)}/{len(qs)} passed; "
+        f"\n{checked - len(failures)}/{checked} passed; "
         f"{len(no_oracle)} rows-only ({', '.join(no_oracle) or '-'})"
     )
     if failures:
