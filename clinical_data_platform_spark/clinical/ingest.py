@@ -5,17 +5,21 @@ Parity with ingestion/ingest_csv.py:16-29,90,141-146:
   Spark's inferSchema then normalized so downstream code sees the same
   canonical types the pandas sniffing produced.
 - Bronze layout: Hive-partitioned ``study_id=… / domain=…``, snappy parquet
-  — Spark's partitionBy reproduces the exact key layout, and partition
-  pruning on study/domain is automatic at read time (SURVEY §4).
+  — each domain is written to its own key directory, so a read of the root
+  discovers both keys as partition columns and prunes on them (SURVEY §4).
 - Chunked reads (chunk_read_csv) are moot: Spark's CSV source is natively
   split and parallel.
 """
 
 from __future__ import annotations
 
+from functools import partial
+
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession
+
+from ..session import concurrently
 
 _CANONICAL = {
     T.ByteType: T.LongType,
@@ -72,18 +76,15 @@ def land_to_bronze(
     """Ingest one CSV per domain into the partitioned bronze layout.
 
     csv_paths: {domain: csv_path}. Writes
-    ``bronze_root/study_id=<sid>/domain=<D>/*.parquet`` (snappy).
+    ``bronze_root/study_id=<sid>/domain=<D>/*.parquet`` (snappy). The
+    domains land concurrently, each straight into its own partition
+    directory with a plain overwrite: no two writes share an output
+    directory, and re-landing one domain leaves the others in place.
     """
-    for domain, path in csv_paths.items():
-        df = read_csv_normalized(spark, path)
-        (
-            df.withColumn("study_id", F.lit(study_id))
-            .withColumn("domain", F.lit(domain))
-            .write.mode("overwrite")
-            # dynamic: replace only the partitions being written — static
-            # overwrite would wipe the other domains from bronze_root
-            .option("partitionOverwriteMode", "dynamic")
-            .option("compression", "snappy")
-            .partitionBy("study_id", "domain")
-            .parquet(bronze_root)
-        )
+
+    def land(domain: str, path: str) -> None:
+        read_csv_normalized(spark, path).write.mode("overwrite").option(
+            "compression", "snappy"
+        ).parquet(f"{bronze_root}/study_id={study_id}/domain={domain}")
+
+    concurrently(spark, [partial(land, d, p) for d, p in csv_paths.items()])

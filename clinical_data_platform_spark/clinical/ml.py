@@ -10,24 +10,26 @@ metrics areaUnderROC / areaUnderPR.
 Spark shape: VectorAssembler -> StandardScaler -> LogisticRegression in a
 pyspark.ml Pipeline; stratified split via sampleBy; evaluators from
 BinaryClassificationEvaluator. Batch scoring = model.transform + prob[1].
-5-fold CV fits its folds concurrently and refits no all-data model.
+5-fold CV fits its folds concurrently, beside the holdout fit, and refits
+no all-data model.
 """
 
 from __future__ import annotations
 
 import json
 import os
-from multiprocessing.pool import ThreadPool
+from functools import partial
 
 import numpy as np
 import pyspark.sql.functions as F
-from pyspark import inheritable_thread_target
 from pyspark.ml import Pipeline, PipelineModel
 from pyspark.ml.classification import LogisticRegression
 from pyspark.ml.evaluation import BinaryClassificationEvaluator
 from pyspark.ml.feature import StandardScaler, VectorAssembler
 from pyspark.ml.functions import vector_to_array
 from pyspark.sql import DataFrame, Window
+
+from ..session import concurrently
 
 FEATURES = ["AGE", "AE_COUNT", "SEVERE_AE_COUNT"]
 AUC_GATE, AP_GATE = 0.65, 0.60
@@ -99,10 +101,9 @@ def cross_validate(features_df: DataFrame, folds: int = 5, seed: int = 42) -> di
         return float(_evaluator("areaUnderROC").evaluate(held_out))
 
     try:
-        with ThreadPool(folds) as pool:
-            scores = pool.map(
-                inheritable_thread_target(data.sparkSession)(fold_auc), range(folds)
-            )
+        scores = concurrently(
+            data.sparkSession, [partial(fold_auc, i) for i in range(folds)]
+        )
     finally:
         data.unpersist()
     return {
@@ -264,16 +265,24 @@ def train_with_report(
 ) -> tuple[PipelineModel, dict, DataFrame]:
     """Full training run: fit on the stratified 70/30 split, evaluate,
     5-fold cross-validate, and assemble the gate verdict — the Spark
-    counterpart of ml/train.py:181-359. Returns (model, report,
+    counterpart of ml/train.py:181-359. The holdout fit and report run
+    concurrently with the CV folds. Returns (model, report,
     scored_test); does NOT raise on gate failure (the report carries the
     verdict, as the reference's MLflow tag does). scored_test is cached for
     its four readers (AUC, AP, confusion, curve_points): unpersist it after."""
     data = prepare(features_df)
     tr, te = stratified_split(data, 0.3, seed)
-    model = build_pipeline().fit(tr)
-    scored = model.transform(te).cache()
-    report = model_report(model, tr, scored)
-    report["cross_validation"] = cross_validate(features_df, folds, seed)
+
+    def holdout():
+        model = build_pipeline().fit(tr)
+        scored = model.transform(te).cache()
+        return model, scored, model_report(model, tr, scored)
+
+    (model, scored, report), cv = concurrently(
+        features_df.sparkSession,
+        [holdout, lambda: cross_validate(features_df, folds, seed)],
+    )
+    report["cross_validation"] = cv
     auc = report["validation_metrics"]["auc"]
     ap = report["validation_metrics"]["average_precision"]
     report["performance_gate"] = {

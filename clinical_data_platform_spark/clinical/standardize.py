@@ -12,9 +12,13 @@ prune-friendly at any scale.
 
 from __future__ import annotations
 
+from functools import partial
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.types import StructType
+
+from ..session import concurrently
 
 # domain -> ordered {source_col: target_col}; values define the output
 # projection (extra input columns are dropped, mapper semantics)
@@ -66,13 +70,15 @@ def standardize_bronze_to_sdtm(
     spark, bronze_root: str, out_dir: str, domains: tuple[str, ...] = ("DM", "AE", "LB", "VS", "EX")
 ) -> dict[str, StructType]:
     """Bronze (study_id=/domain= partitioned parquet) -> silver parquet per
-    domain (cdisc_sdtm_mapping.py:97-113). Partition pruning on domain= is
-    automatic from the path filter. Returns ``{domain: schema written}`` so
-    a reader of ``<out_dir>/<domain>.parquet`` needs no schema inference."""
-    schemas = {}
-    for domain in domains:
-        src = f"{bronze_root}/domain={domain}"
-        df = DOMAIN_MAPPERS[domain](spark.read.parquet(src))
+    domain (cdisc_sdtm_mapping.py:97-113), the domains written concurrently.
+    Partition pruning on domain= is automatic from the path filter. Returns
+    ``{domain: schema written}`` so a reader of ``<out_dir>/<domain>.parquet``
+    needs no schema inference."""
+
+    def standardize(domain: str) -> StructType:
+        df = DOMAIN_MAPPERS[domain](spark.read.parquet(f"{bronze_root}/domain={domain}"))
         df.write.mode("overwrite").parquet(f"{out_dir}/{domain}.parquet")
-        schemas[domain] = df.schema
-    return schemas
+        return df.schema
+
+    schemas = concurrently(spark, [partial(standardize, d) for d in domains])
+    return dict(zip(domains, schemas))

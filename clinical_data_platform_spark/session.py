@@ -9,13 +9,40 @@ oracle), Arrow enabled for the few pandas-UDF paths, snappy parquet.
 At 100 TB the only knobs that change are ``spark.sql.shuffle.partitions``
 (set to ~2-3x total cores) and executor memory sizing; nothing in this
 package hardcodes partition counts — operators use the session defaults.
+
+``concurrently`` is the package's one thread pool: it runs independent
+Spark work side by side under the caller's job group.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Callable, Sequence
+from multiprocessing.pool import ThreadPool
+from typing import TypeVar
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import SparkSession
+
+T = TypeVar("T")
+
+
+def concurrently(spark: SparkSession, thunks: Sequence[Callable[[], T]]) -> list[T]:
+    """Run each zero-argument thunk on its own thread; return their results
+    in input order. Spark schedules the jobs the threads submit side by
+    side, so independent writes and fits overlap instead of queueing.
+
+    Each thunk is wrapped in its own ``inheritable_thread_target`` call, so
+    every thread starts from its own clone of the caller's local properties
+    (job group included): per-group accounting sees every job, and threads
+    never share the Properties object Spark mutates per SQL execution.
+    Waits for every thunk to finish, then re-raises the first error
+    (``Pool.map`` semantics)."""
+    if not thunks:
+        return []
+    wrapped = [inheritable_thread_target(spark)(thunk) for thunk in thunks]
+    with ThreadPool(len(wrapped)) as pool:
+        return pool.map(lambda run: run(), wrapped)
 
 
 def spark_cpus() -> int:

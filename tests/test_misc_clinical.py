@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import json
+import os
 
 import numpy as np
 import pyspark.sql.functions as F
@@ -48,16 +49,39 @@ def test_mapper_null_on_error(spark):
 def test_ingest_roundtrip(spark, silver, tmp_path):
     csv_dir = tmp_path / "csv"
     csv_dir.mkdir()
-    dm_pdf = silver["DM"].toPandas()
-    dm_csv = csv_dir / "DM.csv"
-    dm_pdf.to_csv(dm_csv, index=False)
+    pdfs = {d: silver[d].toPandas() for d in ("DM", "AE")}
+    csvs = {d: str(csv_dir / f"{d}.csv") for d in pdfs}
+    for d, pdf in pdfs.items():
+        pdf.to_csv(csvs[d], index=False)
 
     bronze = str(tmp_path / "bronze")
-    land_to_bronze(spark, {"DM": str(dm_csv)}, bronze)
+    land_to_bronze(spark, csvs, bronze)
     back = spark.read.parquet(f"{bronze}/study_id=STUDY001/domain=DM")
-    assert back.count() == len(dm_pdf)
+    assert back.count() == len(pdfs["DM"])
 
-    dtypes = infer_dtypes(read_csv_normalized(spark, str(dm_csv)))
+    def partition_counts():
+        # reading the root discovers both keys as partition columns
+        rows = spark.read.parquet(bronze).groupBy("study_id", "domain").count().collect()
+        return {(r["study_id"], r["domain"]): r["count"] for r in rows}
+
+    assert partition_counts() == {("STUDY001", d): len(pdf) for d, pdf in pdfs.items()}
+
+    # re-landing one domain replaces that domain only
+    ae_dir = os.path.join(bronze, "study_id=STUDY001", "domain=AE")
+
+    def ae_files():
+        return {f: os.path.getmtime(os.path.join(ae_dir, f)) for f in os.listdir(ae_dir)}
+
+    ae_before = ae_files()
+    pdfs["DM"].head(10).to_csv(csvs["DM"], index=False)
+    land_to_bronze(spark, {"DM": csvs["DM"]}, bronze)
+    assert partition_counts() == {
+        ("STUDY001", "DM"): 10,
+        ("STUDY001", "AE"): len(pdfs["AE"]),
+    }
+    assert ae_files() == ae_before
+
+    dtypes = infer_dtypes(read_csv_normalized(spark, csvs["DM"]))
     assert dtypes["AGE"] == "float64" and dtypes["SUBJID"] == "string"
 
 

@@ -13,18 +13,37 @@ def test_run_demo_end_to_end(spark, tmp_path):
     def persistent_ids():
         return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def jobs(group):
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return set(tracker.getJobIdsForGroup(group))
+
     cached_before = persistent_ids()
-    report = run_demo(spark, str(tmp_path), n_subjects=120, seed=42)
+    ungrouped = jobs(None)
+    sc.setJobGroup("run-demo-group", "run_demo")
+    try:
+        report = run_demo(spark, str(tmp_path), n_subjects=120, seed=42)
+    finally:
+        sc._jsc.clearJobGroup()
     # every RDD run_demo caches is unpersisted before it returns. A set
     # difference, not a size check: Spark's ContextCleaner may drop RDDs
     # that earlier tests localCheckpointed while run_demo runs.
     assert persistent_ids() - cached_before == set()
+    # the stages run on worker threads; every job they start stays in the
+    # caller's job group, which per-group accounting (the benchmark's
+    # tracer) reads
+    assert jobs("run-demo-group")
+    assert jobs(None) - ungrouped == set()
 
-    # every stage ran
+    # every stage ran; the marks are running maxima of completion times
     assert list(report["stages"]) == [
         "generate", "validate", "bronze", "silver", "star", "marts",
         "analytics", "ml", "dashboard",
     ]
+    marks = list(report["stages"].values())
+    assert marks == sorted(marks) and marks[-1] <= report["wall_s"]
     # validation catches the injected SEX='X' row and nothing else on DM PKs
     dm = report["validation"]["DM"]
     assert dm["accepted_values__SEX"] == 1
