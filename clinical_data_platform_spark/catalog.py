@@ -25,7 +25,7 @@ import weakref
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-from .session import tune_session
+from .session import shuffle_partitions, tune_session
 
 TABLES = (
     "region",
@@ -166,7 +166,7 @@ def fan_out_scan(df: DataFrame) -> DataFrame:
     scan has thousands of splits and this is an identity no-op, so the
     extra exchange exists only in the degenerate small-scan case."""
     spark = df.sparkSession
-    parallelism = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    parallelism = shuffle_partitions(spark)
     if df.rdd.getNumPartitions() < parallelism:
         return df.repartition(parallelism)
     return df

@@ -295,20 +295,6 @@ def train_with_report(
     return model, report, scored
 
 
-def train(features_df: DataFrame, seed: int = 42) -> tuple[PipelineModel, float, float]:
-    """Fit and evaluate; returns (model, auc, ap). Raises if the reference's
-    performance gates fail (ml/train.py:334-342)."""
-    data = prepare(features_df)
-    tr, te = stratified_split(data, 0.3, seed)
-    model = build_pipeline().fit(tr)
-    scored = model.transform(te)
-    auc = _evaluator("areaUnderROC").evaluate(scored)
-    ap = _evaluator("areaUnderPR").evaluate(scored)
-    if auc < AUC_GATE or ap < AP_GATE:
-        raise RuntimeError(f"performance gates failed: auc={auc:.3f} ap={ap:.3f}")
-    return model, auc, ap
-
-
 def score(model: PipelineModel, features_df: DataFrame) -> DataFrame:
     """Batch scoring -> RISK column (predict_proba[:,1], ml/infer.py:15-26)."""
     scored = model.transform(prepare(features_df))

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 
 from ..functions import driverexact
 from ..functions.text import fingerprint, tokens, word_shingles
+from ..session import shuffle_partitions
 
 
 def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -50,7 +51,7 @@ def shingle_table(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> Data
     Also repartitions to the session's shuffle parallelism: a small file
     arrives as one partition, and shingling is CPU-bound, so fan out before
     the heavy expression rather than after."""
-    parallelism = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+    parallelism = shuffle_partitions(df.sparkSession)
     # repartition the RAW text, then tokenize: a projection does not move
     # across the exchange, so tokenizing before the repartition would run
     # the regex split serially on the single input partition
@@ -371,9 +372,7 @@ def ngram_jaccard_pairs_inverted(
         postings = postings.filter(F.size("docs") <= max_shingle_docs)
     # pair expansion is CPU-bound but byte-light: AQE's size-based coalesce
     # would squeeze it onto one task, so pin the fan-out explicitly
-    parallelism = int(
-        postings.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
+    parallelism = shuffle_partitions(postings.sparkSession)
     postings = postings.repartition(parallelism)
     pair_structs = F.flatten(
         F.transform(
@@ -434,9 +433,7 @@ def containment_pairs(
     postings = postings.filter(F.size("docs") >= 2)
     if max_shingle_docs is not None:
         postings = postings.filter(F.size("docs") <= max_shingle_docs)
-    parallelism = int(
-        postings.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
+    parallelism = shuffle_partitions(postings.sparkSession)
     postings = postings.repartition(parallelism)
     pair_structs = F.flatten(
         F.transform(
@@ -615,9 +612,7 @@ def _ppjoin_doc_table(
     three (collect_list + collect_set + count), and the shingle strings
     are stored once."""
     sh = shingle_table(df, id_col, text_col, n)
-    parallelism = int(
-        df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
+    parallelism = shuffle_partitions(df.sparkSession)
     # Explicit hash exchanges, not AQE-sized ones: the session runs AQE
     # with parallelismFirst=false (right for the floor-dominated suite),
     # but every stage here is CPU-dense per byte (sort+join on shingle,
@@ -668,14 +663,7 @@ def _ppjoin_candidates(
         # claim the join parallelism explicitly (CPU-dense self-join;
         # see _ppjoin_doc_table) — both join branches share this
         # exchange, so the self-join plans it once and adds none
-        .repartition(
-            int(
-                docs.sparkSession.conf.get(
-                    "spark.sql.shuffle.partitions", "32"
-                )
-            ),
-            "shingle",
-        )
+        .repartition(shuffle_partitions(docs.sparkSession), "shingle")
     )
     length_ok = (
         F.greatest(F.col("size_a"), F.col("size_b")) * F.lit(threshold)
@@ -703,13 +691,7 @@ def _ppjoin_candidates(
         # AQE's bytes-based coalescing collapses the distinct() output to
         # ONE partition and serializes verification (measured 14.8 s on
         # one core vs <1 s fanned out). Re-expand explicitly.
-        .repartition(
-            int(
-                docs.sparkSession.conf.get(
-                    "spark.sql.shuffle.partitions", "32"
-                )
-            )
-        )
+        .repartition(shuffle_partitions(docs.sparkSession))
     )
 
 
@@ -746,9 +728,7 @@ def ppjoin_jaccard_pairs(
     candidates are after theirs: AQE coalesces the bytes-small groupBy
     output to one partition, which would serialize the CPU-dense
     prefix-explode and verify map sides that read the checkpoint."""
-    parallelism = int(
-        df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
+    parallelism = shuffle_partitions(df.sparkSession)
     docs = (
         _ppjoin_doc_table(df, id_col, text_col, n)
         .repartition(parallelism)

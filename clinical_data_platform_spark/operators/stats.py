@@ -11,7 +11,7 @@ executors, only O(1) statistics do.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 
 from ..functions.scalars import normal_sf
 
@@ -96,12 +96,4 @@ def chi_square_test(df: DataFrame, row_col: str, col_col: str) -> DataFrame:
         dof.cast("long").alias("dof"),
         F.round(z, 6).alias("z_wh"),
         F.round(p, 6).alias("p_value"),
-    )
-
-
-def group_rate(df: DataFrame, group: str, predicate: Column) -> DataFrame:
-    """Per-group rate of a boolean predicate (AVG(CASE WHEN ...) shape)."""
-    return df.groupBy(group).agg(
-        F.round(F.avg(F.when(predicate, 1).otherwise(0)), 6).alias("rate"),
-        F.count(F.lit(1)).alias("n"),
     )

@@ -20,6 +20,7 @@ from ..operators.asof import (
 )
 from ..operators.multimodal import attach_payload, extract_meta, featurize_payload
 from ..operators.skew import salted_aggregate
+from ..session import shuffle_partitions
 from .registry import query
 
 # ---------------------------------------------------------------------------
@@ -1080,9 +1081,7 @@ def part_pair_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n = b.agg(F.countDistinct("l_orderkey").alias("n_orders"))
     s = b.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("supp"))
-    parallelism = int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
+    parallelism = shuffle_partitions(spark)
     # r9: the within-basket pair expansion is CPU-dense per byte and the
     # streamed side of a broadcast self-join — AQE's bytes-based coalesce
     # squeezed it onto 1-2 tasks. Pin the fan-out with an explicit hash

@@ -154,21 +154,6 @@ def _subvec(vec: list[float], m: int) -> list[float]:
     return vec[m * _SUB : (m + 1) * _SUB]
 
 
-def _sq_fold(sub_col, lit_vec: list[float]):
-    """Index-order left fold of squared diffs between an array column
-    slice and a literal subvector, all in DOUBLE — bit-matches list_sum."""
-    lit = F.array(*[F.lit(float(v)) for v in lit_vec])
-    return F.aggregate(
-        F.zip_with(
-            sub_col,
-            lit,
-            lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
 def _best_code(m: int, cents: list[list[float]]):
     """(qerr, code) struct-min over the K codes of subspace m: argmin with
     ties to the lowest code id, computed from one constant-folded literal

@@ -16,7 +16,6 @@ Parity rules enforced by convention here (see SURVEY.md §7.4):
 from __future__ import annotations
 
 from collections.abc import Callable
-from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -97,10 +96,3 @@ def all_queries() -> dict[str, QueryFn]:
 
 def all_oracles() -> dict[str, str]:
     return {n: ORACLES[n] for n in _ordered_names() if n in ORACLES}
-
-
-def describe() -> list[dict[str, Any]]:
-    return [
-        {"name": n, "has_oracle": n in ORACLES, "tags": TAGS.get(n, [])}
-        for n in QUERIES
-    ]

@@ -17,6 +17,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..catalog import table as T
+from ..session import shuffle_partitions
 from .registry import query
 
 def _revenue():
@@ -2063,9 +2064,7 @@ def item_item_cosine_recs(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = T(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     # part is DATA-SIZED (SFx200k rows): no hint, AQE decides per-SF
     p = T(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    parallelism = int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
+    parallelism = shuffle_partitions(spark)
     # r9: AQE coalesced the distinct to ONE partition and the checkpoint
     # froze that layout, so the co-occurrence self-join expansion (the
     # query's main cost) streamed through the broadcast join on one
@@ -2431,9 +2430,7 @@ def rec_eval_precision_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = T(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     # part is DATA-SIZED (SFx200k rows): no hint, AQE decides per-SF
     p = T(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    parallelism = int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
+    parallelism = shuffle_partitions(spark)
     # r9: same single-partition-checkpoint fix as item_item_cosine_recs
     # (see that function's comment) — the train-side co-occurrence
     # self-join (~2.7M-row expansion at sf0.1) ran on one core.

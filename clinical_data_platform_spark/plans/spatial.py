@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..catalog import fan_out_scan, iter_checkpoint
 from ..catalog import table as T
+from ..session import shuffle_partitions
 from .registry import query
 
 _R = 1 << 13  # search radius (8192 on the 2^20 grid)
@@ -286,9 +287,7 @@ def dbscan_grid_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     dist_sq = (F.col("xa") - F.col("xb")) * (F.col("xa") - F.col("xb")) + (
         F.col("ya") - F.col("yb")
     ) * (F.col("ya") - F.col("yb"))
-    parallelism = int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
+    parallelism = shuffle_partitions(spark)
     nbr = (
         a.join(
             b,

@@ -18,6 +18,7 @@ from ..functions.scalars import (
     normal_upper_sf,
 )
 from ..operators.stats import chi_square_test, welch_t_test
+from ..session import shuffle_partitions
 from .registry import query
 
 _WELCH_ORACLE = """
@@ -2428,9 +2429,7 @@ def _frac_ranks2_from_counts(vl: DataFrame, group: str, val: str) -> DataFrame:
     squeezes onto one task — pin the fan-out with an explicit hash
     repartition on the window key (the join and window then share it:
     one exchange, P-way parallel)."""
-    parallelism = int(
-        vl.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
+    parallelism = shuffle_partitions(vl.sparkSession)
     vl = vl.withColumn("bin", F.floor(F.col(val)).cast("long"))
     binc = vl.groupBy(group, "bin").agg(F.sum("cnt").alias("bc"))
     wb = Window.partitionBy(group).orderBy("bin")
@@ -2529,9 +2528,7 @@ def spearman_quantity_price(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_quantity").alias("x"),
         F.col("l_extendedprice").alias("y"),
     )
-    parallelism = int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
+    parallelism = shuffle_partitions(spark)
     # r4 re-fold: the previous plan collapsed the fact to an (f, x, y)
     # co-occurrence spine first — but extendedprice is near-continuous,
     # so the 600k-row "collapse" reduced nothing and its shuffle +
@@ -3805,9 +3802,7 @@ def theil_sen_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     mean: floor(avg*1e4)/1e6 = cents rounded at 1e-4 then shown in
     dollars)."""
     ev = T(spark, sf_dir, "events")
-    parallelism = int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
+    parallelism = shuffle_partitions(spark)
     # r9: the per-(type, hour) agg coalesces to ONE partition and the
     # checkpoint froze that layout, so the |hours|^2-per-type pair
     # expansion + slope arithmetic (the whole cost) streamed through the
@@ -6277,7 +6272,7 @@ def distance_correlation_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fan the left side out before the broadcast nested loop: the day
     # grid arrives as one post-agg partition and AQE would run the
     # n_days^2 expansion single-task otherwise
-    parallelism = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    parallelism = shuffle_partitions(spark)
     pairs = day.repartition(parallelism).crossJoin(F.broadcast(b)).agg(
         F.sum(
             (
@@ -6975,9 +6970,7 @@ def permutation_test_price_status(spark: SparkSession, sf_dir: str) -> DataFrame
     o = T(spark, sf_dir, "orders").filter(
         F.col("o_orderstatus").isin("F", "O")
     )
-    parallelism = int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
+    parallelism = shuffle_partitions(spark)
     # r9: the single-file orders scan arrives as ONE partition and the
     # checkpoint freezes that layout, so the B x md5 replicate expansion
     # below (the whole cost of this query) ran on one core. Fan out
@@ -7762,7 +7755,7 @@ def lof_daily_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     wx = Window.orderBy("x", "day")
     wy = Window.orderBy(F.col("yc").cast("double") / F.col("x"), F.col("day"))
-    parallelism = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    parallelism = shuffle_partitions(spark)
     rs = (
         day.select(
             "day",

@@ -23,6 +23,7 @@ from ..operators.dedup import (
     minhash_lsh_candidates,
     simhash64,
 )
+from ..session import shuffle_partitions
 from .registry import query
 
 _STOP_EN_SQL = "['" + "', '".join(STOPWORDS["en"]) + "']"
@@ -3057,9 +3058,7 @@ def bleu_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: posting-bounded pair expansion (df-capped), clip joins keyed
     on (pair, gram) — never a doc x doc product."""
     d = fan_out_scan(T(spark, sf_dir, "documents"))
-    parallelism = int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
+    parallelism = shuffle_partitions(spark)
     # r9 optimization fold: ONE tokenize + ONE explode emits every gram
     # order at once, tagged by order ('1|' unigram, '2|' bigram, '3|'
     # trigram) — replacing three separate explode pipelines (tf1 / tf2 /
@@ -3515,9 +3514,7 @@ def near_dup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = shingle_table(d, "doc_id", "text", 3).localCheckpoint()
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("set_size"))
     ndoc = d.agg(F.count(F.lit(1)).cast("long").alias("nd"))
-    parallelism = int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
+    parallelism = shuffle_partitions(spark)
     postings = (
         sh.groupBy("shingle")
         .agg(F.array_sort(F.collect_list("doc_id")).alias("docs"))
@@ -3966,9 +3963,7 @@ def blocking_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("ts"),
         F.lower(F.col("p_brand")).alias("brand"),
     ).localCheckpoint()
-    parallelism = int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
+    parallelism = shuffle_partitions(spark)
     # CPU-dense posting self-join: hash-fan the token table explicitly or
     # AQE's byte-based coalesce serializes the pair expansion (the
     # ngram_novelty/PPJoin lesson) — measured 10.1 s -> ~3 s at sf0.1
@@ -4178,9 +4173,7 @@ def reciprocal_best_match_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("ts"),
     ).localCheckpoint()
-    parallelism = int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
+    parallelism = shuffle_partitions(spark)
     # explicit hash fan-out before the CPU-dense posting self-join (the
     # family's AQE-coalesce guard) — measured 13.5 s -> ~4 s at sf0.1
     tok = (

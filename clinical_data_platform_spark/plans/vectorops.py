@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..catalog import table as T
 from ..functions.vectors import cosine_similarity, l2_norm
+from ..session import shuffle_partitions
 from .registry import query
 
 _DOT_SQL = (
@@ -267,7 +268,7 @@ def embedding_near_dup_pairs_exhaustive(
     """O(n²) brute-force near-dup pairs — the recall ORACLE for the banded
     LSH plan below, exercised only in tests (tests/test_dedup_similarity.py).
     Not registered: an all-pairs crossJoin is a scale-killer at 100 TB."""
-    parallelism = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    parallelism = shuffle_partitions(spark)
     unit = _unit_vectors(T(spark, sf_dir, "embeddings"))
     a = unit.select(
         F.col("vec_id").alias("id_a"), F.col("unit").alias("unit_a")
@@ -403,7 +404,7 @@ def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = T(spark, sf_dir, "embeddings").filter(
         F.col("vec_id") < _PAIR_DEMO_CAP
     )
-    parallelism = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    parallelism = shuffle_partitions(spark)
     planes = _slsh_signs(_PAIR_BANDS * _PAIR_ROWS_PER_BAND)
     band_cols = []
     for j in range(_PAIR_BANDS):

@@ -8,7 +8,8 @@ oracle), Arrow enabled for the few pandas-UDF paths, snappy parquet.
 
 At 100 TB the only knobs that change are ``spark.sql.shuffle.partitions``
 (set to ~2-3x total cores) and executor memory sizing; nothing in this
-package hardcodes partition counts — operators use the session defaults.
+package hardcodes partition counts — operators use the session defaults,
+and those that pin a fan-out read it through ``shuffle_partitions``.
 
 ``concurrently`` is the package's one thread pool: it runs independent
 Spark work side by side under the caller's job group.
@@ -43,6 +44,13 @@ def concurrently(spark: SparkSession, thunks: Sequence[Callable[[], T]]) -> list
     wrapped = [inheritable_thread_target(spark)(thunk) for thunk in thunks]
     with ThreadPool(len(wrapped)) as pool:
         return pool.map(lambda run: run(), wrapped)
+
+
+def shuffle_partitions(spark: SparkSession) -> int:
+    """The session's shuffle fan-out (32 when unset): the width operators
+    repartition to before CPU-dense per-row or per-pair work, so AQE's
+    bytes-based coalescing cannot collapse that work onto one task."""
+    return int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
 
 
 def spark_cpus() -> int:

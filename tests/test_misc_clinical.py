@@ -16,7 +16,7 @@ from clinical_data_platform_spark.clinical.ingest import (
     land_to_bronze,
     read_csv_normalized,
 )
-from clinical_data_platform_spark.clinical.ml import closed_form_risk, score, train
+from clinical_data_platform_spark.clinical.ml import closed_form_risk, score
 from clinical_data_platform_spark.clinical.redaction import (
     detokenize_value,
     redact_columns,
@@ -137,16 +137,6 @@ def test_shift_dates(spark):
     assert str(shift_dates(df, "d", 30).first()["d"]) == "2024-01-31"
 
 
-def test_ml_train_and_score(spark, silver):
-    feats = subject_level_features(silver["DM"], silver["AE"])
-    model, auc, ap = train(feats, seed=42)
-    assert 0.65 <= auc <= 1.0 and 0.60 <= ap <= 1.0
-    scored = score(model, feats)
-    risks = scored.agg(F.min("RISK"), F.max("RISK")).first()
-    assert 0.0 <= risks[0] and risks[1] <= 1.0
-    assert scored.count() == silver["DM"].count()
-
-
 def test_cross_validate_cv_auc(spark, silver):
     """5-fold CV parity with ml/train.py:135 cross_val_score(cv=5):
     mean/std/per-fold scores, deterministic stratified folds. pyspark's
@@ -237,6 +227,10 @@ def test_train_with_report_and_artifacts(spark, silver, tmp_path):
     vm = report["validation_metrics"]
     assert all(0.0 <= vm[k] <= 1.0 for k in vm)
     assert set(report["feature_importance"]) == {"AGE", "AE_COUNT", "SEVERE_AE_COUNT"}
+    risks = score(model, feats)
+    lo, hi = risks.agg(F.min("RISK"), F.max("RISK")).first()
+    assert 0.0 <= lo and hi <= 1.0
+    assert risks.count() == silver["DM"].count()
 
     out = tmp_path / "model_artifacts"
     written = export_artifacts(str(out), report, scored)
