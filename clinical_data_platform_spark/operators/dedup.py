@@ -4,8 +4,13 @@ Four tiers, cheapest first — all pure DataFrame ops, designed so each stage
 is shuffle-bounded by the number of *candidate pairs*, never O(n^2):
 
 1. exact_dedup          — md5 fingerprint of normalized text, hash groupBy.
-2. ngram_jaccard_pairs  — word n-gram shingles, shingle-inverted-index
-                          self-join, exact Jaccard on candidate pairs.
+2. ngram_jaccard_pairs_inverted / containment_pairs — word n-gram
+                          shingles, pairs counted by posting_pair_counts,
+                          the one posting-list pair expansion, capped at
+                          POSTING_DF_CAP docs per shingle; exact Jaccard
+                          (or containment) on those pairs.
+                          ngram_jaccard_pairs is the uncapped exhaustive
+                          self-join the capped path is tested against.
 3. minhash_signatures / minhash_lsh_candidates — k seeded xxhash64 min-
                           hashes, banded LSH bucketing; candidate pairs come
                           from band-bucket joins (near-dup at 100 TB scale).
@@ -75,24 +80,14 @@ def ngram_jaccard_pairs(
     text_col: str,
     n: int = 3,
     threshold: float = 0.5,
-    max_shingle_docs: int | None = 1000,
 ) -> DataFrame:
-    """Exact Jaccard over word-n-gram shingle sets, via inverted index.
-
-    Shuffle cost is bounded by sum over shingles of df(shingle)^2; the
-    ``max_shingle_docs`` guard drops degenerate ultra-common shingles
-    (stopword-only n-grams) that would otherwise quadratically blow up a
-    100 TB run — same role as minhash banding's implicit frequency cap.
+    """Exact Jaccard over word-n-gram shingle sets, via a shingle
+    self-join with no posting cap: the exhaustive reference the capped
+    posting_pair_counts path is tested against. Shuffle cost is
+    sum over shingles of df(shingle)^2 — a test-scale tool, not a 100 TB
+    plan.
     """
-    sh = shingle_table(df, id_col, text_col, n).cache()
-    if max_shingle_docs is not None:
-        common = (
-            sh.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") > max_shingle_docs)
-            .select("shingle")
-        )
-        sh = sh.join(common, "shingle", "left_anti")
+    sh = shingle_table(df, id_col, text_col, n)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("set_size"))
     a = sh.select(F.col("doc_id").alias("id_a"), "shingle")
     b = sh.select(F.col("doc_id").alias("id_b"), "shingle")
@@ -342,34 +337,35 @@ def minhash_md5_candidates(
     )
 
 
-def ngram_jaccard_pairs_inverted(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    threshold: float = 0.5,
-    max_shingle_docs: int | None = 1000,
-    shingles: DataFrame | None = None,
-) -> DataFrame:
-    """Same semantics as ngram_jaccard_pairs, different physical plan:
-    instead of a shingle self-JOIN (two shuffles of the exploded table),
-    build the inverted index (groupBy shingle -> sorted doc list) and
-    expand each posting list's pairs with a higher-order function. One
-    shuffle to build postings + one to count pairs; pair-expansion work is
-    bounded by sum(df_s^2) exactly like the join, with no join hash table.
-    Postings lists longer than max_shingle_docs are dropped (ultra-common
-    shingles), which is also the quadratic-blowup guard at scale.
+# The quadratic-blowup guard of every posting-list pair expansion: a key
+# (shingle, fingerprint, token) held by more entities than this never
+# expands pairs. Stopword-only n-grams and boilerplate fingerprints are the
+# keys it drops; every oracle mirrors it as a HAVING count(*) filter.
+POSTING_DF_CAP = 1000
 
-    ``shingles``: optional prebuilt (doc_id, shingle) table (see
-    minhash_md5_candidates) so composed detectors share one tokenize."""
-    sh = shingles if shingles is not None else shingle_table(df, id_col, text_col, n)
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("set_size"))
-    postings = sh.groupBy("shingle").agg(
-        F.array_sort(F.collect_list("doc_id")).alias("docs")
+
+def posting_pair_counts(elems: DataFrame, id_col: str, key_col: str) -> DataFrame:
+    """(id_a, id_b, n_common) with id_a < id_b: how many keys two entities
+    share, counting only keys held by 2 to POSTING_DF_CAP entities.
+    ``elems`` must hold one row per (id, key).
+
+    Builds the inverted index (groupBy key -> sorted id list) and expands
+    each posting list's pairs with a higher-order function: one shuffle
+    to build postings and one to count pairs, pair-expansion work bounded
+    by sum(df^2) like a key self-join but with no join hash table.
+    POSTING_DF_CAP is read at call time.
+
+    The posting array is collected before the cap filters it, so one
+    degenerate hot key buffers its full id list in the aggregation before
+    being discarded. A count-aggregate pre-filter closes that window but
+    cost bleu_near_dup_pairs +1.1 s on a ~6 s query (7.36 vs 6.25 s
+    isolated min-of-3, sf0.1) for a cap that never binds on the shipped
+    documents (max trigram df 25)."""
+    postings = elems.groupBy(key_col).agg(
+        F.array_sort(F.collect_list(id_col)).alias("docs")
     )
     postings = postings.filter(F.size("docs") >= 2)
-    if max_shingle_docs is not None:
-        postings = postings.filter(F.size("docs") <= max_shingle_docs)
+    postings = postings.filter(F.size("docs") <= POSTING_DF_CAP)
     # pair expansion is CPU-bound but byte-light: AQE's size-based coalesce
     # would squeeze it onto one task, so pin the fan-out explicitly
     parallelism = shuffle_partitions(postings.sparkSession)
@@ -383,11 +379,31 @@ def ngram_jaccard_pairs_inverted(
             ),
         )
     )
-    inter = (
+    return (
         postings.select(F.explode(pair_structs).alias("p"))
         .groupBy(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
+
+
+def ngram_jaccard_pairs_inverted(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    n: int = 3,
+    threshold: float = 0.5,
+    shingles: DataFrame | None = None,
+) -> DataFrame:
+    """Jaccard over word-n-gram shingle sets from posting_pair_counts —
+    the same result as ngram_jaccard_pairs wherever no shingle exceeds
+    POSTING_DF_CAP. Set sizes stay uncapped: the cap drops ultra-common
+    shingles from intersection counting only.
+
+    ``shingles``: optional prebuilt (doc_id, shingle) table (see
+    minhash_md5_candidates) so composed detectors share one tokenize."""
+    sh = shingles if shingles is not None else shingle_table(df, id_col, text_col, n)
+    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("set_size"))
+    inter = posting_pair_counts(sh, "doc_id", "shingle")
     sa = sizes.select(F.col("doc_id").alias("id_a"), F.col("set_size").alias("size_a"))
     sb = sizes.select(F.col("doc_id").alias("id_b"), F.col("set_size").alias("size_b"))
     jacc = F.col("n_common") / (F.col("size_a") + F.col("size_b") - F.col("n_common"))
@@ -408,7 +424,6 @@ def containment_pairs(
     text_col: str,
     n: int = 3,
     threshold: float = 0.8,
-    max_shingle_docs: int | None = 1000,
     shingles: DataFrame | None = None,
 ) -> DataFrame:
     """Asymmetric near-dup: shingle-set CONTAINMENT |A∩B| / |A| (Broder
@@ -418,37 +433,15 @@ def containment_pairs(
     per pair whose smaller side is >= threshold contained in the larger
     (ties by id), with both set sizes so the consumer sees the asymmetry.
 
-    Plan: identical shuffle shape to ngram_jaccard_pairs_inverted —
-    posting-list pair expansion bounded by sum(df^2) with the same
-    ultra-common-shingle guard; only the final scoring expression
-    differs, so the 100 TB properties carry over unchanged.
+    Plan: posting_pair_counts, like ngram_jaccard_pairs_inverted; only
+    the final scoring expression differs, so the 100 TB properties carry
+    over unchanged.
 
     ``shingles``: optional prebuilt (doc_id, shingle) table (see
     minhash_md5_candidates) so composed detectors share one tokenize."""
     sh = shingles if shingles is not None else shingle_table(df, id_col, text_col, n)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("set_size"))
-    postings = sh.groupBy("shingle").agg(
-        F.array_sort(F.collect_list("doc_id")).alias("docs")
-    )
-    postings = postings.filter(F.size("docs") >= 2)
-    if max_shingle_docs is not None:
-        postings = postings.filter(F.size("docs") <= max_shingle_docs)
-    parallelism = shuffle_partitions(postings.sparkSession)
-    postings = postings.repartition(parallelism)
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("docs"),
-            lambda x, i: F.transform(
-                F.slice(F.col("docs"), i + 2, F.size(F.col("docs"))),
-                lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-            ),
-        )
-    )
-    inter = (
-        postings.select(F.explode(pair_structs).alias("p"))
-        .groupBy(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
+    inter = posting_pair_counts(sh, "doc_id", "shingle")
     sa = sizes.select(
         F.col("doc_id").alias("id_a"), F.col("set_size").alias("size_a")
     )

@@ -40,7 +40,6 @@ from .registry import query
     FROM events e
     ASOF JOIN rates r ON e.user_id = r.user_id AND e.ts >= r.rate_ts
     """,
-    tags=["asof", "custom-operator"],
 )
 def asof_event_hourly_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Backward as-of join: each event picks the most recent hourly rate at
@@ -73,7 +72,6 @@ def asof_event_hourly_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events e
     ASOF LEFT JOIN rates r ON e.user_id = r.user_id AND e.ts <= r.rate_ts
     """,
-    tags=["asof", "custom-operator"],
 )
 def asof_forward_next_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Forward as-of join: each event picks the EARLIEST hourly rate at or
@@ -129,7 +127,6 @@ def asof_forward_next_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
                 WHEN f_ok THEN 'forward' END AS direction
     FROM j
     """,
-    tags=["asof", "custom-operator"],
 )
 def asof_nearest_rate_30min(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nearest as-of join with a 30-minute tolerance: each event picks the
@@ -168,7 +165,6 @@ def asof_nearest_rate_30min(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem
     GROUP BY ROLLUP (l_returnflag, l_linestatus)
     """,
-    tags=["rollup"],
 )
 def rollup_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP hierarchy totals (subtotal rows carry NULL keys) — consolidates
@@ -190,7 +186,6 @@ def rollup_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders
     GROUP BY CUBE (o_orderstatus, o_orderpriority)
     """,
-    tags=["cube"],
 )
 def cube_order_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE over status x priority (all 4 grouping sets in one shuffle)."""
@@ -213,7 +208,6 @@ def cube_order_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     INTERSECT
     SELECT o_custkey AS c_custkey FROM orders WHERE o_totalprice > 100000
     """,
-    tags=["setop"],
 )
 def building_buyers_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INTERSECT (distinct set semantics on both engines)."""
@@ -233,7 +227,6 @@ def building_buyers_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     EXCEPT
     SELECT o_custkey AS c_custkey FROM orders
     """,
-    tags=["setop"],
 )
 def customers_without_orders_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXCEPT (distinct set difference — DataFrame.subtract)."""
@@ -255,7 +248,6 @@ def customers_without_orders_except(spark: SparkSession, sf_dir: str) -> DataFra
            cast(coalesce(s.n_suppliers, 0) AS BIGINT) AS n_suppliers
     FROM cust c FULL OUTER JOIN supp s ON c.nk = s.nk
     """,
-    tags=["join-full-outer"],
 )
 def nation_trade_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FULL OUTER join of two aggregates with coalesced keys/defaults."""
@@ -316,7 +308,6 @@ def nation_trade_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
                  / sum(c)::DOUBLE * 1e6) / 1e6
     FROM l
     """,
-    tags=["skew", "diagnostics"],
 )
 def join_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Join-key skew diagnostics — the audit you run BEFORE picking a
@@ -377,7 +368,6 @@ def join_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT event_type, count(*) AS n, round(sum(value), 2) AS total_value
     FROM events GROUP BY event_type
     """,
-    tags=["skew", "A1"],
 )
 def salted_event_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-stage salted aggregation for hot keys (operators/skew.py) — must
@@ -401,7 +391,6 @@ def salted_event_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM orders
     ) WHERE rn <= 3
     """,
-    tags=["topk", "W1"],
 )
 def top3_orders_per_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k per group: window row_number with deterministic tie-break."""
@@ -426,7 +415,6 @@ def top3_orders_per_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem
     GROUP BY l_returnflag
     """,
-    tags=["approx", "A5"],
 )
 def approx_distinct_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HyperLogLog++ approximate distinct + approximate percentile — the
@@ -483,7 +471,6 @@ def approx_distinct_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
            sha256(text) AS sha256
     FROM documents
     """,
-    tags=["multimodal", "mapInPandas"],
 )
 def multimodal_payload_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary-payload metadata extraction through the real mapInPandas
@@ -504,7 +491,6 @@ def multimodal_payload_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
            / 255.0 AS feature_value
     FROM h, range(0, 8) r(i)
     """,
-    tags=["multimodal", "mapInPandas"],
 )
 def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic fake featurizer over binary payloads (embedding-model
@@ -544,7 +530,6 @@ _PX_BYTE = (
            cast(sum(CASE WHEN j % 3 = 2 THEN v END) AS BIGINT) AS sum_b
     FROM px GROUP BY doc_id
     """,
-    tags=["multimodal", "imagecodec", "mapInPandas"],
 )
 def image_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL image decode, value-exactly oracled (closes the r4 verdict's
@@ -583,7 +568,6 @@ def image_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
            cast(sum(CASE WHEN j % 3 = 2 THEN v END) AS BIGINT) AS sum_b
     FROM px GROUP BY doc_id
     """,
-    tags=["multimodal", "imagecodec", "png", "mapInPandas"],
 )
 def png_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL baseline-PNG decode, value-exactly oracled (r5 verdict item
@@ -659,7 +643,6 @@ _JPG_SGN = "(CASE WHEN (({t} + 1) // 2) % 2 = 0 THEN 1 ELSE -1 END)"
              AS pixel_md5
     FROM px GROUP BY doc_id, sampling, dim
     """,
-    tags=["multimodal", "imagecodec", "jpeg", "mapInPandas"],
 )
 def jpeg_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL baseline JPEG decode, value-exactly oracled (r7 verdict item
@@ -722,7 +705,6 @@ def jpeg_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM bits b JOIN canon c ON b.ab = c.ab
     WHERE c.n >= 2 AND b.doc_id <> c.canonical_id
     """,
-    tags=["multimodal", "imagecodec", "dedup"],
 )
 def image_ahash_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual (average-hash) image dedup over REAL decoded pixels:
@@ -780,7 +762,6 @@ def image_ahash_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
            cast(len(string_split_regex(trim(text), '\s+')) AS BIGINT) AS n_ws_tokens
     FROM documents
     """,
-    tags=["text", "tokenize"],
 )
 def bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting two ways: whitespace and a BPE-ish regex (letter runs
@@ -859,7 +840,6 @@ def lang_is_en_expr(
            round(greatest(s_en, s_de, s_es, s_fr), 6) AS top_score
     FROM scored
     """,
-    tags=["text", "lang-id"],
 )
 def lang_id_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """N-gram-free language-ID heuristic: stopword hit-rate per language,
@@ -915,7 +895,6 @@ def lang_id_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM t, unnest(generate_series(0, cast(n_frames - 1 AS BIGINT), 4))
            AS u(i)
     """,
-    tags=["multimodal", "mapInPandas", "frame-sample"],
 )
 def multimodal_frame_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frame sampling through the real 1->N mapInPandas plumbing: payloads
@@ -947,7 +926,6 @@ def multimodal_frame_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE o_totalprice > 0
     GROUP BY 1
     """,
-    tags=["udaf", "pandas-udf", "A3"],
 )
 def geomean_price_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """User-defined AGGREGATE via a grouped-agg pandas_udf (Arrow batch
@@ -1009,7 +987,6 @@ def geomean_price_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM pred
     GROUP BY lang, predicted_lang
     """,
-    tags=["text", "lang-id", "eval", "llm-pipeline"],
 )
 def lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Confusion matrix for the lang-ID heuristic: labeled lang x
@@ -1061,7 +1038,6 @@ def lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY lift DESC, part_a, part_b
     LIMIT 20
     """,
-    tags=["affinity", "market-basket"],
 )
 def part_pair_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Market-basket affinity: top part pairs by LIFT = N * supp(ab) /
@@ -1164,7 +1140,6 @@ _RFM_REF = "2001-09-01 00:00:00"
            round(avg(monetary), 4) AS avg_monetary
     FROM scored GROUP BY 1, 2, 3
     """,
-    tags=["segmentation", "rfm", "marts"],
 )
 def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFM segmentation — the classic customer-value cube: per customer
@@ -1288,7 +1263,6 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
            cast(src_ts AS BIGINT) AS src_ts
     FROM ranked WHERE rn = 1
     """,
-    tags=["mdm", "survivorship", "golden-record"],
 )
 def golden_customer_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Survivorship / golden-record construction — the step AFTER entity
@@ -1387,7 +1361,6 @@ def golden_customer_records(spark: SparkSession, sf_dir: str) -> DataFrame:
              OR b.l_extendedprice < a.l_extendedprice)
     )
     """,
-    tags=["skyline", "pareto", "algorithmics"],
 )
 def lineitem_quantity_price_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skyline / Pareto-frontier query (Borzsonyi et al. 2001): the

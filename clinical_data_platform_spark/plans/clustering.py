@@ -128,7 +128,6 @@ def _assigned(e: DataFrame, k: int = _K) -> DataFrame:
     FROM a WHERE rn = 1
     GROUP BY cid
     """,
-    tags=["vector", "clustering", "llm-pipeline"],
 )
 def kmeans_assign_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K-means assignment against k=8 deterministic seed centroids:
@@ -168,7 +167,6 @@ def kmeans_assign_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
            floor(n * 1e6 / n_total) / 1e6 AS purity
     FROM r WHERE rn = 1
     """,
-    tags=["vector", "clustering", "llm-pipeline"],
 )
 def kmeans_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster-vs-label contingency: the majority ground-truth label and
@@ -251,7 +249,6 @@ _ASSIGN_CTE_DEMO = f"""
     WHERE {_DOT_SQL.format(a='x.embedding', b='y.embedding')}
           / (x.nrm * y.nrm) > 0.45
     """,
-    tags=["vector", "dedup", "clustering", "llm-pipeline"],
 )
 def semantic_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup-style semantic near-duplicate pairs (Abbas et al. 2023,
@@ -331,7 +328,6 @@ _K_SCALED_SQL = "greatest(8, least(4096, (count(*) + 31) // 32))"
     WHERE {_DOT_SQL.format(a='x.embedding', b='y.embedding')}
           / (x.nrm * y.nrm) > 0.45
     """,
-    tags=["vector", "dedup", "clustering", "llm-pipeline", "scale"],
 )
 def semantic_near_dup_k_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SCALE-SAFE SemDeDup parameterization (r5 verdict item 2): the
@@ -550,7 +546,6 @@ def kmeans_ml_cluster_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
            TRUE AS ml_inertia_le_seeded
     FROM a WHERE rn = 1
     """,
-    tags=["vector", "clustering", "ml"],
 )
 def kmeans_ml_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark ML KMeans promoted from rows-only to an INVARIANT-BAND
@@ -639,7 +634,6 @@ def kmeans_ml_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE a.rn = 1
     GROUP BY a.cid
     """,
-    tags=["vector", "clustering", "quality", "llm-pipeline"],
 )
 def cluster_quality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-table curation audit: classifier quality score per semantic
@@ -694,7 +688,6 @@ def cluster_quality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
            TRUE AS cosine_matches_twin_1e4
     FROM p
     """,
-    tags=["vector", "dedup", "blas"],
 )
 def semantic_near_dup_blas_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The BLAS scale path of semantic_near_dup_pairs — promoted r8 from
@@ -871,7 +864,6 @@ _ALS_AUC_MARGIN = 0.05
            TRUE AS observed_pref_beats_unobserved
     FROM cb
     """,
-    tags=["recsys", "ml", "als"],
 )
 def als_brand_recs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ALS promoted from rows-only to an INVARIANT-BAND oracle (r6

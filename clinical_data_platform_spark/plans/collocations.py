@@ -92,7 +92,6 @@ def _doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY pmi DESC, w1, w2
     LIMIT 20
     """,
-    tags=["text", "collocation", "llm-pipeline"],
 )
 def bigram_pmi_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 word-bigram collocations by PMI (support >= 5).
@@ -181,7 +180,6 @@ def bigram_pmi_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM per_doc
     GROUP BY source
     """,
-    tags=["text", "dedup", "llm-pipeline"],
 )
 def ngram_novelty_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental novelty: share of each document's distinct 3-grams
@@ -278,7 +276,6 @@ _LM_K = 0.5  # add-k smoothing constant
            round(avg(ppl), 4) AS avg_ppl
     FROM pd GROUP BY lang, split
     """,
-    tags=["text", "llm-pipeline", "quality"],
 )
 def bigram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet-style perplexity quality signal (Wenzek et al. 2020): train
@@ -386,7 +383,6 @@ def bigram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY g2 DESC, w1, w2
     LIMIT 20
     """,
-    tags=["text", "collocation", "llm-pipeline"],
 )
 def dunning_g2_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 collocations by Dunning's log-likelihood ratio (Dunning
@@ -588,7 +584,6 @@ def _spec_iter_sql(k: int) -> str:
     LIMIT 20
     """
     ),
-    tags=["text", "spectral", "iterative", "llm-pipeline"],
 )
 def token_spectral_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Leading-eigenvector centrality of the PPMI token co-occurrence
@@ -756,7 +751,6 @@ _KN_D = 0.75  # absolute discount
            round(avg(ppl), 4) AS avg_ppl
     FROM pd GROUP BY lang, split
     """.format(g2=_gram_sql(2)),
-    tags=["text", "llm-pipeline", "quality", "kneser-ney", "extension"],
 )
 def kneser_ney_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interpolated Kneser-Ney bigram LM (Kneser & Ney 1995; Chen &
@@ -914,7 +908,6 @@ def _tr_iter_sql(k: int) -> str:
     LIMIT {_TR_TOPK}
     """
     ).format(g2=_gram_sql(2)),
-    tags=["text", "keywords", "textrank", "graph", "extension"],
 )
 def textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TextRank keyword extraction (Mihalcea & Tarau 2004): PageRank

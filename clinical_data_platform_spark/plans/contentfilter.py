@@ -83,7 +83,6 @@ def _token_weight(w: Column) -> Column:
            (1.0 / (1.0 + exp(-4.0 * score)) >= 0.5) AS keep
     FROM s
     """,
-    tags=["text", "quality", "ml", "llm-pipeline"],
 )
 def quality_classifier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Linear hashed-feature document scorer: token-mean pseudo-weight,
@@ -156,7 +155,6 @@ def _pii_oracle() -> str:
 @query(
     "pii_signal_counts",
     oracle=_pii_oracle(),
-    tags=["text", "pii", "llm-pipeline"],
 )
 def pii_signal_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Release-gate PII/link exposure scan: per-source totals of email,
@@ -197,7 +195,6 @@ _CAL_STOPWORDS = ["the", "a", "of", "and", "to"]
     FROM s
     GROUP BY 1
     """,
-    tags=["text", "quality", "ml", "calibration", "llm-pipeline"],
 )
 def classifier_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reliability table for the quality classifier: fixed-width
@@ -398,7 +395,6 @@ def naive_bayes_confusion(d: DataFrame) -> DataFrame:
     FROM pred WHERE rn = 1
     GROUP BY 1, 2
     """,
-    tags=["text", "ml", "classifier", "llm-pipeline"],
 )
 def naive_bayes_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multinomial Naive Bayes trained AND evaluated distributed: add-1
@@ -486,7 +482,6 @@ def naive_bayes_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT lang, cast(rk AS BIGINT) AS rk, w AS token, chi2, df_in_class
     FROM r WHERE rk <= 5
     """,
-    tags=["text", "ml", "feature-selection", "llm-pipeline"],
 )
 def chi2_token_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Chi-square feature selection over document-frequency contingency
@@ -628,7 +623,6 @@ def chi2_token_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS f1
     FROM m
     """,
-    tags=["text", "ml", "evaluation"],
 )
 def nb_f1_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-class precision / recall / F1 for the Naive Bayes language
@@ -756,7 +750,6 @@ _ISO_BINS_SQL = f"""
     GROUP BY 1, 2, 3
     """
     ),
-    tags=["ml", "calibration", "isotonic", "extension"],
 )
 def isotonic_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Isotonic (PAV) calibration of the quality classifier — the
@@ -891,7 +884,6 @@ def isotonic_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM terms
     """
     ),
-    tags=["ml", "calibration", "brier", "extension"],
 )
 def calibration_error_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-number calibration summaries over the same deciles as
@@ -1012,7 +1004,6 @@ def calibration_error_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM gcum, tot
     """
     ),
-    tags=["ml", "gains", "lift", "extension"],
 )
 def classifier_gains_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cumulative gains and lift by predicted-probability decile — the
@@ -1136,7 +1127,6 @@ def classifier_gains_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         "{p_sql}",
         NORMAL_SF_SQL.format(z="abs((num_fp / 1e9) / sqrt(den_fp / 1e9))"),
     ),
-    tags=["content-filter", "calibration-test", "extension"],
 )
 def spiegelhalter_calibration_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spiegelhalter's (1986) z-test of probability calibration for the

@@ -203,7 +203,6 @@ def gopher_keep_expr() -> F.Column:
             AND n_stopwords >= {_MIN_STOPWORDS}) AS keep
     FROM m
     """,
-    tags=["text", "quality", "llm-pipeline"],
 )
 def gopher_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher document-quality rules as one narrow projection per doc —
@@ -296,7 +295,6 @@ def _grams(ws: F.Column, n: int) -> F.Column:
     LEFT JOIN bga ON bga.doc_id = b.doc_id
     LEFT JOIN tga ON tga.doc_id = b.doc_id
     """,
-    tags=["text", "quality", "llm-pipeline"],
 )
 def doc_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher repetition filters: duplicate-line fraction plus the mass
@@ -370,7 +368,6 @@ _EVAL_MOD, _EVAL_REM = 10, 7  # deterministic held-out "benchmark" slice
     FROM tr JOIN ev ON tr.g = ev.g
     GROUP BY tr.doc_id
     """,
-    tags=["text", "dedup", "llm-pipeline"],
 )
 def benchmark_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Training-vs-benchmark n-gram decontamination: flag every training
@@ -382,7 +379,7 @@ def benchmark_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc. The benchmark side of a real pipeline is tiny (MMLU/GSM8K-scale)
     — Spark broadcasts it, so the 100 TB corpus side never shuffles; at
     bench scale statistics pick the broadcast automatically. A frequency
-    cap on ubiquitous grams (cf. textops.max_shingle_docs) bounds the
+    cap on ubiquitous grams (cf. dedup.POSTING_DF_CAP) bounds the
     join fan-out for adversarial corpora."""
     t = fan_out_scan(T(spark, sf_dir, "documents")).select(
         "doc_id", tokens(F.col("text")).alias("ws")
@@ -423,7 +420,6 @@ def benchmark_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM c
     GROUP BY doc_id
     """,
-    tags=["text", "quality", "llm-pipeline"],
 )
 def word_entropy_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document Shannon entropy (nats) of the lowercase token
@@ -475,7 +471,6 @@ _BP_MIN_DOCS = 5  # a line in >= this many distinct docs is boilerplate
     ORDER BY n_docs DESC, n_occurrences DESC, line
     LIMIT 20
     """,
-    tags=["text", "dedup", "boilerplate", "llm-pipeline"],
 )
 def boilerplate_lines_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Line-level duplicate detection (the CCNet/RefinedWeb boilerplate
@@ -544,7 +539,6 @@ def boilerplate_lines_frame(
     FROM per_doc p JOIN documents d ON d.doc_id = p.doc_id
     GROUP BY d.source
     """,
-    tags=["text", "dedup", "boilerplate", "llm-pipeline"],
 )
 def boilerplate_removal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """What boilerplate removal would delete, per source: total lines,
@@ -632,7 +626,6 @@ _SPAN_WIN_SQL = f"""
     FROM per_doc p JOIN documents d ON d.doc_id = p.doc_id
     GROUP BY d.source
     """,
-    tags=["text", "dedup", "substring", "llm-pipeline"],
 )
 def dup_span_fraction_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Windowed exact-substring duplication (the tractable form of
@@ -811,7 +804,6 @@ _SDR_CTE = f"""
     FROM doc_tok d LEFT JOIN per_doc p ON p.doc_id = d.doc_id
     GROUP BY d.source
     """,
-    tags=["text", "dedup", "substring", "llm-pipeline"],
 )
 def substring_dedup_removal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-substring dedup REMOVAL accounting (Lee et al. 2022,
@@ -1067,7 +1059,6 @@ _KL_SRC_B = "src1"
                  6) AS js_divergence
     FROM pq, tot
     """,
-    tags=["corpus", "drift", "kl", "llm-pipeline"],
 )
 def token_kl_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-distribution drift between two corpus slices: KL divergence
@@ -1147,7 +1138,6 @@ def token_kl_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY abs_log_ratio DESC, tok
     LIMIT 15
     """,
-    tags=["corpus", "drift", "heavy-changers", "llm-pipeline"],
 )
 def token_heavy_changers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The itemized companion to token_kl_divergence: which tokens moved
@@ -1228,7 +1218,6 @@ _ZIPF_TOP = 500  # fit over the top-N ranked terms per language
                  / ((n * sxx - sx * sx) * (n * syy - sy * sy)), 6) AS r2
     FROM a
     """,
-    tags=["corpus-stats", "zipf", "llm-pipeline"],
 )
 def zipf_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zipf's-law fit per language: OLS of ln(frequency) on ln(rank)
@@ -1359,7 +1348,6 @@ FROM f
 @query(
     "heaps_law_fit",
     oracle=_HEAPS_ORACLE,
-    tags=["corpus-stats", "heaps", "llm-pipeline"],
 )
 def heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heaps'-law fit V(N) = K·N^beta of vocabulary growth against
@@ -1489,7 +1477,6 @@ FROM g
 @query(
     "flesch_readability_by_source",
     oracle=_FLESCH_ORACLE,
-    tags=["text", "quality", "llm-pipeline"],
 )
 def flesch_readability_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flesch reading-ease per source, POOLED: 206.835 − 1.015·(words/
@@ -1573,7 +1560,6 @@ def flesch_readability_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ELSE vocab * 1.0 END AS chao1_vocab
     FROM s
     """,
-    tags=["text", "coverage", "good-turing", "llm-pipeline"],
 )
 def vocab_coverage_estimates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """How much vocabulary has the corpus NOT seen yet — the two
@@ -1674,7 +1660,6 @@ _TOPK_TOKENS = 100
     JOIN sizes sa ON sa.source = i.source_a
     JOIN sizes sb ON sb.source = i.source_b
     """,
-    tags=["text", "drift", "vocabulary", "llm-pipeline"],
 )
 def source_topk_token_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Head-vocabulary overlap between corpus sources: Jaccard of each

@@ -171,7 +171,6 @@ _FUNNEL_ORACLE = f"""
 @query(
     "corpus_curation_funnel",
     oracle=_FUNNEL_ORACLE,
-    tags=["text", "dedup", "quality", "lang-id", "llm-pipeline", "funnel"],
 )
 def corpus_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The nightly curation job as ONE plan — see module docstring. Every
@@ -304,7 +303,7 @@ def corpus_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # survivor table, so the second tokenize it saves is cheaper than
     # the extra materialization. Left as-is per the measure-first rule.
     pairs = ngram_jaccard_pairs_inverted(
-        s3, "doc_id", "text", n=3, threshold=0.5, max_shingle_docs=1000
+        s3, "doc_id", "text", n=3, threshold=0.5
     )
     comp = connected_components(pairs)
     drop4 = (

@@ -24,7 +24,6 @@ from .registry import query
     FROM events
     GROUP BY 1, 2
     """,
-    tags=["window", "streaming-batch-twin"],
 )
 def hourly_event_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-hour windows via Spark's window() operator (epoch-aligned,
@@ -68,7 +67,6 @@ def hourly_event_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(avg(n_events), 6) AS avg_session_events
     FROM per_sess GROUP BY user_id
     """,
-    tags=["window", "sessionization"],
 )
 def user_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """30-minute-gap sessionization (lag + cumulative flag sum reusing one
@@ -87,7 +85,6 @@ def user_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM events
     ) WHERE rn = 1
     """,
-    tags=["dedup", "W2"],
 )
 def latest_event_per_user_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keep-latest dedup per (user, event_type): window row_number with a
@@ -116,7 +113,6 @@ def latest_event_per_user_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     GROUP BY event_type
     """,
-    tags=["F8", "json"],
 )
 def event_props_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON payload extraction (get_json_object) + aggregate — the
@@ -146,7 +142,6 @@ def event_props_json(spark: SparkSession, sf_dir: str) -> DataFrame:
              RANGE BETWEEN 3600 PRECEDING AND CURRENT ROW) AS BIGINT) AS rolling_1h_n
     FROM events
     """,
-    tags=["window", "range-frame"],
 )
 def rolling_hour_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RANGE-framed window: rolling 1-hour sum/count per user keyed on
@@ -183,7 +178,6 @@ def rolling_hour_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     WINDOW v AS (PARTITION BY user_id ORDER BY value, event_id),
            w AS (PARTITION BY user_id ORDER BY ts, event_id)
     """,
-    tags=["window", "rank"],
 )
 def event_rank_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """percent_rank / cume_dist / first_value / last_value battery with
@@ -228,7 +222,6 @@ def event_rank_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS filled
     FROM j
     """,
-    tags=["timeseries", "gap-fill", "window"],
 )
 def hourly_gap_fill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-series gap fill + LOCF (last observation carried forward):
@@ -284,7 +277,6 @@ def hourly_gap_fill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
                     AND p.ts >= w.ws AND p.ts < w.we)
     GROUP BY 1
     """,
-    tags=["interval-join", "range-join"],
 )
 def interval_join_error_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interval join: count each user's click/view events that fall inside
@@ -333,7 +325,6 @@ def interval_join_error_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
            (SELECT count(*) FROM c) AS n_view_click,
            (SELECT count(*) FROM p) AS n_view_click_purchase
     """,
-    tags=["funnel", "analytics"],
 )
 def funnel_view_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered conversion funnel: users whose earliest view precedes a
@@ -374,7 +365,6 @@ def funnel_view_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM act a JOIN first f USING (user_id)
     GROUP BY 1, 2
     """,
-    tags=["retention", "analytics"],
 )
 def daily_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohort retention triangle: users grouped by first-seen day, counted
@@ -416,7 +406,6 @@ def daily_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
              / 1e6 AS p
     FROM c
     """,
-    tags=["sequence", "markov"],
 )
 def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-order Markov transition matrix over per-user event
@@ -481,7 +470,6 @@ _DECAY_HALF_LIFE_DAYS = 7.0
     ORDER BY activity_score DESC, user_id
     LIMIT 20
     """,
-    tags=["feature", "decay", "recency"],
 )
 def decayed_user_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exponentially time-decayed activity score per user (7-day
@@ -524,7 +512,6 @@ def decayed_user_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     GROUP BY 1, 2
     """,
-    tags=["incremental", "materialized-view"],
 )
 def incremental_daily_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental materialized-view maintenance: the running daily
@@ -614,7 +601,6 @@ def _ewma_sql_terms() -> tuple[str, str]:
     FROM f WHERE forecast IS NOT NULL
     GROUP BY event_type
     """,
-    tags=["time-series", "forecast", "ewma"],
 )
 def ewma_hourly_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exponentially weighted moving-average forecasting over the hourly
@@ -685,7 +671,6 @@ def ewma_hourly_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
              / 1e6 AS seasonality_strength
     FROM j GROUP BY event_type
     """,
-    tags=["time-series", "seasonality"],
 )
 def hourly_seasonality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hour-of-day seasonal decomposition: the 24-slot seasonal profile
@@ -744,7 +729,6 @@ def hourly_seasonality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(avg(minutes), 4) AS mean_minutes
     FROM lat
     """,
-    tags=["funnel", "latency", "analytics"],
 )
 def funnel_conversion_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-to-convert distribution: minutes from each user's FIRST view
@@ -813,7 +797,6 @@ def funnel_conversion_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS value_share
     FROM d GROUP BY decile
     """,
-    tags=["concentration", "lorenz", "analytics"],
 )
 def user_value_lorenz_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Value-concentration (Lorenz) table: users bucketed into spend
@@ -881,7 +864,6 @@ _XCORR_LAGS = list(range(-3, 4))
            round(corr(x, y), 5) AS correlation
     FROM j GROUP BY lag
     """,
-    tags=["time-series", "cross-correlation"],
 )
 def type_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lagged cross-correlation between the click and purchase hourly
@@ -967,7 +949,6 @@ def type_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT event_type, hour, shift_score
     FROM ranked WHERE rn <= 3
     """,
-    tags=["time-series", "changepoint", "monitoring"],
 )
 def mean_shift_changepoints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Changepoint candidates by two-window mean-shift scan: at every
@@ -1064,7 +1045,6 @@ def mean_shift_changepoints(spark: SparkSession, sf_dir: str) -> DataFrame:
            END AS BIGINT) / 100.0 AS interpolated
     FROM nb
     """,
-    tags=["timeseries", "gap-fill", "interpolation"],
 )
 def hourly_linear_interpolation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap fill by LINEAR INTERPOLATION — the sensor-data upgrade over
@@ -1178,7 +1158,6 @@ def hourly_linear_interpolation(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM p GROUP BY path
     ORDER BY n_visits DESC, path LIMIT 10
     """,
-    tags=["clickstream", "paths", "extension"],
 )
 def top_visit_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top visit paths: the first three event types of every (user,
@@ -1270,7 +1249,6 @@ def top_visit_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
            floor(credit / n_conv * 1e6) / 1e6 AS credit_share
     FROM shap, tot
     """,
-    tags=["attribution", "marketing", "extension"],
 )
 def shapley_channel_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shapley-value channel attribution over the pre-purchase touch
@@ -1385,7 +1363,6 @@ _SPRT_P1 = "0.21"  # H1 purchase share (identical literals both engines)
                 ELSE 'continue' END AS decision
     FROM llr
     """,
-    tags=["experimentation", "sequential", "extension"],
 )
 def sprt_daily_decision(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wald's sequential probability ratio test (Wald 1945) on the
@@ -1461,7 +1438,6 @@ def sprt_daily_decision(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE event_type = 'purchase'
     GROUP BY user_id
     """,
-    tags=["events", "sequence", "match-recognize"],
 )
 def clean_purchase_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sequence-pattern matching in the MATCH_RECOGNIZE family — the
@@ -1551,7 +1527,6 @@ def clean_purchase_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
                     + s1::DOUBLE / n_gaps::DOUBLE), 4) AS burstiness
     FROM g
     """,
-    tags=["events", "time-series", "behavior"],
 )
 def user_burstiness_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inter-arrival burstiness (Goh & Barabasi 2008): per user, the
@@ -1641,7 +1616,6 @@ _PH_LAMBDA_FP = 50_000_000_000  # alarm threshold ($500), cents x 1e6 fixed-poin
     FROM ph
     GROUP BY event_type
     """,
-    tags=["time-series", "drift", "monitoring", "extension"],
 )
 def page_hinkley_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Page-Hinkley upward-drift detection (Page 1954; the test behind
@@ -1744,7 +1718,6 @@ _GAP_THRESHOLDS_S = (900, 1800, 3600)  # 15 min / 30 min / 60 min
                     END)) / 1e6 AS events_per_session
     FROM agg, (SELECT unnest({list(_GAP_THRESHOLDS_S)!r}) AS gap_s) u
     """,
-    tags=["sessionization", "sensitivity", "monitoring"],
 )
 def session_gap_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-count sensitivity to the inactivity-gap parameter — the
@@ -1871,7 +1844,6 @@ _LB_LAGS = 6
       FROM q
     )
     """.replace("__PSQL__", NORMAL_SF_SQL.format(z="z_raw")),
-    tags=["M-ext", "time-series", "autocorrelation", "extension"],
 )
 def ljung_box_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ljung-Box portmanteau test (Ljung & Box 1978) on the hourly
@@ -2208,7 +2180,6 @@ _DFT_VALUES_SQL = """
                  + (im_fp / 1e6) * (im_fp / 1e6), 6) AS power
     FROM x
     """,
-    tags=["M-ext", "time-series", "spectrum", "extension"],
 )
 def dft24_hourly_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Diurnal power spectrum: a 24-point DFT of the hour-of-day event
@@ -2302,7 +2273,6 @@ _CUSUM_H = 5.0  # alarm threshold in sigma units
                          THEN 1 ELSE 0 END) AS BIGINT) AS n_alarm_hours
     FROM sig GROUP BY event_type
     """,
-    tags=["M-ext", "monitoring", "cusum", "extension"],
 )
 def cusum_control_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-sided CUSUM control chart (Page 1954) on the hourly revenue
@@ -2414,7 +2384,6 @@ _MASE_SEASON = 24
            floor(sum(e24) * 1e6 / sum(e1)) / 1e6 AS mase
     FROM err GROUP BY event_type
     """,
-    tags=["M-ext", "forecasting", "mase", "extension"],
 )
 def seasonal_naive_mase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seasonal-naive forecast-error baseline (the MASE denominator
@@ -2678,7 +2647,6 @@ def _mkv_sq_sql(k: int) -> str:
     FROM pi JOIN emp ON emp.state = pi.state CROSS JOIN tote
     """
     ),
-    tags=["sequence", "markov", "iterative", "extension"],
 )
 def event_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stationary distribution of the per-user event-type Markov chain —
@@ -2810,7 +2778,6 @@ _TSB_MIN_SEG = 24  # each segment must hold >= one day of hours
                  / (b.sse2 / (b.n - 4.0::DOUBLE)), 6) AS chow_f
     FROM best b JOIN pooled p ON p.event_type = b.event_type
     """,
-    tags=["M-ext", "changepoint", "chow", "extension"],
 )
 def two_segment_trend_break(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Best two-segment linear-trend split of the hourly count series
@@ -2970,7 +2937,6 @@ def two_segment_trend_break(spark: SparkSession, sf_dir: str) -> DataFrame:
                    AND r.consequent = s.antecedent
     CROSS JOIN nu
     """,
-    tags=["sequence", "pattern-mining", "extension"],
 )
 def followed_by_support(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sequential "A followed by B" pattern support (the 2-item core of
@@ -3119,7 +3085,6 @@ def _amk_round_sql(k: int) -> str:
     FROM s{_AMK_DOUBLINGS} s JOIN tail t ON t.i = s.i
     """
     ),
-    tags=["sequence", "markov", "absorbing", "iterative", "extension"],
 )
 def absorbing_markov_visits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Expected visits to each transient event type before PURCHASE
@@ -3271,7 +3236,6 @@ _SES_ALPHA = 0.2
              AS theta_forecast
     FROM fit
     """,
-    tags=["series", "forecast", "theta", "extension"],
 )
 def ses_theta_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-step Theta-method forecast of the hourly event-count series
@@ -3468,7 +3432,6 @@ def _mra_sq_sql(v: str, k: int) -> str:
     FROM eff, tot
     """
     ),
-    tags=["sequence", "markov", "attribution", "iterative", "extension"],
 )
 def markov_removal_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Markov removal-effect multi-touch attribution (Anderl et al.
@@ -3683,7 +3646,6 @@ _SD_HALF = 12  # centered 25-hour moving-average trend window
            round(p.amplitude, 6) AS amplitude
     FROM mo m JOIN pk p ON p.event_type = m.event_type
     """,
-    tags=["series", "decomposition", "seasonality", "extension"],
 )
 def seasonal_decompose_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Classical moving-average seasonal decomposition of the hourly
@@ -3862,7 +3824,6 @@ def _hw_level_sql(level: int) -> str:
     FROM eng e JOIN tot t ON t.event_type = e.event_type
     """
     ),
-    tags=["series", "wavelet", "multiscale", "extension"],
 )
 def haar_wavelet_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Haar wavelet energy decomposition of the hourly event-count
@@ -3994,7 +3955,6 @@ _PIN_SEASON = 24
            (num * 1000000 // (10 * n)) / 1e6 AS pinball_loss
     FROM l
     """,
-    tags=["series", "forecast-eval", "pinball", "extension"],
 )
 def pinball_loss_forecast_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pinball (quantile) loss of the seasonal-naive hourly forecast at
@@ -4086,7 +4046,6 @@ def pinball_loss_forecast_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM all_props
     GROUP BY event_type
     """,
-    tags=["F8", "json", "variant", "spark4"],
 )
 def event_props_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark 4 VARIANT path for semi-structured data: try_parse_json

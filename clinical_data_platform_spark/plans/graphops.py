@@ -89,7 +89,6 @@ def _iter_sql(k: int) -> str:
     FROM it{_PR_ITERS}
     """
     ),
-    tags=["graph", "iterative", "pagerank"],
 )
 def nation_trade_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted PageRank over nation-to-nation trade, 5 iterations.
@@ -257,7 +256,6 @@ _TRI_EDGES_SQL = """
     FROM pern GROUP BY nation
     """
     ),
-    tags=["graph", "triangle", "motif"],
 )
 def trade_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Triangle counting on the heavy-trade graph — the classic
@@ -351,7 +349,6 @@ def trade_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT cast(node AS BIGINT) AS node, cast(depth AS BIGINT) AS depth
     FROM lv
     """,
-    tags=["graph", "hierarchy", "pointer-jumping"],
 )
 def customer_hierarchy_depths(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hierarchy flattening by POINTER JUMPING (Wyllie 1979) — the
@@ -461,7 +458,6 @@ def _lp_iter_sql(k: int) -> str:
     FROM lp{_LP_ITERS} f GROUP BY f.label
     """
     ),
-    tags=["graph", "community", "label-propagation"],
 )
 def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Community detection by synchronous label propagation (Raghavan et
@@ -577,7 +573,6 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
              AS subtree_value_cents
     FROM nodes n LEFT JOIN roll r ON r.node = n.node
     """,
-    tags=["graph", "hierarchy", "closure"],
 )
 def subtree_value_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Subtree aggregation over the implicit customer hierarchy
@@ -724,7 +719,6 @@ def _kcore_oracle() -> str:
 @query(
     "trade_kcore_peeling",
     oracle=_kcore_oracle(),
-    tags=["graph", "kcore", "iterative"],
 )
 def trade_kcore_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K-core decomposition (Seidman 1983) of the thresholded
@@ -906,7 +900,6 @@ def _hits_iter_sql(k: int) -> str:
       ON h{_HITS_ITERS}.node = a{_HITS_ITERS}.node
     """
     ),
-    tags=["graph", "iterative", "extension"],
 )
 def trade_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HITS hubs and authorities (Kleinberg 1999) over the weighted
@@ -1016,7 +1009,6 @@ def trade_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     LIMIT 10
     """
     ),
-    tags=["graph", "link-prediction", "extension"],
 )
 def trade_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Link prediction by neighbor-set Jaccard (Liben-Nowell & Kleinberg
@@ -1147,7 +1139,6 @@ def trade_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM s
     """
     ),
-    tags=["graph", "assortativity", "extension"],
 )
 def trade_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degree assortativity (Newman 2002) of the thresholded trade
@@ -1281,7 +1272,6 @@ def trade_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM terms
     """
     ),
-    tags=["graph", "community", "modularity"],
 )
 def lp_community_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Newman-Girvan modularity Q of the label-propagation partition —
@@ -1436,7 +1426,6 @@ def _ppr_iter_sql(k: int) -> str:
     FROM pp{_PR_ITERS}
     """
     ),
-    tags=["graph", "iterative", "pagerank", "extension"],
 )
 def personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Personalized PageRank (the random-walk-with-restart kernel behind
@@ -1592,7 +1581,6 @@ def _bt_iter_sql(k: int) -> str:
     LEFT JOIN ltot l ON l.node = b.node
     """
     ),
-    tags=["graph", "iterative", "bradley-terry", "extension"],
 )
 def bradley_terry_trade_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bradley-Terry pairwise-strength model (Bradley & Terry 1952) via
@@ -1763,7 +1751,6 @@ def _cc_iter_sql(k: int) -> str:
     GROUP BY 1
     """
     ),
-    tags=["graph", "apsp", "centrality", "extension"],
 )
 def nation_closeness_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Closeness + harmonic centrality and eccentricity of every nation

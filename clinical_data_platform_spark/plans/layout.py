@@ -72,7 +72,6 @@ _BIN_TARGET = 4096  # compaction target size (units = event rows)
     FROM files
     GROUP BY layout
     """,
-    tags=["layout", "zone-map", "extension"],
 )
 def zone_map_skipping_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zone-map (min/max file stats) effectiveness audit: the same
@@ -163,7 +162,6 @@ def zone_map_skipping_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM binned
     GROUP BY bin_id
     """,
-    tags=["layout", "compaction", "extension"],
 )
 def compaction_bin_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Small-file compaction plan: per-(day, event_type) event counts
@@ -295,7 +293,6 @@ def _z_interleave_col(x, y):
     FROM flagged
     GROUP BY layout
     """,
-    tags=["layout", "zorder", "zone-map", "extension"],
 )
 def zorder_layout_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order (Morton-curve) clustering audit — zone_map_skipping_audit's
@@ -453,7 +450,6 @@ def _hrw_sql(k: int) -> str:
            floor(max_shard * 1e6 / n_users) / 1e6 AS max_shard_share
     FROM m
     """,
-    tags=["layout", "sharding", "consistent-hashing", "extension"],
 )
 def shard_rebalance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Consistent hashing measured (the argument, not the folklore):
@@ -604,7 +600,6 @@ _ENC_FILE_ROWS = 5000  # arrival "file" slice for per-file run detection
              / 1e6 AS sorted_ratio
     FROM enc
     """,
-    tags=["layout", "encoding", "storage", "extension"],
 )
 def columnar_encoding_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """What-if audit of columnar encodings per orders column: PLAIN

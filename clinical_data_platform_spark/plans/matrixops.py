@@ -51,7 +51,6 @@ _JL_SCALE = 0.25  # 1 / sqrt(_JL_DIM)
     FROM x a JOIN x b ON a.vec_id = b.vec_id AND a.i <= b.i
     GROUP BY 1, 2
     """,
-    tags=["linalg", "pca", "llm-pipeline"],
 )
 def embedding_covariance_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Population covariance of the 64-dim embedding column, upper
@@ -118,7 +117,6 @@ _JL_SGN_SQL = (
     FROM p a JOIN p b ON b.vec_id = a.vec_id + 1
     WHERE a.vec_id % 2 = 0
     """,
-    tags=["linalg", "jl-projection", "llm-pipeline"],
 )
 def jl_projection_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JL sign projection 64 -> 16 with a per-pair distance-distortion
@@ -239,7 +237,6 @@ def _pca_sq_sql(k: int) -> str:
     FROM v, lam
     """
     ),
-    tags=["linalg", "pca", "iterative", "extension"],
 )
 def pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dominant principal component of the embedding covariance by

@@ -238,7 +238,6 @@ def _adc_col(lut: list[list[float]]):
     FROM pq_codes WHERE rn = 1
     GROUP BY m
     """,
-    tags=["vector", "quantization", "llm-pipeline"],
 )
 def pq_encode_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ encode + distortion audit: quantize every corpus vector to M=8
@@ -283,7 +282,6 @@ def pq_encode_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM pq_adc a JOIN pq_exact x ON a.vec_id = x.vec_id
     ORDER BY a.adc_raw, a.vec_id LIMIT 10
     """,
-    tags=["vector", "quantization", "similarity", "llm-pipeline"],
 )
 def pq_adc_topk_vec0(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ADC top-k: scan the PQ-encoded corpus with the query's M x K
@@ -349,7 +347,6 @@ def pq_adc_topk_vec0(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN pq_adc d ON d.vec_id = s.vec_id
     ORDER BY d.adc_raw, s.vec_id LIMIT 10
     """,
-    tags=["vector", "quantization", "similarity", "clustering", "llm-pipeline"],
 )
 def ivf_pq_ann_topk_vec0(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ — the canonical billion-scale ANN layout (FAISS IVFPQ):
@@ -441,7 +438,6 @@ def ivf_pq_ann_topk_vec0(spark: SparkSession, sf_dir: str) -> DataFrame:
     LEFT JOIN adc_top a ON a.vec_id = x.vec_id AND a.rn <= 10
     WHERE x.rn <= 10
     """,
-    tags=["vector", "quantization", "similarity", "audit", "llm-pipeline"],
 )
 def pq_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ quality read-off in one row: of the exact top-10, how many
@@ -630,7 +626,6 @@ _RPQ_CTE = f"""
     FROM rpq_adc
     ORDER BY radc_raw, vec_id LIMIT 10
     """,
-    tags=["vector", "quantization", "similarity", "clustering", "llm-pipeline"],
 )
 def ivf_pq_residual_topk_vec0(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RESIDUAL IVF-PQ — the actual FAISS IVFPQ encoding (Jégou et al.

@@ -23,17 +23,15 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
-TAGS: dict[str, list[str]] = {}
 
 
-def query(name: str, oracle: str | None = None, tags: list[str] | None = None):
+def query(name: str, oracle: str | None = None):
     def deco(fn: QueryFn) -> QueryFn:
         if name in QUERIES:
             raise ValueError(f"duplicate query name {name!r}")
         QUERIES[name] = fn
         if oracle is not None:
             ORACLES[name] = oracle
-        TAGS[name] = tags or []
         return fn
 
     return deco

@@ -46,7 +46,6 @@ def _revenue():
     WHERE l_shipdate <= TIMESTAMP '2000-12-01'
     GROUP BY l_returnflag, l_linestatus
     """,
-    tags=["A1", "A3", "A12", "tpch"],
 )
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1 shape: filter -> multi-agg groupBy (partial/final hash agg).
@@ -81,7 +80,6 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
     GROUP BY o.o_orderpriority
     """,
-    tags=["A2", "J1"],
 )
 def filtered_rate_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Filtered-aggregation rate, the reference's core analytics shape
@@ -114,7 +112,6 @@ def filtered_rate_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem
     GROUP BY l_returnflag
     """,
-    tags=["A3"],
 )
 def multi_stat_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """AVG/STDDEV/COUNT battery (analytics/queries.py:58-67). DuckDB STDDEV
@@ -145,7 +142,6 @@ def multi_stat_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders
     GROUP BY o_orderstatus
     """,
-    tags=["A4", "A5", "F1"],
 )
 def conditional_sum_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conditional-sum battery + severity-rank max + COUNT(DISTINCT), the
@@ -181,7 +177,6 @@ def conditional_sum_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem
     GROUP BY l_returnflag
     """,
-    tags=["A5"],
 )
 def distinct_counts_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """COUNT(DISTINCT ...) (int_subject_summary.sql:27-38). Spark expands
@@ -207,7 +202,6 @@ def distinct_counts_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders
     GROUP BY o_orderpriority
     """,
-    tags=["A6"],
 )
 def median_price_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact interpolated percentile (dim_study_overview.sql:28 uses
@@ -235,7 +229,6 @@ def median_price_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM customer
     GROUP BY c_mktsegment
     """,
-    tags=["A7"],
 )
 def acctbal_stats_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """round(avg)/min/max (dim_study_overview.sql:26-29)."""
@@ -260,7 +253,6 @@ def acctbal_stats_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM part
     GROUP BY p_type
     """,
-    tags=["A8"],
 )
 def brands_by_type_string_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct string aggregation, canonicalized by sorting on BOTH engines
@@ -294,7 +286,6 @@ def brands_by_type_string_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN region r ON n.n_regionkey = r.r_regionkey
     GROUP BY r.r_name
     """,
-    tags=["A9", "J1", "J6"],
 )
 def region_overview_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whole-corpus rollup to one row per region (dim_study_overview.sql
@@ -327,7 +318,6 @@ def region_overview_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT event_type, count(*) AS n, round(sum(value), 2) AS total_value
     FROM events GROUP BY event_type
     """,
-    tags=["A10"],
 )
 def event_type_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """value_counts() shape (ui/dashboard.py:223-268)."""
@@ -353,7 +343,6 @@ def event_type_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders
     GROUP BY 1
     """,
-    tags=["A11", "F1"],
 )
 def price_bucket_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binning + count (pd.cut shape, ui/dashboard.py:262-268) as a when()
@@ -386,7 +375,6 @@ def price_bucket_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     GROUP BY user_id
     """,
-    tags=["A10", "pivot"],
 )
 def pivot_user_event_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot / crosstab (df.stat.crosstab shape, analytics/stats_utils.py:26-41)
@@ -424,7 +412,6 @@ def pivot_user_event_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY revenue DESC, l.l_orderkey
     LIMIT 10
     """,
-    tags=["J1", "O1", "O3", "tpch"],
 )
 def q3_unshipped_revenue_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3 shape: selective dim filter -> fact joins -> agg -> top-k.
@@ -465,7 +452,6 @@ def q3_unshipped_revenue_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND o.o_orderdate <  TIMESTAMP '1998-01-01'
     GROUP BY n.n_name
     """,
-    tags=["J1", "J2", "J6", "tpch"],
 )
 def q5_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5 shape: 6-way join with a compound join condition
@@ -512,7 +498,6 @@ def q5_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     LEFT JOIN ord ON ord.o_custkey = c.c_custkey
     LEFT JOIN li  ON li.o_custkey  = c.c_custkey
     """,
-    tags=["J3", "J4", "F2", "M3"],
 )
 def customer_order_fanin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-join fan-in of aggregated facts onto a dim with coalesce-to-zero
@@ -554,7 +539,6 @@ def customer_order_fanin(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders o
     WHERE NOT EXISTS (SELECT 1 FROM customer c WHERE c.c_custkey = o.o_custkey)
     """,
-    tags=["J5", "V8"],
 )
 def orphan_orders_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Referential-integrity probe as a left-anti join (dbt relationships
@@ -574,7 +558,6 @@ def orphan_orders_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM customer c
     WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
     """,
-    tags=["J5"],
 )
 def active_customers_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-semi join (FK containment probe, test_public_cdm_smoke.py:101-103)."""
@@ -599,7 +582,6 @@ def active_customers_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS running_cnt
     FROM events
     """,
-    tags=["W1"],
 )
 def running_event_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cumulative count per entity (sql/performance_examples.sql:8-11).
@@ -623,7 +605,6 @@ def running_event_count(spark: SparkSession, sf_dir: str) -> DataFrame:
            c_custkey, c_name
     FROM customer
     """,
-    tags=["W2"],
 )
 def customer_surrogate_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROW_NUMBER surrogate key with an imposed deterministic order —
@@ -647,7 +628,6 @@ def customer_surrogate_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM customer
     GROUP BY c_mktsegment, c_nationkey
     """,
-    tags=["W3"],
 )
 def segment_nation_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ratio-to-group: window over an aggregate (warehouse_ddl.sql:247)."""
@@ -674,7 +654,6 @@ def segment_nation_share(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS customer_hk
     FROM customer
     """,
-    tags=["W4", "F6"],
 )
 def hash_surrogate_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic hash surrogate key (dbt_utils.generate_surrogate_key,
@@ -712,7 +691,6 @@ def hash_surrogate_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY o_orderpriority
     ORDER BY sort_rank
     """,
-    tags=["O1", "O2", "F1"],
 )
 def priority_custom_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CASE-rank custom sort key (quality-tier ordering, warehouse_ddl.sql:262-268)."""
@@ -734,7 +712,6 @@ def priority_custom_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "distinct_segment_nation",
     oracle="SELECT DISTINCT c_mktsegment, c_nationkey FROM customer",
-    tags=["O4"],
 )
 def distinct_segment_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DISTINCT projection (stg_subjects.sql:5-11)."""
@@ -752,7 +729,6 @@ def distinct_segment_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     GROUP BY slice
     """,
-    tags=["O5"],
 )
 def union_all_flag_slices(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNION ALL of two filtered slices then aggregate (chunk-concat shape,
@@ -780,7 +756,6 @@ def union_all_flag_slices(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT o_orderkey, o_custkey, o_orderstatus
     FROM orders ORDER BY o_orderkey OFFSET 100 LIMIT 50
     """,
-    tags=["P6", "O3"],
 )
 def orders_page_2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Offset+limit pagination over a deterministic order (api/endpoints.py:
@@ -811,7 +786,6 @@ def orders_page_2(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM customer
     GROUP BY 1
     """,
-    tags=["F1"],
 )
 def acctbal_tier_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CASE-WHEN ladder (age_group, stg_demographics.sql:19-24)."""
@@ -845,7 +819,6 @@ def acctbal_tier_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
            substr(p_name, 1, 5)                                 AS name_prefix
     FROM part
     """,
-    tags=["F3", "P7"],
 )
 def part_string_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """String function battery: upper/lower/LIKE/rlike/concat_ws/lpad/
@@ -879,7 +852,6 @@ def part_string_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
            strftime(cast(o_orderdate AS DATE) + 30, '%Y-%m-%d') AS due_date
     FROM orders
     """,
-    tags=["F4"],
 )
 def order_date_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Date battery: year/month/day-of-month extraction, date_diff,
@@ -913,7 +885,6 @@ def order_date_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(pow(c_acctbal / 1000.0, 2), 6) AS bal_sq
     FROM customer
     """,
-    tags=["F5", "M6"],
 )
 def customer_risk_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Closed-form logistic scoring with confidence tiers on |z|
@@ -940,7 +911,6 @@ def customer_risk_score(spark: SparkSession, sf_dir: str) -> DataFrame:
            sha256('pepper-' || c_name)        AS name_sha256_salted
     FROM customer
     """,
-    tags=["F6"],
 )
 def customer_tokenization(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Salted-hash PII tokenization (security/phi_redaction.py:10-15):
@@ -970,7 +940,6 @@ def customer_tokenization(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND l_discount BETWEEN 0.03 AND 0.07
       AND l_quantity < 24
     """,
-    tags=["tpch", "A12"],
 )
 def q6_revenue_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q6 shape: pure scan-filter-aggregate — the pushdown showcase
@@ -1003,7 +972,6 @@ def q6_revenue_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem
     GROUP BY l_returnflag
     """,
-    tags=["A3", "stats"],
 )
 def corr_quantity_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pearson correlation + sample covariance per group (both engines use
@@ -1033,7 +1001,6 @@ def corr_quantity_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id),
            v AS (PARTITION BY user_id ORDER BY value DESC, event_id)
     """,
-    tags=["window", "lag-lead"],
 )
 def event_lag_lead_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """lag/lead/rank/ntile battery (beyond the reference's window usage;
@@ -1057,7 +1024,6 @@ def event_lag_lead_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     UNION ALL
     SELECT p_partkey, 'retailprice' AS metric, p_retailprice AS value FROM part
     """,
-    tags=["unpivot"],
 )
 def unpivot_part_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unpivot (melt) wide metrics to long form — Spark's native unpivot
@@ -1076,7 +1042,6 @@ def unpivot_part_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT o_orderstatus, count(*) AS n, round(sum(o_totalprice), 2) AS total
     FROM orders GROUP BY o_orderstatus
     """,
-    tags=["sql-api"],
 )
 def sql_api_status_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The spark.sql() surface over registered temp views (SURVEY §3.2:
@@ -1112,7 +1077,6 @@ def sql_api_status_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     GROUP BY supp_nation, cust_nation, l_year
     """,
-    tags=["tpch", "J1", "J2"],
 )
 def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q7 shape: bilateral trade volume by year — disjunctive
@@ -1164,7 +1128,6 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY revenue DESC, c.c_custkey
     LIMIT 20
     """,
-    tags=["tpch", "J1", "O1", "O3"],
 )
 def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q10 shape: returned-item revenue ranking — selective fact
@@ -1202,7 +1165,6 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     GROUP BY c_count
     """,
-    tags=["tpch", "J3", "A10"],
 )
 def q13_customer_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q13 shape: left-outer join preserving zero-order customers,
@@ -1229,7 +1191,6 @@ def q13_customer_order_distribution(spark: SparkSession, sf_dir: str) -> DataFra
       FROM lineitem
     ) WHERE rn = 1
     """,
-    tags=["tpch", "argmin", "W2"],
 )
 def cheapest_supplier_per_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q2's argmin shape: the row achieving the per-group minimum
@@ -1262,7 +1223,6 @@ def cheapest_supplier_per_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) p ON l.l_partkey = p.l_partkey
     WHERE l.l_quantity < p.half_avg_qty
     """,
-    tags=["tpch", "subquery"],
 )
 def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q17 shape: correlated scalar subquery (per-part average
@@ -1295,7 +1255,6 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE l.l_shipdate >= TIMESTAMP '1997-01-01'
       AND l.l_shipdate <  TIMESTAMP '1997-04-01'
     """,
-    tags=["tpch", "A2"],
 )
 def q14_promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q14 shape: conditional-sum ratio over a broadcast dim join."""
@@ -1329,7 +1288,6 @@ def q14_promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
        OR (p.p_type = 'ECONOMY' AND p.p_size BETWEEN 1 AND 35
            AND l.l_quantity >= 10 AND l.l_quantity <= 50)
     """,
-    tags=["tpch", "P3", "P4"],
 )
 def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q19 shape: three-way disjunctive compound predicate across
@@ -1371,7 +1329,6 @@ def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM cust_orders WHERE rn <= 2
     GROUP BY c_mktsegment
     """,
-    tags=["sql-api", "W1", "cte"],
 )
 def sql_api_window_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full SQL surface: CTE + window + join + agg through spark.sql —
@@ -1411,7 +1368,6 @@ def sql_api_window_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
       )
     GROUP BY o.o_orderpriority
     """,
-    tags=["tpch", "J5"],
 )
 def q4_order_priority_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q4 shape: EXISTS with a correlated inequality — expressed as a
@@ -1446,7 +1402,6 @@ def q4_order_priority_check(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND l.l_shipdate <  TIMESTAMP '1998-01-01'
     GROUP BY l.l_linestatus
     """,
-    tags=["tpch", "A4"],
 )
 def q12_priority_shipmode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q12 shape: priority-bucketed conditional counts over a date
@@ -1482,7 +1437,6 @@ def q12_priority_shipmode(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM supplier s JOIN revenue r ON s.s_suppkey = r.supplier_no
     WHERE r.total_revenue = (SELECT max(total_revenue) FROM revenue)
     """,
-    tags=["tpch", "scalar-subquery"],
 )
 def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q15 shape: compare each group against a GLOBAL aggregate of
@@ -1522,7 +1476,6 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
                         AND o.o_totalprice > 300000)
     GROUP BY c.c_nationkey
     """,
-    tags=["tpch", "J5", "scalar-subquery"],
 )
 def q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q22 shape: scalar-subquery threshold (above-average balance)
@@ -1558,7 +1511,6 @@ def q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority),
                             (o_orderstatus), (o_orderpriority))
     """,
-    tags=["sql-api", "A9", "grouping-sets"],
 )
 def grouping_sets_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS (finer control than rollup/cube — the three
@@ -1601,7 +1553,6 @@ def grouping_sets_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders o JOIN q USING (o_orderpriority)
     GROUP BY 1
     """,
-    tags=["stats", "A6", "outliers"],
 )
 def iqr_outliers_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tukey-fence outlier counting per group: exact interpolated quartiles
@@ -1660,7 +1611,6 @@ def iqr_outliers_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM v
     GROUP BY seg, valid_from, valid_to, is_current
     """,
-    tags=["scd2", "warehouse", "S9"],
 )
 def scd2_customer_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Type-2 slowly-changing customer dimension driven through two
@@ -1747,7 +1697,6 @@ _SCD2_DEMO_DIM_SQL = """
           AND o.o_orderdate::TIMESTAMP < v.valid_to
     GROUP BY v.seg, year(o.o_orderdate)
     """,
-    tags=["scd2", "temporal-join", "feature-store"],
 )
 def pit_orders_segment_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Point-in-time dimension lookup — the feature-store correctness
@@ -1833,7 +1782,6 @@ _SNAPSHOT_B_SQL = """
            cast(sum(price_chg) AS BIGINT) AS n_price_changed
     FROM d GROUP BY status
     """,
-    tags=["cdc", "reconciliation", "warehouse"],
 )
 def snapshot_diff_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Snapshot reconciliation / CDC derivation: full-outer join two
@@ -1926,7 +1874,6 @@ def snapshot_diff_report(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(max(tw), 2) AS total_quantity
     FROM c GROUP BY l_returnflag
     """,
-    tags=["A6-ext", "weighted-median"],
 )
 def quantity_weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quantity-WEIGHTED median price per return flag — the median where
@@ -2041,7 +1988,6 @@ def quantity_weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFram
     SELECT brand_a, brand_b, n_both, n_a, n_b, cosine
     FROM sc ORDER BY cosine DESC, brand_a, brand_b LIMIT 20
     """,
-    tags=["recsys", "similarity", "extension"],
 )
 def item_item_cosine_recs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Item-item collaborative filtering over the binary customer-brand
@@ -2155,7 +2101,6 @@ def item_item_cosine_recs(spark: SparkSession, sf_dir: str) -> DataFrame:
                       ELSE 0.0::DOUBLE END, 2) AS mix_effect
     FROM w
     """,
-    tags=["olap", "decomposition", "extension"],
 )
 def revenue_mix_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Price/volume/mix decomposition of the period-over-period revenue
@@ -2259,7 +2204,6 @@ def revenue_mix_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
                 OVER (ORDER BY day) AS BIGINT) AS open_orders
     FROM merged
     """,
-    tags=["interval", "sweep-line", "extension"],
 )
 def daily_open_orders_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interval-concurrency curve by the sweep-line / event-boundary
@@ -2405,7 +2349,6 @@ _IDCG = {1: "1.0", 2: "1.6309297535714574", 3: "2.1309297535714574"}
                  / count(*)::DOUBLE * 1e6) / 1e6 AS ndcg_at_3
     FROM per_eval GROUP BY anchor
     """,
-    tags=["recsys", "evaluation", "ml"],
 )
 def rec_eval_precision_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Offline recommender evaluation with a real train/test protocol:
@@ -2587,7 +2530,6 @@ _NV_CRITICAL = 0.8  # critical ratio cu/(cu+co)
     WHERE r.rn = least(cast(ceil({_NV_CRITICAL}::DOUBLE * (tot.n_days + 1))
                             AS BIGINT), tot.n_days)
     """,
-    tags=["operations", "newsvendor", "extension"],
 )
 def newsvendor_stock_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Newsvendor order-up-to levels per brand: the profit-maximizing
@@ -2659,7 +2601,6 @@ def newsvendor_stock_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
       ORDER BY c_acctbal DESC, c_custkey LIMIT 2
     ) t
     """,
-    tags=["sql-api", "J1", "W2"],
 )
 def sql_api_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LATERAL correlated subquery with ORDER BY + LIMIT — the SAME SQL
@@ -2691,7 +2632,6 @@ def sql_api_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(sum(CASE WHEN o_orderstatus = 'P' THEN o_totalprice END), 2) AS p
     FROM orders GROUP BY o_orderpriority
     """,
-    tags=["sql-api", "A4"],
 )
 def sql_api_pivot_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL PIVOT syntax (parser surface; the DataFrame twin is
@@ -2720,7 +2660,6 @@ def sql_api_pivot_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders WHERE o_totalprice > 400000.0
     GROUP BY o_orderpriority
     """,
-    tags=["sql-api", "P6"],
 )
 def sql_api_parameterized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Named-parameter SQL (spark.sql(query, args=...)): the binding
@@ -2762,7 +2701,6 @@ _RECURSIVE_DEPTHS_SQL = """
 @query(
     "sql_api_recursive_cte",
     oracle=_RECURSIVE_DEPTHS_SQL,
-    tags=["sql-api", "graph", "recursive-cte"],
 )
 def sql_api_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WITH RECURSIVE in spark.sql (Spark 4 recursive CTEs) — the SAME
@@ -2793,7 +2731,6 @@ _GROUP_BY_ALL_SQL = """
 @query(
     "sql_api_group_by_all",
     oracle=_GROUP_BY_ALL_SQL,
-    tags=["sql-api", "A1"],
 )
 def sql_api_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUP BY ALL (the DuckDB-originated shorthand, adopted by Spark

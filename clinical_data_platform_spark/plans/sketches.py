@@ -88,7 +88,6 @@ def _bucket(col: F.Column, i: F.Column) -> F.Column:
     FROM eb JOIN sk ON sk.i = eb.i AND sk.bucket = eb.bucket
     GROUP BY eb.tok, eb.exact_cnt
     """,
-    tags=["sketch", "text", "llm-pipeline"],
 )
 def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-Min Sketch term-frequency estimates for the exact top-20
@@ -167,7 +166,6 @@ _HEX8_SQL = (
           FROM k)
     WHERE rn <= {_RES_K}
     """,
-    tags=["sampling", "llm-pipeline"],
 )
 def weighted_reservoir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Efraimidis–Spirakis A-Res: a 5-doc length-weighted sample per
@@ -246,7 +244,6 @@ _HLL_RHO_SQL = "CASE WHEN {w} = 0 THEN 27 ELSE 27 - length(bin({w})) END"
                  END, 4) AS hll_estimate
     FROM ex JOIN agg a ON a.event_type = ex.event_type
     """,
-    tags=["sketch", "approx", "llm-pipeline"],
 )
 def hll_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct users per event type via a fully-declarative 64-register
@@ -387,7 +384,6 @@ def _hll_est_sql(rel: str, group_cols: str) -> str:
     JOIN est eb ON eb.event_type = x.type_b
     JOIN pest pe ON pe.type_a = x.type_a AND pe.type_b = x.type_b
     """,
-    tags=["sketch", "approx", "set-algebra"],
 )
 def hll_user_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audience overlap between every pair of event types, estimated by
@@ -567,7 +563,6 @@ def dds_quantiles_from_bins(
            )}
     FROM sk JOIN ex ON ex.lang = sk.lang
     """,
-    tags=["sketch", "approx", "quantile"],
 )
 def ddsketch_doc_length_quantiles(
     spark: SparkSession, sf_dir: str
@@ -646,7 +641,6 @@ def ddsketch_doc_length_quantiles(
     SELECT e.day, x.exact_cum, round(e.e, 4) AS hll_cumulative
     FROM est e JOIN ex x USING (day)
     """,
-    tags=["sketch", "approx", "time-series"],
 )
 def hll_daily_cumulative_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cumulative distinct users per day from DAILY HLL sketches — the
@@ -731,7 +725,6 @@ def hll_daily_cumulative_users(spark: SparkSession, sf_dir: str) -> DataFrame:
                  / exact_join_size::DOUBLE * 1e6) / 1e6 AS rel_overcount
     FROM exact, est
     """,
-    tags=["sketch", "approx", "cbo", "join-size"],
 )
 def join_size_cms_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Join-size estimation by sketch inner product (AMS via Count-Min,
@@ -825,7 +818,6 @@ def join_size_cms_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(e.e, 4) AS wau_hll
     FROM est e JOIN exact x USING (day)
     """,
-    tags=["sketch", "approx", "time-series", "wau"],
 )
 def rolling_7day_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling 7-day active users (the WAU curve) two ways: the exact

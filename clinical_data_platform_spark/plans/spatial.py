@@ -53,7 +53,6 @@ _HEX5_SQL = (
     WHERE (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y)
           <= {_R} * {_R}
     """,
-    tags=["spatial", "grid-join", "extension"],
 )
 def spatial_grid_neighbor_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All point pairs within radius 8192 on the 2^20 integer grid
@@ -208,7 +207,6 @@ def _dbscan_oracle() -> str:
 @query(
     "dbscan_grid_clusters",
     oracle=_dbscan_oracle(),
-    tags=["spatial", "clustering", "iterative", "extension"],
 )
 def dbscan_grid_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DBSCAN (Ester et al. 1996) as a fully-distributed composition:

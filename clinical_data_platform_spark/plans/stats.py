@@ -75,7 +75,7 @@ FROM z
 """.format(p_sql=NORMAL_SF_SQL.format(z="z_raw"))
 
 
-@query("welch_ttest_totalprice", oracle=_WELCH_ORACLE, tags=["M1"])
+@query("welch_ttest_totalprice", oracle=_WELCH_ORACLE)
 def welch_ttest_totalprice(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Welch's t-test: o_totalprice of finished vs open orders
     (stats_utils.py:9-23 semantics, distributed sufficient statistics)."""
@@ -84,7 +84,7 @@ def welch_ttest_totalprice(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("chi_square_event_value", oracle=_CHI2_ORACLE, tags=["M2"])
+@query("chi_square_event_value", oracle=_CHI2_ORACLE)
 def chi_square_event_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pearson chi-square of event_type x (value > 50) with Wilson–Hilferty
     p-value (stats_utils.py:26-41 semantics)."""
@@ -119,7 +119,7 @@ ORDER BY compound_id
 """
 
 
-@query("ic50_dose_response_fits", oracle=_IC50_ORACLE, tags=["M8"])
+@query("ic50_dose_response_fits", oracle=_IC50_ORACLE)
 def ic50_dose_response_fits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-compound 4-parameter-logistic IC50 fits over a deterministic
     64-compound screen; truth ic50 = 5*(id+1), hill = 0.8 + 0.025*id,
@@ -188,7 +188,7 @@ FROM a
 """
 
 
-@query("ols_trend_by_event_type", oracle=_OLS_ORACLE, tags=["M-ext", "ols"])
+@query("ols_trend_by_event_type", oracle=_OLS_ORACLE)
 def ols_trend_by_event_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Closed-form per-group OLS: slope/intercept/R^2 of event value over
     time (days since the dataset epoch) — the one-pass sufficient-
@@ -254,7 +254,7 @@ GROUP BY 1
 """
 
 
-@query("value_outliers_mad", oracle=_MAD_ORACLE, tags=["M-ext", "robust"])
+@query("value_outliers_mad", oracle=_MAD_ORACLE)
 def value_outliers_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Robust per-group outlier detection via median/MAD (the
     Iglewicz-Hoban modified z-score, |0.6745*(x-med)/MAD| > 3.5):
@@ -346,7 +346,7 @@ FROM t GROUP BY event_type
 """
 
 
-@query("value_psi_weekly", oracle=_PSI_ORACLE, tags=["monitoring", "psi"])
+@query("value_psi_weekly", oracle=_PSI_ORACLE)
 def value_psi_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Population Stability Index between two reference weeks of the
     value distribution, per event type — THE production model-monitoring
@@ -436,7 +436,7 @@ FROM w GROUP BY event_type
 """
 
 
-@query("value_winsorized_stats", oracle=_WINSOR_ORACLE, tags=["M-ext", "robust"])
+@query("value_winsorized_stats", oracle=_WINSOR_ORACLE)
 def value_winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winsorization audit — the feature-prep standard for taming heavy
     tails without dropping rows: clamp each group's values to its
@@ -521,7 +521,7 @@ def _ab_oracle() -> str:
     """
 
 
-@query("ab_test_two_proportion", oracle=_ab_oracle(), tags=["M-ext", "ab-test"])
+@query("ab_test_two_proportion", oracle=_ab_oracle())
 def ab_test_two_proportion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-proportion z-test on a deterministic 50/50 user split — the
     experimentation readout (completes the stats family next to Welch t
@@ -610,7 +610,7 @@ FROM c, t
 """
 
 
-@query("benford_first_digit_audit", oracle=_BENFORD_ORACLE, tags=["audit", "benford"])
+@query("benford_first_digit_audit", oracle=_BENFORD_ORACLE)
 def benford_first_digit_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benford's-law first-digit audit over the value column — the
     classic anomaly/fabrication screen for financial and metering data:
@@ -711,7 +711,6 @@ _POIS_CASE_SQL = (
     FROM r, base
     GROUP BY base.n_rows, base.mean_raw
     """,
-    tags=["bootstrap", "stats", "extension"],
 )
 def bootstrap_ci_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """95% bootstrap confidence interval for the mean order price via
@@ -834,7 +833,6 @@ def bootstrap_ci_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(mi.mi_nats / sqrt(hx.h * hy.h), 6) AS nmi
     FROM mi, hx, hy
     """,
-    tags=["mi", "feature-selection", "extension"],
 )
 def column_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mutual information (nats) between event type and the event's
@@ -955,7 +953,6 @@ def column_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM m GROUP BY treated
     ) t
     """,
-    tags=["causal", "experimentation", "extension"],
 )
 def did_revenue_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Difference-in-differences: the 2x2 panel estimator (treated =
@@ -1041,7 +1038,6 @@ def did_revenue_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
                  * 1e6) / 1e6 AS variance_reduction
     FROM t
     """,
-    tags=["experimentation", "variance-reduction", "extension"],
 )
 def cuped_adjusted_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUPED variance reduction (Deng et al. 2013) — the standard
@@ -1155,7 +1151,6 @@ _CONF_HEX6 = (
     JOIN q ON q.event_type = f.event_type
     JOIN ev e ON e.event_type = f.event_type
     """,
-    tags=["conformal", "uncertainty", "extension"],
 )
 def conformal_prediction_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Split-conformal prediction intervals (Vovk 2005 / Lei et al.
@@ -1307,7 +1302,6 @@ _NEYMAN_BUDGET = 1000
              AS var_term_neyman
     FROM t
     """,
-    tags=["sampling", "survey", "extension"],
 )
 def neyman_allocation_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Neyman-optimal stratified sampling allocation (Neyman 1934): for
@@ -1392,7 +1386,6 @@ def neyman_allocation_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(m.p0, 6) AS pooled_rate
     FROM g, m
     """,
-    tags=["empirical-bayes", "shrinkage", "extension"],
 )
 def eb_shrunk_nation_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Empirical-Bayes rate shrinkage: each nation's big-order rate
@@ -1483,7 +1476,6 @@ def eb_shrunk_nation_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS adj_resid
     FROM m
     """,
-    tags=["M2-ext", "diagnostics", "extension"],
 )
 def chi_square_cell_residuals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-cell diagnostics for the chi-square independence test
@@ -1566,7 +1558,6 @@ _QTE_HEX6 = (
                  - max(CASE WHEN arm = 0 THEN outcome END), 6) AS qte
     FROM pick GROUP BY q
     """,
-    tags=["causal", "quantile", "extension"],
 )
 def quantile_treatment_effects(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quantile treatment effects: the difference between treated and
@@ -1657,7 +1648,6 @@ def quantile_treatment_effects(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS selected
     FROM s
     """,
-    tags=["bandit", "experimentation", "extension"],
 )
 def ucb_arm_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UCB1 bandit readout (Auer et al. 2002): per-arm pull counts,
@@ -1735,7 +1725,6 @@ _RD_BW = 100000.0  # local-linear bandwidth
                  - max(icept) FILTER (side = 0) OVER (), 6) AS rd_effect
     FROM fit
     """,
-    tags=["causal", "regression-discontinuity", "extension"],
 )
 def rd_discontinuity_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sharp regression-discontinuity estimate (Thistlethwaite &
@@ -1821,7 +1810,6 @@ _Z_BETA = "0.8416212335729143"  # Phi^-1(0.80)
                      / pow(p1 - p0, 2)) AS BIGINT) AS n_per_arm
     FROM mde
     """,
-    tags=["experimentation", "power", "extension"],
 )
 def power_sample_size_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Experiment-design power calculation: per-arm sample size for a
@@ -1896,7 +1884,6 @@ def power_sample_size_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
                  / (n_pos * n_neg)) / 1e6 AS gini
     FROM agg
     """,
-    tags=["ml-eval", "auc", "extension"],
 )
 def distributed_auc_rank_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed AUC by the Mann-Whitney rank-sum identity: AUC =
@@ -2023,7 +2010,6 @@ _MLR_SOLVE_SQL = "SELECT *, " + ", ".join(_MLR_DETS) + " FROM s"
                  / (syy - sy * sy / n), 6) AS r2
     FROM c
     """,
-    tags=["M-ext", "ols", "ml"],
 )
 def order_price_multiple_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed multiple linear regression in closed form: order
@@ -2157,7 +2143,6 @@ def _gd_oracle() -> str:
 @query(
     "logreg_gd_trajectory",
     oracle=_gd_oracle(),
-    tags=["M-ext", "ml", "iterative"],
 )
 def logreg_gd_trajectory(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed logistic regression trained by FIXED-round full-batch
@@ -2307,7 +2292,6 @@ def logreg_gd_trajectory(spark: SparkSession, sf_dir: str) -> DataFrame:
            n_left, pos_left, gini_gain
     FROM r WHERE rk <= 3
     """,
-    tags=["M-ext", "ml", "tree"],
 )
 def gbdt_histogram_best_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Histogram-based best-split search — the inner loop of distributed
@@ -2493,7 +2477,6 @@ FROM s
 @query(
     "spearman_quantity_price",
     oracle=_SPEARMAN_ORACLE,
-    tags=["M-ext", "rank-stats", "robust"],
 )
 def spearman_quantity_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spearman rank correlation (with its Pearson contrast) between
@@ -2644,7 +2627,6 @@ FROM f
 @query(
     "ks_test_price_by_status",
     oracle=_KS_ORACLE,
-    tags=["M-ext", "distribution-test", "monitoring"],
 )
 def ks_test_price_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-sample Kolmogorov–Smirnov test on order total price between
@@ -2789,7 +2771,6 @@ FROM z
 @query(
     "anova_f_priority_price",
     oracle=_ANOVA_ORACLE,
-    tags=["M-ext", "anova", "experimentation"],
 )
 def anova_f_priority_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-way ANOVA of order total price (cents) across the five order
@@ -2916,7 +2897,6 @@ FROM adj
 @query(
     "bh_fdr_nation_price",
     oracle=_BH_ORACLE,
-    tags=["M-ext", "multiple-testing", "experimentation"],
 )
 def bh_fdr_nation_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benjamini–Hochberg FDR correction over a 25-way hypothesis
@@ -3057,7 +3037,6 @@ _Z975 = "1.959963984540054"  # Phi^-1(0.975), pinned literal on both engines
            round(auc + {_Z975} * sqrt(s10 / pp + s01 / nn), 6) AS ci_hi
     FROM stat
     """,
-    tags=["ml", "auc", "delong", "extension"],
 )
 def delong_auc_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DeLong's nonparametric AUC variance and 95% CI (DeLong, DeLong &
@@ -3169,7 +3148,6 @@ def delong_auc_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(__PSQL__, 6) AS p_value
     FROM s
     """.replace("__PSQL__", NORMAL_SF_SQL.format(z="z_raw")),
-    tags=["M-ext", "trend-test", "experimentation"],
 )
 def cochran_armitage_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cochran-Armitage test for trend (Cochran 1954, Armitage 1955) —
@@ -3267,7 +3245,6 @@ def cochran_armitage_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(__PSQL__, 6) AS poisson_p
     FROM s
     """.replace("__PSQL__", NORMAL_SF_SQL.format(z="zwh")),
-    tags=["M-ext", "count-model", "monitoring"],
 )
 def negbin_overdispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count overdispersion audit with a negative-binomial fallback fit:
@@ -3367,7 +3344,6 @@ def negbin_overdispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
                     * sqrt((n02 - t_y2)::DOUBLE)), 6) AS tau_b
     FROM s
     """,
-    tags=["M-ext", "rank-correlation", "kendall"],
 )
 def kendall_tau_quantity_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kendall's tau-b between line-item quantity and (1k-binned)
@@ -3521,7 +3497,6 @@ def kendall_tau_quantity_price(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ELSE 0.0::DOUBLE END AS i_squared
     FROM final
     """,
-    tags=["M-ext", "meta-analysis", "experimentation"],
 )
 def fixed_effect_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-effect (inverse-variance) meta-analysis with Cochran's Q
@@ -3677,7 +3652,6 @@ def fixed_effect_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(__PSQL__, 6) AS p_value
     FROM z
     """.replace("__PSQL__", NORMAL_SF_SQL.format(z="z_raw")),
-    tags=["time-series", "trend", "mann-kendall"],
 )
 def mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mann-Kendall monotone-trend test per event type on the hourly
@@ -3785,7 +3759,6 @@ def mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE rn IN ((np + 1) // 2, (np + 2) // 2)
     GROUP BY event_type
     """,
-    tags=["time-series", "robust", "theil-sen"],
 )
 def theil_sen_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Theil-Sen robust trend slope per event type — the median of all
@@ -3897,7 +3870,6 @@ def theil_sen_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS theil_within
     FROM tot, rowterm, betw
     """,
-    tags=["M-ext", "inequality", "economics"],
 )
 def theil_inequality_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Theil T inequality index with the between/within-nation
@@ -4001,7 +3973,6 @@ def theil_inequality_decomposition(spark: SparkSession, sf_dir: str) -> DataFram
     FROM rev JOIN tot USING (region)
     GROUP BY rev.region, tot.total
     """,
-    tags=["M-ext", "concentration", "economics"],
 )
 def hhi_market_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Herfindahl-Hirschman supplier-concentration index per region —
@@ -4092,7 +4063,6 @@ def hhi_market_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS cramers_v
     FROM chi
     """,
-    tags=["M-ext", "effect-size", "chi-square"],
 )
 def cramers_v_type_band(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cramer's V effect size for the event_type x value-band
@@ -4208,7 +4178,6 @@ def cramers_v_type_band(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(__PSQL__, 6) AS p_value
     FROM p
     """.replace("__PSQL__", NORMAL_SF_SQL.format(z="z_raw")),
-    tags=["M-ext", "epidemiology", "stratified"],
 )
 def mantel_haenszel_or(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mantel-Haenszel common odds ratio and the CMH chi-square (Mantel
@@ -4362,7 +4331,6 @@ _JK_BUCKETS = 20
              AS jackknife_se_dollars
     FROM tot, v
     """,
-    tags=["M-ext", "experimentation", "jackknife"],
 )
 def ratio_metric_jackknife(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Delete-one-bucket jackknife standard error for a RATIO metric
@@ -4478,7 +4446,6 @@ _HILL_K = 200  # tail order statistics used
              AS tail_index_alpha
     FROM terms
     """,
-    tags=["M-ext", "heavy-tail", "hill"],
 )
 def hill_tail_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hill (1975) estimator of the Pareto tail index of order values —
@@ -4568,7 +4535,6 @@ def hill_tail_index(spark: SparkSession, sf_dir: str) -> DataFrame:
            floor(num.w * 1e6 / (tot.n::HUGEINT * tot.s)) / 1e6 AS gini
     FROM tot, num
     """,
-    tags=["M-ext", "inequality", "gini"],
 )
 def exact_gini_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT Gini coefficient of order values — not the decile
@@ -4654,7 +4620,6 @@ def exact_gini_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(__PSQL__, 6) AS p_value
     FROM z
     """.replace("__PSQL__", NORMAL_SF_SQL.format(z="z_raw")),
-    tags=["M-ext", "rates", "monitoring"],
 )
 def poisson_rate_ratio_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Poisson rate-ratio test per event type between the corpus' two
@@ -4759,7 +4724,6 @@ def poisson_rate_ratio_test(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(__PSQL__, 6) AS p_value
     FROM (SELECT *, (r - er) / sqrt(vr) AS z_raw FROM z)
     """.replace("__PSQL__", NORMAL_SF_SQL.format(z="z_raw")),
-    tags=["M-ext", "randomness", "runs-test"],
 )
 def runs_test_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wald-Wolfowitz runs test per event type on the hourly revenue
@@ -4894,7 +4858,6 @@ def runs_test_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM terms t JOIN n USING (event_type)
     GROUP BY t.event_type, n.n1, n.n2
     """,
-    tags=["M-ext", "drift", "wasserstein"],
 )
 def wasserstein_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wasserstein-1 (earth-mover) distance between each event type's
@@ -5024,7 +4987,6 @@ def wasserstein_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(__PSQL__, 6) AS p_value
     FROM z
     """.replace("__PSQL__", NORMAL_SF_SQL.format(z="z_raw")),
-    tags=["time-series", "trend", "seasonal"],
 )
 def seasonal_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seasonal Mann-Kendall (Hirsch & Slack 1984) per event type: the
@@ -5151,7 +5113,6 @@ _GUMBEL_RETURN_T = 100  # return period in blocks (days)
              AS return_level_{_GUMBEL_RETURN_T}d
     FROM p
     """,
-    tags=["M-ext", "extreme-value", "gumbel"],
 )
 def gumbel_block_maxima(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gumbel extreme-value fit on daily block maxima per event type
@@ -5267,7 +5228,6 @@ _EV_Z = 1.959963984540054  # pinned literal, same as the Greenwood CI
         hex1="(strpos('0123456789abcdef',"
         " substr(md5(cast(user_id AS VARCHAR) || '|ab'), 1, 1)) - 1)"
     ),
-    tags=["M-ext", "causal", "sensitivity", "extension"],
 )
 def evalue_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E-value sensitivity analysis (VanderWeele & Ding 2017) for the
@@ -5431,7 +5391,6 @@ def evalue_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
                 END) AS odds_ratio
     FROM lp, obs
     """,
-    tags=["M-ext", "fisher-exact", "extension"],
 )
 def fisher_exact_supplier_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fisher's EXACT test on the 2x2 (region = EUROPE) x (negative
@@ -5657,7 +5616,6 @@ _INF_TOPK = 10
     ORDER BY r * r * h / (2.0::DOUBLE * (1.0::DOUBLE - h)) DESC, day ASC
     LIMIT {_INF_TOPK}
     """,
-    tags=["M-ext", "regression-diagnostics", "extension"],
 )
 def ols_influence_diagnostics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Leverage, (internally) studentized residuals, and Cook's distance
@@ -5844,7 +5802,6 @@ _NW_LAGS = 7  # Bartlett kernel bandwidth: one week of daily autocovariance
            round(f.bhat / sqrt(s.s2 / (f.sxx_c * f.sxx_c)), 4) AS t_nw
     FROM fit2 f, s
     """,
-    tags=["M-ext", "hac", "time-series", "extension"],
 )
 def newey_west_trend_se(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Newey-West (1987) HAC standard error for the daily-revenue OLS
@@ -6028,7 +5985,6 @@ def newey_west_trend_se(spark: SparkSession, sf_dir: str) -> DataFrame:
            (joint_lo * 1000000 // m) / 1e6 AS lambda_lower
     FROM j
     """,
-    tags=["M-ext", "copula", "tail-dependence", "extension"],
 )
 def tail_dependence_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Empirical upper/lower tail-dependence coefficients between daily
@@ -6184,7 +6140,6 @@ def tail_dependence_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(pearson, 6) AS pearson_r
     FROM v
     """,
-    tags=["M-ext", "dependence", "distance-correlation", "extension"],
 )
 def distance_correlation_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distance correlation (Szekely-Rizzo 2007) between daily order
@@ -6390,7 +6345,6 @@ def _esd_round_sql(r: int) -> str:
     FROM ({" UNION ALL ".join(f"SELECT * FROM pk{r}" for r in range(1, _ESD_ROUNDS + 1))})
     """
     ),
-    tags=["M-ext", "outliers", "esd", "extension"],
 )
 def generalized_esd_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Generalized ESD (Rosner 1983) outlier sweep over the daily
@@ -6538,7 +6492,6 @@ def _hub_round_sql(r: int) -> str:
     FROM mu{_HUB_ROUNDS}
     """
     ),
-    tags=["M-ext", "robust", "m-estimator", "iterative", "extension"],
 )
 def huber_robust_location(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Huber M-estimator of the per-priority order value: three IRLS
@@ -6720,7 +6673,6 @@ def _ada_round_sql(r: int) -> str:
     {" UNION ALL ".join(f"SELECT * FROM out{r}" for r in range(1, _ADA_ROUNDS + 1))}
     """
     ),
-    tags=["M-ext", "boosting", "supervised", "iterative", "extension"],
 )
 def adaboost_stumps_trajectory(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Three rounds of AdaBoost (Freund-Schapire) with decision stumps
@@ -6946,7 +6898,6 @@ _PERM_HEX6 = (
            ((c.n_ge + 1) * 1000000 // (c.n_reps + 1)) / 1e6 AS p_value
     FROM obs o, comp c
     """,
-    tags=["M-ext", "permutation-test", "inference", "extension"],
 )
 def permutation_test_price_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Randomization test for the F-vs-O order-status price difference:
@@ -7117,7 +7068,6 @@ _ECOD_TOPK = 10
     ORDER BY s_fp DESC, day ASC
     LIMIT {_ECOD_TOPK}
     """,
-    tags=["M-ext", "outliers", "ecod", "extension"],
 )
 def ecod_outlier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ECOD (Li et al. 2022) unsupervised outlier scores over the
@@ -7242,7 +7192,6 @@ def ecod_outlier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM ranked b, ranked s
     WHERE b.rk = 1 AND s.rk = 2
     """,
-    tags=["M-ext", "hoeffding", "streaming-ml", "extension"],
 )
 def hoeffding_split_confidence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Hoeffding-tree split decision (Domingos-Hulten VFDT 2000)
@@ -7377,7 +7326,6 @@ def hoeffding_split_confidence(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS atkinson_1
     FROM s
     """,
-    tags=["M-ext", "inequality", "atkinson", "extension"],
 )
 def atkinson_index_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Atkinson inequality index of order values per priority at
@@ -7523,7 +7471,6 @@ _RAN_HEX6 = (
                  / 100.0::DOUBLE, 4) AS refit_intercept_dollars
     FROM refit
     """,
-    tags=["M-ext", "ransac", "robust-regression", "extension"],
 )
 def ransac_trend_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RANSAC (Fischler-Bolles 1981) robust fit of the daily-revenue
@@ -7716,7 +7663,6 @@ _LOF_TOPK = 10
     ORDER BY l.lof_num DESC, l.ad ASC
     LIMIT {_LOF_TOPK}
     """,
-    tags=["M-ext", "outliers", "lof", "extension"],
 )
 def lof_daily_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Local Outlier Factor (Breunig 2000, k=5) over the rank-transformed
@@ -7889,7 +7835,6 @@ def lof_daily_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS return_level_10x_dollars
     FROM par
     """,
-    tags=["M-ext", "extreme-value", "gpd", "extension"],
 )
 def gpd_tail_fit_pwm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Peaks-over-threshold Generalized Pareto tail fit of daily
@@ -8008,7 +7953,6 @@ def gpd_tail_fit_pwm(spark: SparkSession, sf_dir: str) -> DataFrame:
             < 0.001::DOUBLE) AS srm_flag
     FROM c
     """,
-    tags=["M-ext", "experimentation", "srm", "extension"],
 )
 def srm_assignment_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sample-ratio-mismatch check on the md5 A/B bucketing that
@@ -8090,7 +8034,6 @@ def srm_assignment_check(spark: SparkSession, sf_dir: str) -> DataFrame:
                           / (2.0::DOUBLE * (n_a + n_b))), 6) AS d_ci_hi
     FROM d
     """,
-    tags=["M-ext", "effect-size", "extension"],
 )
 def effect_size_price_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Standardized effect sizes for the F-vs-O order-price difference:
@@ -8221,7 +8164,6 @@ def effect_size_price_status(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS gain_ratio_of_hy
     FROM hy JOIN hv ON hv.f = hy.f
     """,
-    tags=["M-ext", "feature-selection", "information-gain", "extension"],
 )
 def feature_information_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Information gain IG(f) = H(y) - H(y|f) of each binned feature

@@ -24,7 +24,6 @@ from .registry import query
            count(*) AS n, round(sum(value), 2) AS total_value
     FROM events GROUP BY 1, 2
     """,
-    tags=["streaming", "window"],
 )
 def stream_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming tumbling-window counts (watermark + window + availableNow):
@@ -37,7 +36,6 @@ def stream_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "stream_dedup_user_type_keys",
     oracle="SELECT DISTINCT user_id, event_type FROM events",
-    tags=["streaming", "dedup"],
 )
 def stream_dedup_user_type_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dropDuplicatesWithinWatermark keys: the set of surviving keys equals
@@ -68,7 +66,6 @@ def stream_dedup_user_type_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
            cast(count(*) AS BIGINT) AS n_events
     FROM s GROUP BY user_id, sid
     """,
-    tags=["streaming", "sessionization"],
 )
 def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Native session_window aggregation, promoted from rows-only to a full
@@ -115,7 +112,6 @@ def _image_ahash_cte() -> str:
            min(doc_id) AS canonical_doc
     FROM bits GROUP BY ahash_bits
     """,
-    tags=["streaming", "multimodal", "dedup", "llm-pipeline"],
 )
 def stream_image_ahash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming perceptual image dedup: file stream -> Arrow-batched
@@ -139,7 +135,6 @@ def stream_image_ahash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
            floor(round(sum(value), 2) / count(*) * 1e6) / 1e6 AS mean_value
     FROM events GROUP BY user_id
     """,
-    tags=["streaming", "stateful", "applyInPandasWithState"],
 )
 def stream_user_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom stateful streaming operator (applyInPandasWithState): per-user
@@ -164,7 +159,6 @@ def stream_user_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT win_start, event_type, count(*) AS n
     FROM expanded GROUP BY 1, 2
     """,
-    tags=["streaming", "window", "sliding"],
 )
 def stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding windows (1h window / 30m slide): every event lands in
@@ -185,7 +179,6 @@ def stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
      AND c.ts >= e.err_ts AND c.ts < e.err_ts + INTERVAL 10 MINUTE
     GROUP BY 1
     """,
-    tags=["streaming", "stream-stream-join"],
 )
 def stream_error_click_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream interval join, EXACTLY oracle-checked: the streaming
@@ -211,7 +204,6 @@ def stream_error_click_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents
     GROUP BY source
     """,
-    tags=["streaming", "dedup", "llm-pipeline"],
 )
 def stream_doc_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming corpus ingestion with exact dedup (file stream ->
@@ -233,7 +225,6 @@ def stream_doc_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents
     GROUP BY source
     """,
-    tags=["streaming", "stateful", "dedup", "bloom", "llm-pipeline"],
 )
 def stream_corpus_dedup_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom stateful streaming corpus dedup: per-source running
@@ -275,7 +266,6 @@ def stream_corpus_dedup_state(spark: SparkSession, sf_dir: str) -> DataFrame:
              / 2.0408163265306123 END), 4) AS p99_sketch
     FROM c GROUP BY event_type
     """,
-    tags=["streaming", "sketch", "quantile"],
 )
 def stream_value_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming DDSketch: the (event_type, bin) counter table IS the
@@ -344,7 +334,6 @@ def stream_value_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(sum((p - q) * ln(p / q)), 6) AS psi
     FROM t GROUP BY event_type
     """,
-    tags=["streaming", "monitoring", "psi"],
 )
 def stream_value_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming PSI: input-drift monitoring on an unbounded stream
@@ -439,7 +428,6 @@ _SCMS_HEX6 = (
     FROM eb JOIN sk ON sk.i = eb.i AND sk.bucket = eb.bucket
     GROUP BY eb.user_id, eb.exact_cnt
     """,
-    tags=["streaming", "sketch", "heavy-hitters"],
 )
 def stream_cms_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming Count-Min heavy hitters: the d x w counter table is
@@ -519,7 +507,6 @@ _SEG_HEX6 = (
     FROM events e JOIN seg s ON s.user_id = e.user_id
     GROUP BY 1, 2
     """,
-    tags=["streaming", "enrichment", "stream-static"],
 )
 def stream_segment_enriched_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-static dimension enrichment: the event stream broadcast-
@@ -549,7 +536,6 @@ def stream_segment_enriched_counts(spark: SparkSession, sf_dir: str) -> DataFram
                     END) AS BIGINT) AS max_k
     FROM events GROUP BY event_type
     """,
-    tags=["streaming", "json", "variant", "spark4"],
 )
 def stream_variant_props_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """VARIANT decode inside a structured stream (wave 77's batch twin is

@@ -80,7 +80,6 @@ _HEX6_SQL = (
            round(surv, 6) AS survival
     FROM km WHERE d_i > 0
     """,
-    tags=["survival", "clinical", "extension"],
 )
 def kaplan_meier_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kaplan–Meier survival of time-to-first-purchase (hours since the
@@ -225,7 +224,6 @@ def kaplan_meier_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
       UNION ALL SELECT s1, 5, 'no_returned_items', s5, s4 - s5 FROM agg
     )
     """,
-    tags=["clinical", "cohort", "extension"],
 )
 def cohort_attrition_waterfall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CONSORT-style attrition waterfall: customers surviving each
@@ -350,7 +348,6 @@ def cohort_attrition_waterfall(spark: SparkSession, sf_dir: str) -> DataFrame:
            floor((po - pe) / (1.0::DOUBLE - pe) * 1e6) / 1e6 AS kappa
     FROM k
     """,
-    tags=["agreement", "curation", "extension"],
 )
 def filter_agreement_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohen's kappa between two independent document-quality raters,
@@ -483,7 +480,6 @@ def filter_agreement_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
                         / 2.0::DOUBLE), 6) AS smd_weighted
     FROM s
     """,
-    tags=["causal", "clinical", "extension"],
 )
 def iptw_covariate_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inverse-probability-of-treatment weighting (IPTW) covariate
@@ -664,7 +660,6 @@ def iptw_covariate_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(__PSQL__, 6) AS p_value
     FROM z
     """.replace("__PSQL__", NORMAL_SF_SQL.format(z="z_raw")),
-    tags=["survival", "clinical", "logrank"],
 )
 def logrank_test_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Log-rank test (Mantel 1966) comparing the two md5 cohorts'
@@ -805,7 +800,6 @@ def logrank_test_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
                 THEN round(__PSQL__, 6) ELSE 1.0::DOUBLE END AS p_value
     FROM z
     """.replace("__PSQL__", NORMAL_SF_SQL.format(z="z_raw")),
-    tags=["agreement", "mcnemar", "extension"],
 )
 def mcnemar_filter_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """McNemar's test (1947, with Edwards' continuity correction) on the
@@ -923,7 +917,6 @@ _PSM_SQL_UNITS = """
     GROUP BY tot.n_treated
     """
     ),
-    tags=["causal", "matching", "extension"],
 )
 def psm_matched_att(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Propensity-score matching ATT (Rosenbaum & Rubin 1983) — the
@@ -1091,7 +1084,6 @@ def psm_matched_att(spark: SparkSession, sf_dir: str) -> DataFrame:
                        1.0::DOUBLE), 6) AS ci_hi
     FROM km WHERE d_i > 0
     """.format(hex6=_HEX6_SQL.format(x="cast(user_id AS VARCHAR)")),
-    tags=["survival", "clinical", "greenwood"],
 )
 def km_greenwood_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kaplan–Meier curve with Greenwood (1926) pointwise 95% bands —
@@ -1245,7 +1237,6 @@ def km_greenwood_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(sqrt(var_h), 6) AS se
     FROM na WHERE d_i > 0
     """.format(hex6=_HEX6_SQL.format(x="cast(user_id AS VARCHAR)")),
-    tags=["survival", "clinical", "nelson-aalen", "extension"],
 )
 def nelson_aalen_hazard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nelson-Aalen cumulative hazard H(t) = sum(d_i/n_i) with its
@@ -1412,7 +1403,6 @@ _WB_LN2 = 0.6931471805599453  # the same ln(2) literal on both engines
            round(lam * pow({_WB_LN2!r}, 1.0::DOUBLE / k), 6) AS median_hours
     FROM fin
     """,
-    tags=["survival", "weibull", "extension"],
 )
 def weibull_survival_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weibull fit of time-to-first-purchase by the probability-plot /
@@ -1630,7 +1620,6 @@ def weibull_survival_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
            round({NORMAL_SF_SQL.format(z="abs(u / sqrt(i))")}, 6) AS p_value
     FROM s
     """,
-    tags=["survival", "cox", "score-test", "extension"],
 )
 def cox_score_one_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cox proportional-hazards SCORE TEST (and the one-Newton-step

@@ -19,8 +19,10 @@ from ..functions.text import (
     tokens,
 )
 from ..operators.dedup import (
+    POSTING_DF_CAP,
     exact_dedup,
     minhash_lsh_candidates,
+    posting_pair_counts,
     simhash64,
 )
 from ..session import shuffle_partitions
@@ -47,7 +49,6 @@ _STOP_EN_SQL = "['" + "', '".join(STOPWORDS["en"]) + "']"
                  / greatest(len(ws), 1), 6) AS stop_ratio_en
     FROM t
     """,
-    tags=["text", "quality"],
 )
 def doc_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document quality metrics: token count, characters, average token
@@ -84,7 +85,6 @@ def doc_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents
     GROUP BY lang
     """,
-    tags=["text", "A1"],
 )
 def lang_token_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus profile per language (language-ID downstream shape)."""
@@ -104,7 +104,6 @@ def lang_token_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
            md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))) AS fingerprint
     FROM documents
     """,
-    tags=["text", "F6", "dedup"],
 )
 def doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical document fingerprint: md5 over whitespace-normalized,
@@ -127,7 +126,6 @@ def doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1
     HAVING count(DISTINCT source) >= 2
     """,
-    tags=["text", "dedup", "provenance", "llm-pipeline"],
 )
 def cross_source_dup_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-source duplication provenance: LEAD-PREFIX fingerprint groups
@@ -165,7 +163,6 @@ def cross_source_dup_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents
     GROUP BY 1
     """,
-    tags=["dedup"],
 )
 def exact_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact deduplication: hash-groupBy on the canonical fingerprint,
@@ -204,13 +201,12 @@ def exact_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN sizes sb ON sb.doc_id = id_b
     WHERE n_common / (sa.set_size + sb.set_size - n_common) >= 0.05
     """,
-    tags=["dedup", "J1"],
 )
 def near_dup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact word-3-gram Jaccard near-dup pairs via the inverted-index
     pair-expansion plan (postings groupBy + HOF pair expansion — ~40%
     faster than the shingle self-join, operators/dedup.py keeps both). The
-    max_shingle_docs=1000 frequency guard is ON and mirrored exactly in
+    POSTING_DF_CAP frequency guard is ON and mirrored exactly in
     the oracle (both engines drop the same ultra-common shingles from
     intersection counting), so the check stays value-exact while the plan
     keeps its quadratic-blowup guard; at 100 TB run MinHash-LSH first and
@@ -229,7 +225,6 @@ def near_dup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "text",
         n=3,
         threshold=0.05,
-        max_shingle_docs=1000,
         shingles=shingle_table(d, "doc_id", "text", 3).localCheckpoint(),
     )
 
@@ -242,7 +237,6 @@ def near_dup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                           '\\b(key|value)\\b', '[REDACTED]', 'g') AS redacted
     FROM documents
     """,
-    tags=["F7"],
 )
 def doc_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Chained regex redaction (PHI-scrub shape,
@@ -279,7 +273,6 @@ def doc_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM sig a JOIN sig b ON a.band = b.band AND a.sig = b.sig
     WHERE a.doc_id < b.doc_id
     """,
-    tags=["dedup", "lsh"],
 )
 def minhash_lsh_pairs_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH candidate pairs with an md5 hash family (16 hashes, 4
@@ -328,8 +321,7 @@ _MINHASH_BAND_ORACLE = f"""
 """
 
 
-@query("minhash_lsh_candidate_pairs", oracle=_MINHASH_BAND_ORACLE,
-       tags=["dedup", "lsh"])
+@query("minhash_lsh_candidate_pairs", oracle=_MINHASH_BAND_ORACLE)
 def minhash_lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH candidate pairs (32 seeded xxhash64 hashes, 8 bands) —
     the scale path for fuzzy dedup — promoted r8 from rows-only to an
@@ -432,7 +424,6 @@ def minhash_lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS simhash16
     FROM b GROUP BY doc_id
     """,
-    tags=["dedup", "simhash"],
 )
 def simhash_md5_16bit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """16-bit md5-based SimHash — full oracle parity for the SimHash
@@ -466,8 +457,7 @@ _SIMHASH_BAND_ORACLE = f"""
 """
 
 
-@query("simhash_signatures", oracle=_SIMHASH_BAND_ORACLE,
-       tags=["dedup", "simhash"])
+@query("simhash_signatures", oracle=_SIMHASH_BAND_ORACLE)
 def simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """63-bit xxhash64 SimHash — promoted r8 from rows-only to an
     INVARIANT-BAND oracle (r7 verdict item 3). The hash family has no
@@ -579,7 +569,6 @@ def simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT src AS node, least(min(dst), src) AS component
     FROM closure GROUP BY src
     """,
-    tags=["dedup", "graph", "iterative"],
 )
 def near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate CLUSTERS: candidate pairs -> connected components via
@@ -589,8 +578,7 @@ def near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import connected_components, ngram_jaccard_pairs_inverted
 
     pairs = ngram_jaccard_pairs_inverted(
-        T(spark, sf_dir, "documents"), "doc_id", "text",
-        n=3, threshold=0.05, max_shingle_docs=1000,
+        T(spark, sf_dir, "documents"), "doc_id", "text", n=3, threshold=0.05
     )
     return connected_components(pairs)
 
@@ -619,7 +607,6 @@ def near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM s)
     WHERE rk <= 3
     """,
-    tags=["text", "tfidf"],
 )
 def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 TF-IDF terms per document. Term frequency and document
@@ -667,7 +654,6 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE i.doc_id % 10 = 3
       AND i.fp NOT IN (SELECT fp FROM fp WHERE doc_id % 10 <> 3)
     """,
-    tags=["dedup", "bloom", "llm-pipeline"],
 )
 def incremental_dedup_new_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental batch dedup with a Bloom pre-filter: which documents
@@ -732,7 +718,6 @@ _ER_TAU = 0.75  # match threshold on token Jaccard
     WHERE len(list_intersect(a.ts, c.ts)) * 1.0
           / len(list_distinct(a.ts || c.ts)) >= {_ER_TAU}
     """,
-    tags=["dedup", "entity-resolution", "blocking"],
 )
 def er_blocking_part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Entity-resolution blocking + match over the part catalog: entity
@@ -742,12 +727,12 @@ def er_blocking_part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     that replaces the O(n^2) all-pairs compare).
 
     Plan: one narrow projection builds sorted distinct token arrays; a
-    self equi-join on the block key generates candidates (block sizes are
-    vocabulary-bounded — max 29, mean 5.3 at sf0.01 — so the quadratic
-    term is per-block, not per-corpus); the Jaccard filter runs as a
-    codegen'd array expression inside the join. At 100 TB the join
-    shuffles on the block key; frequency-cap the degenerate blocks the
-    same way textops.max_shingle_docs bounds shingle fan-out."""
+    self equi-join on the block key generates candidates (max block 29,
+    mean 5.3 at sf0.01); the Jaccard filter runs as a codegen'd array
+    expression inside the join. The join shuffles on the block key, and
+    blocks are NOT capped: a block's size grows with the part table, so
+    candidate pairs grow with block size squared — 45.36x wall on 10x
+    data in SCALE.md. A cap would change the registered result."""
     # r9: tokenization AND the within-block array_intersect verifies ran
     # on the single-file scan's ONE partition (the whole query was 3
     # stages, one of them all the work); fan out the raw scan first
@@ -812,7 +797,6 @@ def er_blocking_part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN sizes sb ON sb.doc_id = id_b
     WHERE n_common / (sa.set_size + sb.set_size - n_common) >= 0.3
     """,
-    tags=["dedup", "prefix-filter", "llm-pipeline"],
 )
 def ppjoin_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Word-3-gram Jaccard >= 0.3 pairs via PREFIX FILTERING — the
@@ -871,13 +855,12 @@ def ppjoin_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
            cast(n_common AS BIGINT) AS n_common, containment
     FROM directed WHERE containment >= 0.8
     """,
-    tags=["dedup", "containment", "llm-pipeline"],
 )
 def containment_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Asymmetric containment near-dup (Broder 1997): directed pairs
     where >= 80% of the smaller document's 3-gram shingles appear in
     the larger — the quote/embedding case symmetric Jaccard misses when
-    the container is much longer. The max_shingle_docs=1000 guard is ON
+    the container is much longer. The POSTING_DF_CAP guard is ON
     and mirrored in the oracle (see near_dup_jaccard_pairs)."""
     from ..operators.dedup import containment_pairs
 
@@ -891,7 +874,6 @@ def containment_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "text",
         n=3,
         threshold=0.8,
-        max_shingle_docs=1000,
     )
     return out.select(
         "id_contained",
@@ -953,7 +935,6 @@ _BM25_K = 10
     ORDER BY bm25 DESC, doc_id
     LIMIT {_BM25_K}
     """,
-    tags=["retrieval", "bm25", "llm-pipeline"],
 )
 def bm25_topk_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 retrieval (Robertson-Sparck Jones, k1=1.2 b=0.75) for a
@@ -1050,7 +1031,6 @@ _SN_TAU = 0.5  # report threshold on token Jaccard
     WHERE len(list_intersect(a.ts, c.ts)) * 1.0::DOUBLE
           / len(list_distinct(a.ts || c.ts)) >= {_SN_TAU}
     """,
-    tags=["dedup", "entity-resolution", "sorted-neighborhood"],
 )
 def sorted_neighborhood_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sorted-neighborhood entity resolution (Hernández & Stolfo 1995) —
@@ -1156,7 +1136,6 @@ _LEV_MAX = 12  # report threshold on edit distance
      AND a.p_partkey < c.p_partkey
     WHERE levenshtein(a.p_name, c.p_name) <= {_LEV_MAX}
     """,
-    tags=["dedup", "entity-resolution", "fuzzy"],
 )
 def levenshtein_match_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Edit-distance fuzzy matching within (brand, size) blocks: part
@@ -1167,12 +1146,14 @@ def levenshtein_match_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     classic Wagner–Fischer DP, so the distance is integer-exact
     cross-engine.
 
-    Plan: self equi-join on the composite block key, per-block
-    quadratic only (block sizes are attribute-bounded), the DP runs as
-    a codegen'd binary expression inside the join filter. At 100 TB:
-    shuffle on the block key; cap degenerate blocks the same way the
-    other ER paths do. The O(len^2) DP per comparison is the cost
-    argument for running it AFTER cheap blocking, never corpus-wide."""
+    Plan: self equi-join on the composite block key, quadratic per
+    block; the DP runs as a codegen'd binary expression inside the join
+    filter. The join shuffles on the block key, and blocks are NOT
+    capped: a (brand, size) block grows with the part table, so
+    candidate pairs grow with block size squared — 20.11x wall on 10x
+    data in SCALE.md. A cap would change the registered result. The
+    O(len^2) DP per comparison is the cost argument for running it
+    AFTER cheap blocking, never corpus-wide."""
     b = T(spark, sf_dir, "part").select(
         "p_partkey", "p_name", "p_brand", "p_size"
     )
@@ -1251,7 +1232,6 @@ def levenshtein_match_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS chars_dropped
     FROM ranked GROUP BY component
     """,
-    tags=["dedup", "curation", "extension"],
 )
 def dup_cluster_canonical_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The curation step AFTER near-dup clustering: within each
@@ -1273,7 +1253,7 @@ def dup_cluster_canonical_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = T(spark, sf_dir, "documents")
     pairs = ngram_jaccard_pairs_inverted(
-        d, "doc_id", "text", n=3, threshold=0.05, max_shingle_docs=1000
+        d, "doc_id", "text", n=3, threshold=0.05
     )
     clusters = connected_components(pairs)
     ranked = clusters.join(
@@ -1329,7 +1309,6 @@ _PHRASE = ("spark", "join")
     WHERE len(list_filter(bigrams,
           g -> g = '{_PHRASE[0]} {_PHRASE[1]}')) > 0
     """,
-    tags=["text", "retrieval", "llm-pipeline"],
 )
 def phrase_search_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact phrase search over a POSITIONAL inverted index — the
@@ -1400,7 +1379,6 @@ _KWIC_WIN = 3
              AS right_ctx
     FROM occ
     """,
-    tags=["text", "retrieval", "concordance"],
 )
 def kwic_concordance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keyword-in-context concordance — the corpus-inspection tool every
@@ -1498,7 +1476,6 @@ _RRF_TOP = 10
     ORDER BY rrf DESC, doc_id
     LIMIT {_RRF_TOP}
     """,
-    tags=["retrieval", "rrf", "hybrid", "llm-pipeline"],
 )
 def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reciprocal-rank fusion (Cormack, Clarke & Buettcher 2009) — the
@@ -1648,7 +1625,6 @@ def _fs_u_sql(f: str) -> str:
     FROM pairs CROSS JOIN w
     GROUP BY brand_agree, type_agree, size_agree, match_weight
     """,
-    tags=["dedup", "entity-resolution", "fellegi-sunter"],
 )
 def fellegi_sunter_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fellegi-Sunter (1969) probabilistic record linkage over the
@@ -1822,7 +1798,6 @@ def fellegi_sunter_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
              / 1e6 AS jaccard_coverage
     FROM counts
     """,
-    tags=["dedup", "capture-recapture", "llm-pipeline"],
 )
 def dedup_capture_recapture(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Capture-recapture estimation of TOTAL near-duplicate pairs and
@@ -1857,8 +1832,7 @@ def dedup_capture_recapture(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("id_a", "id_b").localCheckpoint()
     jac = (
         ngram_jaccard_pairs_inverted(
-            docs, "doc_id", "text", n=3, threshold=0.05,
-            max_shingle_docs=1000, shingles=sh,
+            docs, "doc_id", "text", n=3, threshold=0.05, shingles=sh
         )
         .select("id_a", "id_b")
         .localCheckpoint()
@@ -1978,7 +1952,6 @@ _RM3_EXP_TERMS = 5  # expansion terms kept
     ORDER BY s1.bm25_expanded DESC, s1.doc_id
     LIMIT {_RM3_FB_DOCS}
     """,
-    tags=["retrieval", "rm3", "query-expansion", "llm-pipeline"],
 )
 def rm3_query_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RM3-style pseudo-relevance feedback (Lavrenko & Croft 2001; the
@@ -2161,7 +2134,6 @@ _QL_K = 10
     ORDER BY score_fp DESC, doc_id ASC
     LIMIT {_QL_K}
     """,
-    tags=["text", "retrieval", "query-likelihood", "extension"],
 )
 def dirichlet_query_likelihood(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dirichlet-smoothed query-likelihood retrieval (Zhai & Lafferty
@@ -2288,7 +2260,6 @@ _WIN_HEX8 = (
     JOIN sizes sb ON sb.doc_id = id_b
     WHERE n_shared >= {_WIN_MIN_SHARED}
     """,
-    tags=["dedup", "winnowing", "llm-pipeline", "extension"],
 )
 def winnowing_fingerprint_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing document fingerprints (Schleimer, Wilkerson & Aiken
@@ -2306,7 +2277,7 @@ def winnowing_fingerprint_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     parity), window-min is integer, all downstream counts integer,
     containment trunc6. Scale: the per-doc window runs inside
     doc-bounded partitions; the pair join goes through the SAME
-    df <= 1000 posting cap as the Jaccard family (mirrored in the
+    POSTING_DF_CAP posting cap as the Jaccard family (mirrored in the
     oracle), so a boilerplate fingerprint shared by millions of docs
     cannot go quadratic — and winnowing keeps ~1/w of the shingles, so
     the posting table is 4x smaller than the Jaccard one."""
@@ -2349,20 +2320,9 @@ def winnowing_fingerprint_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sizes = fps.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_fp")
     )
-    dfok = (
-        fps.groupBy("fp")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") <= 1000)
-        .select("fp")
-    )
-    capped = fps.join(dfok, "fp")
-    a = capped.select(F.col("doc_id").alias("id_a"), "fp")
-    b = fps.select(F.col("doc_id").alias("id_b"), "fp")
     shared = (
-        a.join(b, "fp")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_shared"))
+        posting_pair_counts(fps, "doc_id", "fp")
+        .withColumnRenamed("n_common", "n_shared")
         .filter(F.col("n_shared") >= _WIN_MIN_SHARED)
     )
     # per-entity sizes are DATA-SIZED: plain equi-join, AQE decides
@@ -2500,7 +2460,6 @@ def _mmr_oracle() -> str:
 @query(
     "mmr_diversified_topk",
     oracle=_mmr_oracle(),
-    tags=["text", "retrieval", "mmr", "extension"],
 )
 def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Maximal Marginal Relevance re-ranking (Carbonell & Goldstein
@@ -2768,7 +2727,6 @@ def _em_round_sql(k: int) -> str:
          pr{_EM_ROUNDS} p, tot
     """
     ),
-    tags=["dedup", "entity-resolution", "em", "iterative", "extension"],
 )
 def fs_em_linkage_params(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EM-estimated Fellegi-Sunter parameters (Winkler 1988; the
@@ -2945,7 +2903,6 @@ def fs_em_linkage_params(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- Wave 67: BLEU-2 near-duplicate pair scoring --------------------------------
 
 _BLEU_MIN_SHARED = 3  # candidate gate: >= 3 shared distinct bigrams
-_BLEU_DF_CAP = 1000  # posting df cap (same guard as the Jaccard family)
 _BLEU_TOPK = 20
 
 
@@ -2978,7 +2935,7 @@ _BLEU_TOPK = 20
     ),
     dfok AS (
       SELECT sh FROM tri GROUP BY sh
-      HAVING count(*) <= {_BLEU_DF_CAP}
+      HAVING count(*) <= {POSTING_DF_CAP}
     ),
     cand AS (
       SELECT a.doc_id AS id_a, b.doc_id AS id_b
@@ -3032,7 +2989,6 @@ _BLEU_TOPK = 20
                   ELSE 0.0::DOUBLE END DESC, id_a ASC, id_b ASC
     LIMIT {_BLEU_TOPK}
     """,
-    tags=["text", "dedup", "bleu", "extension"],
 )
 def bleu_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BLEU-2 (clipped modified n-gram precision + brevity penalty,
@@ -3044,7 +3000,7 @@ def bleu_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     min(1, exp(1 - len_ref/len_hyp)) uses exact integer length ratios.
 
     Candidates come from the family's inverted TRIGRAM index: pairs
-    sharing >= 3 distinct word-trigrams, with the same df <= 1000
+    sharing >= 3 distinct word-trigrams, with the same POSTING_DF_CAP
     posting cap as the Jaccard/containment/winnowing operators (the
     adversarial stop-shingle guard, mirrored in the oracle). Bigrams
     are too common on a small-vocabulary corpus to gate with (931
@@ -3104,49 +3060,11 @@ def bleu_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(parallelism, "sh")
         .localCheckpoint()
     )
-    # r9 optimization: candidate pairs now come from the inverted-index
-    # HOF pair expansion (the family's measured-faster shape, see
-    # ngram_jaccard_pairs_inverted) instead of the posting self-join:
-    # tri is already hash-partitioned on sh, so the postings groupBy
-    # reuses that layout with NO new exchange (which also means AQE
-    # never coalesces the CPU-dense expansion onto one task), the pair
-    # structs are emitted map-side, and only the pair-count aggregate
-    # shuffles. Pairs produced are identical: same per-shingle doc sets
-    # (df cap == posting length cap, sorted ascending so id_a < id_b by
-    # construction), same >= _BLEU_MIN_SHARED gate.
-    # SKEW ASSUMPTION (r9 ADVICE, measured r10): the posting array is
-    # collected BEFORE the df cap filters it, so one degenerate hot
-    # trigram would buffer its full doc list in the aggregation (the
-    # cap then discards it). A count-aggregate pre-filter (the dfok
-    # shape) closes that window but was A/B'd at +1.1 s on a ~6 s query
-    # (7.36 vs 6.25 isolated min-of-3) — an extra pass over tri that
-    # never fires at any shipped SF (max trigram df is 25 vs the 1000
-    # cap). Documented instead of paid: a corpus with boilerplate hot
-    # enough to matter here would already be pathological for the
-    # ngram_jaccard family, whose operators share the same shape.
-    postings = (
-        tri.groupBy("sh")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("docs"))
-        .filter(
-            (F.size("docs") >= 2) & (F.size("docs") <= _BLEU_DF_CAP)
-        )
-    )
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("docs"),
-            lambda x, i: F.transform(
-                F.slice(F.col("docs"), i + 2, F.size(F.col("docs"))),
-                lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-            ),
-        )
-    )
+    # candidate pairs: tri is already hash-partitioned on sh, so the
+    # postings groupBy inside posting_pair_counts reuses that layout
     cand = (
-        postings.select(F.explode(pair_structs).alias("p"))
-        .groupBy(
-            F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b")
-        )
-        .agg(F.count(F.lit(1)).alias("shared"))
-        .filter(F.col("shared") >= _BLEU_MIN_SHARED)
+        posting_pair_counts(tri, "doc_id", "sh")
+        .filter(F.col("n_common") >= _BLEU_MIN_SHARED)
         .select("id_a", "id_b")
         .repartition(parallelism, "id_a")
         .localCheckpoint()
@@ -3309,7 +3227,6 @@ _BD_VOCAB = 30
            floor(d_fp::DOUBLE / nw / 1e9 * 1e6) / 1e6 AS delta
     FROM pairs
     """,
-    tags=["text", "stylometry", "burrows-delta", "extension"],
 )
 def burrows_delta_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Burrows' Delta (2002) between every pair of document SOURCES —
@@ -3492,7 +3409,6 @@ _NDS_T100 = (5, 10, 20, 30, 50)  # thresholds x100: 0.05 .. 0.50
     LEFT JOIN docs d ON d.t100 = ts.t100
     CROSS JOIN ndoc nd
     """,
-    tags=["dedup", "operating-curve", "extension"],
 )
 def near_dup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The dedup OPERATING CURVE: pair count and duplicate-document
@@ -3503,7 +3419,7 @@ def near_dup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     computes every pair ONCE; the sweep is then pure integer
     re-thresholding, n_common * 100 >= t100 * union — no float
     threshold ever compares, so boundary pairs (jaccard exactly 0.05)
-    land identically on both engines. The df <= 1000 posting cap is ON,
+    land identically on both engines. The POSTING_DF_CAP posting cap is ON,
     mirrored in the oracle, as everywhere in the family.
 
     Scale: identical cost to near_dup_jaccard_pairs plus a 5x
@@ -3514,27 +3430,7 @@ def near_dup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = shingle_table(d, "doc_id", "text", 3).localCheckpoint()
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("set_size"))
     ndoc = d.agg(F.count(F.lit(1)).cast("long").alias("nd"))
-    parallelism = shuffle_partitions(spark)
-    postings = (
-        sh.groupBy("shingle")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("docs"))
-        .filter((F.size("docs") >= 2) & (F.size("docs") <= 1000))
-        .repartition(parallelism)
-    )
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("docs"),
-            lambda x, i: F.transform(
-                F.slice(F.col("docs"), i + 2, F.size(F.col("docs"))),
-                lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-            ),
-        )
-    )
-    inter = (
-        postings.select(F.explode(pair_structs).alias("p"))
-        .groupBy(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
-        .agg(F.count(F.lit(1)).cast("long").alias("n_common"))
-    )
+    inter = posting_pair_counts(sh, "doc_id", "shingle")
     # per-entity sizes are DATA-SIZED: plain equi-join, AQE decides
     sa = sizes.select(
         F.col("doc_id").alias("id_a"), F.col("set_size").alias("size_a")
@@ -3650,7 +3546,6 @@ def near_dup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
                            AS BIGINT) / 1e9 / count(*)), 6) AS rmse
     FROM err
     """,
-    tags=["dedup", "estimator-audit", "minhash", "extension"],
 )
 def minhash_estimate_error_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """How good is the 16-hash MinHash Jaccard ESTIMATE on the pairs the
@@ -3794,7 +3689,6 @@ def minhash_estimate_error_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
            round((ln(n) - ln(v)) / (ln(n) * ln(n)), 6) AS maas_a2
     FROM s
     """,
-    tags=["text", "lexical-diversity", "extension"],
 )
 def lexical_diversity_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The classical lexical-diversity battery per document source:
@@ -3855,7 +3749,6 @@ def lexical_diversity_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- Wave 74: blocking-scheme recall audit --------------------------------------------
 
 _BRA_TAU100 = 75  # ground-truth match threshold x100 (the ER family's 0.75)
-_BRA_DF_CAP = 1000
 
 
 @query(
@@ -3873,7 +3766,7 @@ _BRA_DF_CAP = 1000
     ),
     dfok AS (
       SELECT tok FROM tok GROUP BY tok
-      HAVING count(*) <= {_BRA_DF_CAP}
+      HAVING count(*) <= {POSTING_DF_CAP}
     ),
     inter AS (
       SELECT a.p_partkey AS pa, b.p_partkey AS pb,
@@ -3924,7 +3817,6 @@ _BRA_DF_CAP = 1000
     LEFT JOIN cap ON cap.scheme = c.scheme
     CROSS JOIN nt
     """,
-    tags=["dedup", "entity-resolution", "blocking-audit", "extension"],
 )
 def blocking_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The blocking-scheme RECALL/COST trade-off table (Christen 2012's
@@ -3964,7 +3856,7 @@ def blocking_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lower(F.col("p_brand")).alias("brand"),
     ).localCheckpoint()
     parallelism = shuffle_partitions(spark)
-    # CPU-dense posting self-join: hash-fan the token table explicitly or
+    # CPU-dense posting expansion: hash-fan the token table explicitly or
     # AQE's byte-based coalesce serializes the pair expansion (the
     # ngram_novelty/PPJoin lesson) — measured 10.1 s -> ~3 s at sf0.1
     tok = (
@@ -3973,17 +3865,17 @@ def blocking_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint()
     )
     dfok = tok.groupBy("tok").agg(F.count(F.lit(1)).alias("df")).filter(
-        F.col("df") <= _BRA_DF_CAP
+        F.col("df") <= POSTING_DF_CAP
     ).select("tok")
     sizes = t.select("p_partkey", F.size("ts").cast("long").alias("sz"))
     # r9: a truth pair needs nc*100 >= TAU100*(sza+szb-nc), and the union
     # is >= each side's full set size while nc is bounded by each side's
     # UNDER-CAP token count ka — so any part with 100*ka < TAU100*sz can
-    # never appear in a truth pair. Pre-filter BOTH sides of the posting
-    # self-join on that per-part test (guide §3.4; lossless by the
-    # threshold arithmetic, no data assumption). At sf0.1 every part has
-    # ka=1 against sz~9, so the ~8M-row pair expansion that fed an empty
-    # truth set collapses to an empty join.
+    # never appear in a truth pair. Pre-filter the posting expansion's
+    # input on that per-part test (guide §3.4; lossless by the threshold
+    # arithmetic, no data assumption). At sf0.1 every part has ka=1
+    # against sz~9, so the ~8M-row pair expansion that fed an empty truth
+    # set collapses to an empty one.
     u = tok.join(dfok, "tok")
     okj = (
         u.groupBy("p_partkey")
@@ -3992,15 +3884,9 @@ def blocking_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("ku") * 100 >= F.lit(_BRA_TAU100) * F.col("sz"))
         .select("p_partkey")
     )
-    u = u.join(okj, "p_partkey")
-    a = u.select(F.col("p_partkey").alias("pa"), "tok")
-    b = u.select(F.col("p_partkey").alias("pb"), F.col("tok").alias("tokb"))
-    inter = (
-        a.join(b, F.col("tok") == F.col("tokb"))
-        .filter(F.col("pa") < F.col("pb"))
-        .groupBy("pa", "pb")
-        .agg(F.count(F.lit(1)).cast("long").alias("nc"))
-    )
+    inter = posting_pair_counts(
+        u.join(okj, "p_partkey"), "p_partkey", "tok"
+    ).toDF("pa", "pb", "nc")
     # per-entity sizes are DATA-SIZED: plain equi-join, AQE decides
     sa = sizes.select(F.col("p_partkey").alias("pa"), F.col("sz").alias("sza"))
     sb = sizes.select(F.col("p_partkey").alias("pb"), F.col("sz").alias("szb"))
@@ -4134,7 +4020,6 @@ _RBM_MIN_NC = 2  # candidate gate: >= 2 shared tokens
       ON b.pa = a.pb AND b.pb = a.pa AND b.rk = 1
     WHERE a.rk = 1 AND a.pa < a.pb
     """,
-    tags=["dedup", "entity-resolution", "reciprocal-best-match", "extension"],
 )
 def reciprocal_best_match_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reciprocal-best-match entity pairs over the part catalog: a pair
@@ -4174,7 +4059,7 @@ def reciprocal_best_match_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("ts"),
     ).localCheckpoint()
     parallelism = shuffle_partitions(spark)
-    # explicit hash fan-out before the CPU-dense posting self-join (the
+    # explicit hash fan-out before the CPU-dense posting expansion (the
     # family's AQE-coalesce guard) — measured 13.5 s -> ~4 s at sf0.1
     tok = (
         t.select("p_partkey", F.explode("ts").alias("tok"))
@@ -4182,16 +4067,16 @@ def reciprocal_best_match_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint()
     )
     dfok = tok.groupBy("tok").agg(F.count(F.lit(1)).alias("df")).filter(
-        F.col("df") <= 1000
+        F.col("df") <= POSTING_DF_CAP
     ).select("tok")
     # r9: nc counts shared UNDER-CAP tokens (the dfok join key), and the
     # >= _RBM_MIN_NC gate means a surviving pair needs >= 2 of them ON
     # EACH SIDE — so parts with < 2 under-cap tokens can be dropped from
-    # BOTH sides of the posting self-join before the pair expansion
-    # (guide §3.4 pre-filter the big side; lossless by the gate's own
-    # arithmetic: nc <= min(|under-cap tokens of a|, |of b|)). At sf0.1
-    # every part has exactly one under-cap token, so this turns a ~16M-row
-    # expansion that aggregated to ZERO survivors into an empty join.
+    # the posting expansion's input (guide §3.4 pre-filter the big side;
+    # lossless by the gate's own arithmetic: nc <= min(|under-cap tokens
+    # of a|, |of b|)). At sf0.1 every part has exactly one under-cap
+    # token, so this turns a ~16M-row expansion that aggregated to ZERO
+    # survivors into an empty one.
     u = tok.join(dfok, "tok")
     ok2 = (
         u.groupBy("p_partkey")
@@ -4199,15 +4084,14 @@ def reciprocal_best_match_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("ku") >= _RBM_MIN_NC)
         .select("p_partkey")
     )
-    u = u.join(ok2, "p_partkey")
-    a = u.select(F.col("p_partkey").alias("pa"), "tok")
-    b = u.select(F.col("p_partkey").alias("kb_id"), F.col("tok").alias("tokb"))
-    inter = (
-        a.join(b, F.col("tok") == F.col("tokb"))
-        .filter(F.col("pa") != F.col("kb_id"))
-        .groupBy("pa", F.col("kb_id").alias("pb"))
-        .agg(F.count(F.lit(1)).cast("long").alias("nc"))
-        .filter(F.col("nc") >= _RBM_MIN_NC)
+    # candidates in both directions: each side ranks its own partners
+    half = (
+        posting_pair_counts(u.join(ok2, "p_partkey"), "p_partkey", "tok")
+        .filter(F.col("n_common") >= _RBM_MIN_NC)
+        .toDF("pa", "pb", "nc")
+    )
+    inter = half.unionByName(
+        half.select(F.col("pb").alias("pa"), F.col("pa").alias("pb"), "nc")
     )
     sizes = t.select("p_partkey", F.size("ts").cast("long").alias("sz"))
     # per-entity sizes are DATA-SIZED: plain equi-join, AQE decides

@@ -42,7 +42,6 @@ def _revenue():
                            GROUP BY l_orderkey HAVING sum(l_quantity) > 300)
     GROUP BY 1, 2, 3, 4, 5
     """,
-    tags=["tpch", "J5", "semi-join"],
 )
 def q18_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q18: IN (grouped HAVING subquery) -> aggregate-then-semi-join.
@@ -88,7 +87,6 @@ def q18_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
                         AND l3.l_returnflag = 'R')
     GROUP BY s.s_name
     """,
-    tags=["tpch", "J5", "anti-join"],
 )
 def q21_blocked_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q21: double-correlated EXISTS + NOT EXISTS with a <> guard.
@@ -150,7 +148,6 @@ def q21_blocked_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN nation n2 ON n2.n_nationkey = s.s_nationkey
     GROUP BY o_year
     """,
-    tags=["tpch", "J5", "A2"],
 )
 def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q8: national market share = conditional-sum ratio over an
@@ -196,7 +193,6 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN orders o ON o.o_orderkey = l.l_orderkey
     GROUP BY 1, 2
     """,
-    tags=["tpch", "J5", "A2"],
 )
 def q9_profit_by_nation_year(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q9 shape: profit per supplier-nation per year. No partsupp
@@ -252,7 +248,6 @@ def q9_profit_by_nation_year(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE o.unit_cost = (SELECT min(o2.unit_cost) FROM offers o2
                          WHERE o2.l_partkey = o.l_partkey)
     """,
-    tags=["tpch", "correlated-subquery"],
 )
 def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q2 shape: correlated scalar MIN — for each part, the
@@ -310,7 +305,6 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM vals
     WHERE part_qty > (SELECT avg(part_qty) * 2.0 FROM vals)
     """,
-    tags=["tpch", "scalar-subquery"],
 )
 def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q11 shape: per-group total vs a scalar aggregate (2x the
@@ -353,7 +347,6 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
                               WHERE s_acctbal < 0.0)
     GROUP BY 1, 2, 3
     """,
-    tags=["tpch", "anti-join", "A4"],
 )
 def q16_supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q16: COUNT(DISTINCT supplier) per part attribute triple with
@@ -399,7 +392,6 @@ def q16_supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
                AND n.n_name IN ('NATION_1', 'NATION_2', 'NATION_3')
     WHERE s.s_suppkey IN (SELECT l_suppkey FROM shipped WHERE qty > 40)
     """,
-    tags=["tpch", "semi-join"],
 )
 def q20_heavy_shippers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q20 shape: nested IN chain — suppliers (in a nation set) who
@@ -482,7 +474,6 @@ _FPI_Y1 = 1997
              AS fisher
     FROM s
     """,
-    tags=["A-ext", "index-numbers", "economics", "extension"],
 )
 def fisher_price_index_yearly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Laspeyres, Paasche, and Fisher ideal price indices for

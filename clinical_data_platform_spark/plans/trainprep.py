@@ -55,7 +55,6 @@ def _h():
     FROM tagged
     GROUP BY 1, 2
     """,
-    tags=["trainprep", "split"],
 )
 def train_val_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic 75/12.5/12.5 train/val/test split by the first hex
@@ -88,7 +87,6 @@ def train_val_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM documents)
     WHERE rk <= 50
     """,
-    tags=["trainprep", "sampling"],
 )
 def balanced_class_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Class-balanced downsampling: exactly 50 documents per language,
@@ -127,7 +125,6 @@ def balanced_class_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM packed
     GROUP BY 1, 2
     """,
-    tags=["trainprep", "packing"],
 )
 def packed_sequence_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sequence packing: concatenate documents (in deterministic
@@ -175,7 +172,6 @@ def packed_sequence_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents
     GROUP BY 1
     """,
-    tags=["trainprep", "mixture"],
 )
 def corpus_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted corpus mixture: keep English at 100% and every other
@@ -216,7 +212,6 @@ def corpus_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
                  ' ')) AS chunk_md5
     FROM c
     """,
-    tags=["trainprep", "chunking"],
 )
 def chunked_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding-window text chunking (64-token chunks, stride 48 = 16-token
@@ -319,7 +314,6 @@ def _u01() -> F.Column:
     FROM documents d JOIN rates ON rates.lang = d.lang
     GROUP BY d.lang
     """,
-    tags=["trainprep", "mixture", "llm-pipeline"],
 )
 def temperature_mixture_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature-based language resampling (share^alpha, alpha=0.5 —
@@ -395,7 +389,6 @@ _BUDGET_CHARS = 3000  # per-source selection budget
     FROM ranked
     GROUP BY source
     """,
-    tags=["trainprep", "selection", "llm-pipeline"],
 )
 def quality_budget_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Data selection under a budget: rank documents by classifier score
@@ -454,7 +447,6 @@ def quality_budget_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM t
     GROUP BY bucket
     """,
-    tags=["trainprep", "batching", "llm-pipeline"],
 )
 def padding_efficiency_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Length-bucketed batching audit: documents grouped into
@@ -564,7 +556,7 @@ _BPE_EXPECTED_ORACLE = f"""
     """
 
 
-@query("bpe_train_merges", oracle=_BPE_EXPECTED_ORACLE, tags=["bpe", "tokenizer"])
+@query("bpe_train_merges", oracle=_BPE_EXPECTED_ORACLE)
 def bpe_train_merges_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Learn 12 BPE merges from the documents corpus; returns the ranked
     merge table (operators/bpe.py — word-frequency table is the only
@@ -659,7 +651,6 @@ def _bpe_encode_oracle() -> str:
 @query(
     "bpe_encode_token_stats",
     oracle=_bpe_encode_oracle(),
-    tags=["bpe", "tokenizer", "llm-pipeline"],
 )
 def bpe_encode_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE ENCODE over the corpus with the merges trained by
@@ -742,7 +733,6 @@ def bpe_encode_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                  * 1e6) / 1e6 AS effective_rows
     FROM c, t
     """,
-    tags=["trainprep", "imbalance", "llm-pipeline"],
 )
 def class_balance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inverse-frequency class rebalancing weights (sklearn's 'balanced'
@@ -787,7 +777,6 @@ _GKF_FOLDS = 5
            cast(count(DISTINCT source) AS BIGINT) AS n_sources
     FROM f GROUP BY fold
     """,
-    tags=["trainprep", "cv", "leakage"],
 )
 def grouped_fold_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Group-aware cross-validation folds (GroupKFold semantics): the
@@ -847,7 +836,6 @@ _HEX8_MANIFEST_SQL = (
            cast(sum(content_h) AS BIGINT) AS content_checksum
     FROM s GROUP BY 1
     """,
-    tags=["export", "manifest", "llm-pipeline"],
 )
 def training_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The corpus-export manifest: deterministic md5 shard assignment
@@ -916,7 +904,6 @@ def training_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
                  / b.n_users * 1e6) / 1e6 AS user_overlap_share
     FROM base b LEFT JOIN leak l ON l.split = b.split
     """,
-    tags=["train-prep", "temporal-split", "llm-pipeline"],
 )
 def temporal_split_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temporal train/val/test split audit — the time-ordered discipline
@@ -1013,7 +1000,6 @@ _TE_SMOOTH = 20  # pseudo-observations pulled toward the global prior
              AS smooth_enc
     FROM d JOIN c USING (cat) CROSS JOIN g
     """,
-    tags=["trainprep", "feature-engineering", "ml"],
 )
 def loo_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Leave-one-out target encoding of a categorical feature — the
@@ -1096,7 +1082,6 @@ def loo_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM r CROSS JOIN n
     JOIN p ON p.rk = ((2 * r.r - 1) * n.n + 2 * r.n_g - 1) // (2 * r.n_g)
     """,
-    tags=["trainprep", "feature-engineering", "distribution"],
 )
 def quantile_normalize_doclen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quantile normalization of document length across languages — the
@@ -1192,7 +1177,6 @@ def quantile_normalize_doclen(spark: SparkSession, sf_dir: str) -> DataFrame:
              + 0.0::DOUBLE AS iv_term
     FROM b CROSS JOIN t
     """,
-    tags=["trainprep", "feature-engineering", "ml"],
 )
 def woe_value_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weight-of-evidence binning — the credit-scoring encoding that
@@ -1298,7 +1282,6 @@ def _ipf_oracle() -> str:
 @query(
     "ipf_mixture_raking",
     oracle=_ipf_oracle(),
-    tags=["trainprep", "mixture", "iterative", "llm-pipeline"],
 )
 def ipf_mixture_raking(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Iterative proportional fitting (Deming-Stephan raking) of the
@@ -1427,7 +1410,6 @@ ORDER BY si DESC, sc.doc_id ASC LIMIT 20
 @query(
     "dsir_importance_topk",
     oracle=_DSIR_ORACLE,
-    tags=["llm-pipeline", "trainprep", "data-selection"],
 )
 def dsir_importance_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Data Selection via Importance Resampling (DSIR, Xie et al. 2023)
@@ -1562,7 +1544,6 @@ _HC_HEX6 = (
                                       n_tokens)), 6) AS expected_buckets
     FROM agg
     """,
-    tags=["trainprep", "feature-hashing", "extension"],
 )
 def hash_collision_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Feature-hashing collision audit: the corpus vocabulary hashed

@@ -56,7 +56,6 @@ ORDERS_RULES = [
                AS composite_unique__l_orderkey_l_linenumber
     FROM lineitem
     """,
-    tags=["V1", "V3", "V4", "V5", "V7", "V10"],
 )
 def dq_lineitem_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seven rules -> ONE aggregation pass over lineitem (one scan at any
@@ -93,7 +92,6 @@ def dq_lineitem_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
       UNION ALL SELECT 'str_length__o_orderpriority', v_len, n_rows FROM wide
     )
     """,
-    tags=["V1", "V2", "V3", "V4", "V6", "V12"],
 )
 def dq_orders_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Long-format rule report {rule, violations, passed, n_rows} — the
@@ -108,7 +106,6 @@ def dq_orders_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem l
     WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_orderkey = l.l_orderkey)
     """,
-    tags=["V8", "J5"],
 )
 def dq_lineitem_fk_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Referential integrity lineitem.l_orderkey -> orders (dbt
@@ -137,7 +134,6 @@ def dq_lineitem_fk_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
            END AS status
     FROM events
     """,
-    tags=["V11"],
 )
 def dq_events_freshness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Freshness SLI with ok/warning(1.25x)/breach ladder
@@ -205,7 +201,6 @@ def dq_events_freshness(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(NULL AS VARCHAR), mn_cust, mx_cust
     FROM s
     """,
-    tags=["profile", "dq"],
 )
 def orders_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Column profiler — the first thing any data platform runs against
@@ -298,7 +293,6 @@ def _fd_oracle_block(name: str, tbl: str, lhs: str, rhs: str) -> str:
     oracle=" UNION ALL ".join(
         _fd_oracle_block(*c) for c in _FD_CANDIDATES
     ),
-    tags=["profiling", "data-quality", "extension"],
 )
 def fd_violation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Functional-dependency discovery over candidate column pairs: for
@@ -388,7 +382,6 @@ _L_DIV = 2
       ON s.nation = g.nation AND s.segment = g.segment
      AND s.bal_band = g.bal_band
     """,
-    tags=["privacy", "k-anonymity", "extension"],
 )
 def k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-anonymity / l-diversity audit (Sweeney 2002; Machanavajjhala
@@ -486,7 +479,6 @@ _DP_HEX8 = (
            round(abs(noise) / true_count, 6) AS relative_error
     FROM n
     """,
-    tags=["privacy", "differential-privacy", "extension"],
 )
 def dp_noisy_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Differentially-private count release (Dwork 2006): per-type event
@@ -577,7 +569,6 @@ _TC_T = 0.2       # release threshold on ordered EMD
              >= {_TC_T!r} * 1e6 AS violates_t
     FROM cum GROUP BY 1, 2
     """,
-    tags=["validation", "privacy", "t-closeness", "extension"],
 )
 def t_closeness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """t-closeness (Li, Li & Venkatasubramanian 2007) release audit —
@@ -681,7 +672,6 @@ _SLO_WINDOWS = ((1, 14.4), (6, 6.0), (24, 3.0))  # (hours, page threshold)
               / 1e6 > page_thr) AS page_alert
     FROM c
     """,
-    tags=["V-ext", "slo", "observability", "extension"],
 )
 def slo_burn_rate_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-window SLO error-budget BURN RATE at the corpus horizon —

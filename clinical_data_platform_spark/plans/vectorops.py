@@ -36,7 +36,6 @@ _NORM_SQL = (
     FROM embeddings
     GROUP BY label
     """,
-    tags=["vector", "A7"],
 )
 def embedding_norms_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L2-norm statistics per label — array math via aggregate() higher-order
@@ -66,7 +65,6 @@ def embedding_norms_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT vec_id, round(cos, 5) AS cosine
     FROM sims ORDER BY cos DESC, vec_id LIMIT 10
     """,
-    tags=["vector", "ann"],
 )
 def cosine_topk_vec0(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact brute-force cosine top-10 neighbors of vec_id=0.
@@ -125,7 +123,6 @@ def _recall_banded_top10(exact: DataFrame, approx: DataFrame) -> DataFrame:
 @query(
     "lsh_ann_topk_vec0",
     oracle=_ANN_EXACT_TOP10_SQL,
-    tags=["vector", "ann", "lsh"],
 )
 def lsh_ann_topk_vec0(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate ANN via MULTI-TABLE random-hyperplane LSH (16 tables x
@@ -174,7 +171,6 @@ def lsh_ann_topk_vec0(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT query_id, vec_id, round(cos, 5) AS cosine, cast(rank AS INTEGER) AS rank
     FROM ranked WHERE rank <= 5
     """,
-    tags=["vector", "ann", "knn-join"],
 )
 def knn_join_top5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact k-NN JOIN for a broadcastable query set (3 query vectors):
@@ -195,7 +191,6 @@ def knn_join_top5(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "ivf_ann_topk_vec0",
     oracle=_ANN_EXACT_TOP10_SQL,
-    tags=["vector", "ann", "ivf"],
 )
 def ivf_ann_topk_vec0(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF approximate ANN: KMeans-bucketed corpus (fixed seed), probe
@@ -358,7 +353,6 @@ def _pair_oracle_sql() -> str:
 @query(
     "embedding_near_dup_pairs",
     oracle=_pair_oracle_sql(),
-    tags=["vector", "dedup", "near-dup"],
 )
 def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (cos > 0.45) via banded
@@ -610,7 +604,6 @@ def _t80_candidates(e: DataFrame) -> DataFrame:
     WHERE {_DOT_SQL.format(a='a.embedding', b='b.embedding')}
           / (a.nrm * b.nrm) > {_T80_TAU}
     """,
-    tags=["vector", "dedup", "near-dup", "scale"],
 )
 def embedding_near_dup_t80_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Production-threshold embedding near-dup pairs (r5 verdict item 3):
@@ -668,7 +661,6 @@ def embedding_near_dup_t80_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS prune_ratio
     FROM tot, cc
     """,
-    tags=["vector", "dedup", "near-dup", "scale", "audit"],
 )
 def embedding_lsh_t80_prune_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pruning audit for the production banding: total pairs, banded
@@ -754,7 +746,6 @@ def _slsh_bucket_sql() -> str:
     SELECT vec_id, round(cos, 5) AS cosine
     FROM sims ORDER BY cos DESC, vec_id LIMIT 10
     """,
-    tags=["vector", "ann", "lsh"],
 )
 def sign_lsh_ann_topk_vec0(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN via md5-derived sign-projection LSH, exactly oracle-checked:
@@ -815,7 +806,6 @@ def sign_lsh_ann_topk_vec0(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM e
     GROUP BY label
     """,
-    tags=["vector", "quantization", "llm-pipeline"],
 )
 def embedding_int8_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Symmetric int8 quantization audit: per-vector scale = max|x|/127,
@@ -893,7 +883,6 @@ _NEG_K = 4  # negatives drawn per anchor
         norm_a=_NORM_SQL.format(a="c.a_emb"),
         norm_b=_NORM_SQL.format(a="b.embedding"),
     ),
-    tags=["vector", "trainprep", "llm-pipeline"],
 )
 def contrastive_negative_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic negative sampling for contrastive embedding
@@ -992,7 +981,6 @@ _SCURVE_SIMS = [0.2, 0.4, 0.5, 0.6, 0.8, 0.9]
              AS s_threshold
     FROM grid, sims
     """,
-    tags=["dedup", "lsh", "planning", "llm-pipeline"],
 )
 def lsh_scurve_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The MinHash-LSH parameter planner — the S-curve priced
@@ -1105,7 +1093,6 @@ def _ham_oracle_sql() -> str:
 @query(
     "hamming_rerank_topk_vec0",
     oracle=_ham_oracle_sql(),
-    tags=["vector", "similarity", "ann", "llm-pipeline"],
 )
 def hamming_rerank_topk_vec0(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-stage binary retrieval — the third classic ANN path next to

@@ -119,7 +119,7 @@ def test_tracer_mechanics(spark):
         spark.createDataFrame([(i,) for i in kept3], "doc_id long"), "doc_id"
     )
     pairs = ngram_jaccard_pairs_inverted(
-        s3, "doc_id", "text", n=3, threshold=0.5, max_shingle_docs=1000
+        s3, "doc_id", "text", n=3, threshold=0.5
     )
     comp = {
         r["node"]: r["component"]

@@ -285,7 +285,7 @@ def test_ppjoin_prefix_prunes_candidates_losslessly(spark):
     expect = {
         (r.id_a, r.id_b, r.n_common, r.jaccard)
         for r in ngram_jaccard_pairs(
-            d, "doc_id", "text", n=3, threshold=0.3, max_shingle_docs=None
+            d, "doc_id", "text", n=3, threshold=0.3
         ).collect()
     }
     assert got == expect and got
@@ -304,14 +304,12 @@ def test_containment_dominates_jaccard_and_is_directed(spark):
 
     sf = "/root/testdata/sf0.001"
     d = T(spark, sf, "documents")
-    cont = containment_pairs(
-        d, "doc_id", "text", n=3, threshold=0.5, max_shingle_docs=None
-    ).collect()
+    cont = containment_pairs(d, "doc_id", "text", n=3, threshold=0.5).collect()
     assert cont
     jacc = {
         (min(r.id_a, r.id_b), max(r.id_a, r.id_b)): r.jaccard
         for r in ngram_jaccard_pairs(
-            d, "doc_id", "text", n=3, threshold=0.01, max_shingle_docs=None
+            d, "doc_id", "text", n=3, threshold=0.01
         ).collect()
     }
     for r in cont:
@@ -324,58 +322,91 @@ def test_containment_dominates_jaccard_and_is_directed(spark):
         assert r.containment >= jacc[key] - 1e-6, (r, jacc[key])
 
 
-def test_df_cap_is_inert_on_shipped_corpus(spark):
-    """The registered dedup queries now run with max_shingle_docs=1000 ON
-    (the 100 TB quadratic-blowup guard). On the shipped corpus the max
-    shingle document-frequency is far below the cap, so cap-on must equal
+def _brute_pair_counts(elems, cap):
+    """{(id_a, id_b): n_common} over keys held by 2..cap ids."""
+    from collections import Counter, defaultdict
+
+    holders = defaultdict(list)
+    for i, k in elems:
+        holders[k].append(i)
+    pairs = Counter()
+    for ids in holders.values():
+        if 2 <= len(ids) <= cap:
+            ids = sorted(ids)
+            for x in range(len(ids)):
+                for y in ids[x + 1:]:
+                    pairs[(ids[x], y)] += 1
+    return pairs
+
+
+def test_posting_pair_counts_cap_binds_at_exactly_the_cap(spark, monkeypatch):
+    """Both sides of the posting cap against a pure-Python brute force:
+    a key held by exactly POSTING_DF_CAP ids contributes all of its
+    C(cap, 2) pairs, a key held by POSTING_DF_CAP + 1 ids and a key held
+    by one id contribute none. Raising the cap by one lets the over-cap
+    key through, with the same brute force at the raised cap."""
+    from clinical_data_platform_spark.operators import dedup
+
+    cap = dedup.POSTING_DF_CAP
+    elems = (
+        [(0, "solo")]
+        + [(i, "at_cap") for i in range(cap)]
+        + [(i, "over_cap") for i in range(cap + 1)]
+    )
+    df = spark.createDataFrame(elems, "id BIGINT, key STRING")
+
+    def got():
+        pdf = dedup.posting_pair_counts(df, "id", "key").toPandas()
+        return dict(zip(zip(pdf.id_a, pdf.id_b), pdf.n_common))
+
+    capped = got()
+    assert capped == _brute_pair_counts(elems, cap)
+    assert len(capped) == cap * (cap - 1) // 2 == 499_500
+    assert set(capped.values()) == {1}
+
+    monkeypatch.setattr(dedup, "POSTING_DF_CAP", cap + 1)
+    raised = got()
+    assert raised == _brute_pair_counts(elems, cap + 1)
+    assert len(raised) == (cap + 1) * cap // 2
+    assert set(raised.values()) == {1, 2}
+
+
+def test_df_cap_is_inert_on_shipped_corpus(spark, monkeypatch):
+    """The registered dedup queries run with POSTING_DF_CAP ON (the 100 TB
+    quadratic-blowup guard). On the shipped corpus the max shingle
+    document-frequency is far below the cap, so cap-on must equal
     cap-off exactly — pinning that the guard changes nothing at test
     scale while the oracle mirror keeps the check value-exact."""
     from clinical_data_platform_spark.catalog import table as T
-    from clinical_data_platform_spark.operators.dedup import (
-        containment_pairs,
-        ngram_jaccard_pairs_inverted,
-        shingle_table,
-    )
+    from clinical_data_platform_spark.operators import dedup
 
     sf = "/root/testdata/sf0.001"
     d = T(spark, sf, "documents")
     max_df = (
-        shingle_table(d, "doc_id", "text", 3)
+        dedup.shingle_table(d, "doc_id", "text", 3)
         .groupBy("shingle")
         .count()
         .agg(F.max("count"))
         .collect()[0][0]
     )
-    assert max_df < 1000, f"corpus max shingle df {max_df} reached the cap"
+    assert max_df < dedup.POSTING_DF_CAP, (
+        f"corpus max shingle df {max_df} reached the cap"
+    )
 
     key = lambda r: (r.id_a, r.id_b)  # noqa: E731
-    on = sorted(
-        ngram_jaccard_pairs_inverted(
-            d, "doc_id", "text", n=3, threshold=0.05, max_shingle_docs=1000
-        ).collect(),
-        key=key,
-    )
-    off = sorted(
-        ngram_jaccard_pairs_inverted(
-            d, "doc_id", "text", n=3, threshold=0.05, max_shingle_docs=None
-        ).collect(),
-        key=key,
-    )
-    assert on == off and on
-
     ckey = lambda r: (r.id_contained, r.id_container)  # noqa: E731
-    con_on = sorted(
-        containment_pairs(
-            d, "doc_id", "text", n=3, threshold=0.8, max_shingle_docs=1000
-        ).collect(),
-        key=ckey,
-    )
-    con_off = sorted(
-        containment_pairs(
-            d, "doc_id", "text", n=3, threshold=0.8, max_shingle_docs=None
-        ).collect(),
-        key=ckey,
-    )
+
+    def run():
+        jac = dedup.ngram_jaccard_pairs_inverted(
+            d, "doc_id", "text", n=3, threshold=0.05
+        )
+        con = dedup.containment_pairs(d, "doc_id", "text", n=3, threshold=0.8)
+        return sorted(jac.collect(), key=key), sorted(con.collect(), key=ckey)
+
+    on, con_on = run()
+    monkeypatch.setattr(dedup, "POSTING_DF_CAP", 2**31 - 1)
+    off, con_off = run()
+    assert on == off and on
     assert con_on == con_off and con_on
 
 
