@@ -62,6 +62,78 @@ _EDGES_SQL = """
 """
 
 
+def _trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The directed nation-trade graph every query in this module runs
+    on: (src, dst, w) = lineitem count per (supplier nation, customer
+    nation), self-loops kept. The TPC-H Q7 join shape — fact tables
+    joined on their keys, the 25-row nation dim broadcast to both ends.
+
+    Callers derive their variant after the aggregate (``src != dst``,
+    a column subset); Catalyst pushes a grouping-key filter below the
+    aggregate and prunes an unused ``w``, so a variant plans exactly as
+    if it were built directly."""
+    l = T(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    o = T(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    # supplier/customer are DATA-SIZED (SFx10k / SFx150k rows): no broadcast
+    # hint — AQE broadcasts them at small SF and shuffles at 100 TB.
+    s = T(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    c = T(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    n1 = F.broadcast(
+        T(spark, sf_dir, "nation").select(
+            F.col("n_nationkey").alias("n1_key"), F.col("n_name").alias("src")
+        )
+    )
+    n2 = F.broadcast(
+        T(spark, sf_dir, "nation").select(
+            F.col("n_nationkey").alias("n2_key"), F.col("n_name").alias("dst")
+        )
+    )
+    return (
+        l.join(s, l.l_suppkey == s.s_suppkey)
+        .join(o, l.l_orderkey == o.o_orderkey)
+        .join(c, o.o_custkey == c.c_custkey)
+        .join(n1, F.col("s_nationkey") == F.col("n1_key"))
+        .join(n2, F.col("c_nationkey") == F.col("n2_key"))
+        .groupBy("src", "dst")
+        .agg(F.count(F.lit(1)).alias("w"))
+    )
+
+
+def _heavy_pairs(spark: SparkSession, sf_dir: str, factor: float) -> DataFrame:
+    """The thresholded undirected trade graph: canonical (a, b, w) pairs
+    with a < b, w = trade in both directions, kept where w exceeds
+    ``factor`` x the mean pair weight (so the graph is a genuine sparse
+    subgraph, not the complete trade clique). The mean is a one-row
+    aggregate crossJoined back as a broadcast scalar."""
+    und = (
+        _trade_edges(spark, sf_dir)
+        .filter(F.col("src") != F.col("dst"))
+        .select(
+            F.least("src", "dst").alias("a"),
+            F.greatest("src", "dst").alias("b"),
+            "w",
+        )
+        .groupBy("a", "b")
+        .agg(F.sum("w").alias("w"))
+    )
+    thresh = und.agg(F.avg("w").alias("avg_w"))
+    return (
+        und.crossJoin(F.broadcast(thresh))
+        .filter(F.col("w") > factor * F.col("avg_w"))
+        .select("a", "b", "w")
+    )
+
+
+def _symmetrize(pairs: DataFrame, *cols: str) -> DataFrame:
+    """Canonical (a, b, *cols) pairs -> directed (src, dst, *cols) edges,
+    both directions (UNION ALL)."""
+    return pairs.select(
+        F.col("a").alias("src"), F.col("b").alias("dst"), *cols
+    ).unionAll(
+        pairs.select(F.col("b").alias("src"), F.col("a").alias("dst"), *cols)
+    )
+
+
 def _iter_sql(k: int) -> str:
     return f"""
     it{k} AS (
@@ -102,32 +174,9 @@ def nation_trade_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-partitioned on the shared key), groupBy dst sums the damped
     contributions, and a left join back to the node table restores
     rank = (1-d)/N for nodes without in-edges."""
-    l = T(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = T(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    # supplier/customer are DATA-SIZED (SFx10k / SFx150k rows): no broadcast
-    # hint — AQE broadcasts them at small SF and shuffles at 100 TB.
-    s = T(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    c = T(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n1 = F.broadcast(
-        T(spark, sf_dir, "nation").select(
-            F.col("n_nationkey").alias("n1_key"), F.col("n_name").alias("src")
-        )
+    ranks = pagerank_frame(
+        _trade_edges(spark, sf_dir), iters=_PR_ITERS, teleport=0.15
     )
-    n2 = F.broadcast(
-        T(spark, sf_dir, "nation").select(
-            F.col("n_nationkey").alias("n2_key"), F.col("n_name").alias("dst")
-        )
-    )
-    e0 = (
-        l.join(s, l.l_suppkey == s.s_suppkey)
-        .join(o, l.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(n1, F.col("s_nationkey") == F.col("n1_key"))
-        .join(n2, F.col("c_nationkey") == F.col("n2_key"))
-        .groupBy("src", "dst")
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
-    ranks = pagerank_frame(e0, iters=_PR_ITERS, teleport=0.15)
     return ranks.select(
         F.col("node").alias("nation"), F.round("r", 6).alias("pagerank")
     )
@@ -272,45 +321,8 @@ def trade_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     doing the dedup work a "count then divide by 6" plan would botch on
     skew. The oracle reproduces edge build, thresholding, and both joins
     verbatim."""
-    l = T(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = T(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    # supplier/customer are DATA-SIZED (SFx10k / SFx150k rows): no broadcast
-    # hint — AQE broadcasts them at small SF and shuffles at 100 TB.
-    s = T(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    c = T(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n1 = F.broadcast(
-        T(spark, sf_dir, "nation").select(
-            F.col("n_nationkey").alias("n1_key"), F.col("n_name").alias("src")
-        )
-    )
-    n2 = F.broadcast(
-        T(spark, sf_dir, "nation").select(
-            F.col("n_nationkey").alias("n2_key"), F.col("n_name").alias("dst")
-        )
-    )
-    d0 = (
-        l.join(s, l.l_suppkey == s.s_suppkey)
-        .join(o, l.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(n1, F.col("s_nationkey") == F.col("n1_key"))
-        .join(n2, F.col("c_nationkey") == F.col("n2_key"))
-        .filter(F.col("src") != F.col("dst"))
-        .groupBy("src", "dst")
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
-    und = (
-        d0.select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-            "w",
-        )
-        .groupBy("a", "b")
-        .agg(F.sum("w").alias("w"))
-    )
-    thresh = und.agg(F.avg("w").alias("avg_w"))
     e = (
-        und.crossJoin(F.broadcast(thresh))
-        .filter(F.col("w") > F.col("avg_w"))
+        _heavy_pairs(spark, sf_dir, 1.0)
         .select("a", "b")
         .localCheckpoint()  # reused by all three triangle join legs
     )
@@ -476,55 +488,10 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
     shapes as PageRank, with per-iteration localCheckpoint keeping the
     plan linear. At 100 TB: state is |nodes| rows, per-round shuffle is
     edge-bounded; the argmax window partitions by node (never global)."""
-    l = T(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = T(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    # supplier/customer are DATA-SIZED (SFx10k / SFx150k rows): no broadcast
-    # hint — AQE broadcasts them at small SF and shuffles at 100 TB.
-    s = T(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    c = T(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n1 = F.broadcast(
-        T(spark, sf_dir, "nation").select(
-            F.col("n_nationkey").alias("n1_key"), F.col("n_name").alias("src")
-        )
-    )
-    n2 = F.broadcast(
-        T(spark, sf_dir, "nation").select(
-            F.col("n_nationkey").alias("n2_key"), F.col("n_name").alias("dst")
-        )
-    )
-    d0 = (
-        l.join(s, l.l_suppkey == s.s_suppkey)
-        .join(o, l.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(n1, F.col("s_nationkey") == F.col("n1_key"))
-        .join(n2, F.col("c_nationkey") == F.col("n2_key"))
-        .filter(F.col("src") != F.col("dst"))
-        .groupBy("src", "dst")
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
-    und = (
-        d0.select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-            "w",
-        )
-        .groupBy("a", "b")
-        .agg(F.sum("w").alias("w"))
-    )
-    thresh = und.agg(F.avg("w").alias("avg_w"))
     # 1.5x mean keeps only genuinely heavy trade pairs so the graph has
     # actual community structure (at 1.0x it stays near-complete and LP
     # collapses to one label)
-    ek = (
-        und.crossJoin(F.broadcast(thresh))
-        .filter(F.col("w") > 1.5 * F.col("avg_w"))
-        .select("a", "b", "w")
-    )
-    esym = ek.select(
-        F.col("a").alias("src"), F.col("b").alias("dst"), "w"
-    ).unionAll(
-        ek.select(F.col("b").alias("src"), F.col("a").alias("dst"), "w")
-    ).localCheckpoint()
+    esym = _symmetrize(_heavy_pairs(spark, sf_dir, 1.5), "w").localCheckpoint()
     nodes = esym.select(F.col("src").alias("node")).distinct()
     labels = nodes.select("node", F.col("node").alias("label"))
     w_top = Window.partitionBy("node").orderBy(
@@ -739,52 +706,7 @@ def trade_kcore_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
     truncating lineage AND the inherited stats (the self-joining-loop
     trap documented there). At 100 TB: identical shapes; rounds scale
     as the peeling depth, not the node count."""
-    l = T(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = T(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    # supplier/customer are DATA-SIZED (SFx10k / SFx150k rows): no broadcast
-    # hint — AQE broadcasts them at small SF and shuffles at 100 TB.
-    s = T(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    c = T(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n1 = F.broadcast(
-        T(spark, sf_dir, "nation").select(
-            F.col("n_nationkey").alias("n1_key"), F.col("n_name").alias("src")
-        )
-    )
-    n2 = F.broadcast(
-        T(spark, sf_dir, "nation").select(
-            F.col("n_nationkey").alias("n2_key"), F.col("n_name").alias("dst")
-        )
-    )
-    d0 = (
-        l.join(s, l.l_suppkey == s.s_suppkey)
-        .join(o, l.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(n1, F.col("s_nationkey") == F.col("n1_key"))
-        .join(n2, F.col("c_nationkey") == F.col("n2_key"))
-        .filter(F.col("src") != F.col("dst"))
-        .groupBy("src", "dst")
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
-    und = (
-        d0.select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-            "w",
-        )
-        .groupBy("a", "b")
-        .agg(F.sum("w").alias("w"))
-    )
-    thresh = und.agg(F.avg("w").alias("avg_w"))
-    ek = (
-        und.crossJoin(F.broadcast(thresh))
-        .filter(F.col("w") > 1.2 * F.col("avg_w"))
-        .select("a", "b")
-    )
-    esym = (
-        ek.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-        .unionAll(ek.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-        .localCheckpoint()
-    )
+    esym = _symmetrize(_heavy_pairs(spark, sf_dir, 1.2)).localCheckpoint()
     nodes = esym.select(F.col("src").alias("node")).distinct().localCheckpoint()
     surv = [nodes]
     for _ in range(_KC_ROUNDS):
@@ -918,31 +840,7 @@ def trade_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     node set localCheckpoint once before the loop; each round is two
     node-keyed join+agg shuffles — broadcastable at this node count,
     hash-co-located at web scale.""".format(iters=_HITS_ITERS)
-    l = T(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = T(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    # supplier/customer are DATA-SIZED (SFx10k / SFx150k rows): no broadcast
-    # hint — AQE broadcasts them at small SF and shuffles at 100 TB.
-    s = T(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    c = T(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n1 = F.broadcast(
-        T(spark, sf_dir, "nation").select(
-            F.col("n_nationkey").alias("n1_key"), F.col("n_name").alias("src")
-        )
-    )
-    n2 = F.broadcast(
-        T(spark, sf_dir, "nation").select(
-            F.col("n_nationkey").alias("n2_key"), F.col("n_name").alias("dst")
-        )
-    )
-    e = (
-        l.join(s, l.l_suppkey == s.s_suppkey)
-        .join(o, l.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(n1, F.col("s_nationkey") == F.col("n1_key"))
-        .join(n2, F.col("c_nationkey") == F.col("n2_key"))
-        .groupBy("src", "dst")
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
+    e = _trade_edges(spark, sf_dir)
     # r9 optimization: the edge table is |nations|^2-bounded BY
     # CONSTRUCTION, so the a/h rounds replay on the driver with bit-exact
     # scalar replicas (functions/driverexact.py) — the distributed loop
@@ -1026,51 +924,12 @@ def trade_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrive from a node-sized aggregate, and the Jaccard is an exact
     integer ratio trunc6'd before the TakeOrdered(10) so the tie-break is
     engine-stable."""
-    l = T(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = T(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    # supplier/customer are DATA-SIZED (SFx10k / SFx150k rows): no broadcast
-    # hint — AQE broadcasts them at small SF and shuffles at 100 TB.
-    s = T(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    c = T(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n1 = F.broadcast(
-        T(spark, sf_dir, "nation").select(
-            F.col("n_nationkey").alias("n1_key"), F.col("n_name").alias("src")
-        )
-    )
-    n2 = F.broadcast(
-        T(spark, sf_dir, "nation").select(
-            F.col("n_nationkey").alias("n2_key"), F.col("n_name").alias("dst")
-        )
-    )
-    d0 = (
-        l.join(s, l.l_suppkey == s.s_suppkey)
-        .join(o, l.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(n1, F.col("s_nationkey") == F.col("n1_key"))
-        .join(n2, F.col("c_nationkey") == F.col("n2_key"))
-        .filter(F.col("src") != F.col("dst"))
-        .groupBy("src", "dst")
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
-    und = (
-        d0.select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-            "w",
-        )
-        .groupBy("a", "b")
-        .agg(F.sum("w").alias("w"))
-    )
-    thresh = und.agg(F.avg("w").alias("avg_w"))
     ek = (
-        und.crossJoin(F.broadcast(thresh))
-        .filter(F.col("w") > 1.5 * F.col("avg_w"))
+        _heavy_pairs(spark, sf_dir, 1.5)
         .select("a", "b")
         .localCheckpoint()  # feeds esym, the anti-join, and (via esym) deg
     )
-    esym = ek.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionAll(
-        ek.select(F.col("b").alias("src"), F.col("a").alias("dst"))
-    )
+    esym = _symmetrize(ek)
     deg = esym.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias("d")
     )
@@ -1153,50 +1012,7 @@ def trade_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     symmetric edge list; the correlation is one closed-form double
     (each variance factor takes its sqrt separately — the Kendall
     overflow lesson). Same edge build as label_propagation/k-core."""
-    l = T(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = T(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    # supplier/customer are DATA-SIZED (SFx10k / SFx150k rows): no broadcast
-    # hint — AQE broadcasts them at small SF and shuffles at 100 TB.
-    s = T(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    c = T(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n1 = F.broadcast(
-        T(spark, sf_dir, "nation").select(
-            F.col("n_nationkey").alias("n1_key"), F.col("n_name").alias("src")
-        )
-    )
-    n2 = F.broadcast(
-        T(spark, sf_dir, "nation").select(
-            F.col("n_nationkey").alias("n2_key"), F.col("n_name").alias("dst")
-        )
-    )
-    d0 = (
-        l.join(s, l.l_suppkey == s.s_suppkey)
-        .join(o, l.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(n1, F.col("s_nationkey") == F.col("n1_key"))
-        .join(n2, F.col("c_nationkey") == F.col("n2_key"))
-        .filter(F.col("src") != F.col("dst"))
-        .groupBy("src", "dst")
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
-    und = (
-        d0.select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-            "w",
-        )
-        .groupBy("a", "b")
-        .agg(F.sum("w").alias("w"))
-    )
-    thresh = und.agg(F.avg("w").alias("avg_w"))
-    ek = (
-        und.crossJoin(F.broadcast(thresh))
-        .filter(F.col("w") > 1.5 * F.col("avg_w"))
-        .select("a", "b")
-    )
-    esym = ek.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionAll(
-        ek.select(F.col("b").alias("src"), F.col("a").alias("dst"))
-    ).localCheckpoint()
+    esym = _symmetrize(_heavy_pairs(spark, sf_dir, 1.5)).localCheckpoint()
     deg = esym.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).cast("long").alias("d")
     )
@@ -1287,52 +1103,7 @@ def lp_community_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     community's Q term is floor-truncated to 1e-9 fixed-point before
     the community-bounded sum. At 100 TB the label joins shuffle on the
     node key like every LP round."""
-    l = T(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = T(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    # supplier/customer are DATA-SIZED (SFx10k / SFx150k rows): no broadcast
-    # hint — AQE broadcasts them at small SF and shuffles at 100 TB.
-    s = T(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    c = T(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n1 = F.broadcast(
-        T(spark, sf_dir, "nation").select(
-            F.col("n_nationkey").alias("n1_key"), F.col("n_name").alias("src")
-        )
-    )
-    n2 = F.broadcast(
-        T(spark, sf_dir, "nation").select(
-            F.col("n_nationkey").alias("n2_key"), F.col("n_name").alias("dst")
-        )
-    )
-    d0 = (
-        l.join(s, l.l_suppkey == s.s_suppkey)
-        .join(o, l.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(n1, F.col("s_nationkey") == F.col("n1_key"))
-        .join(n2, F.col("c_nationkey") == F.col("n2_key"))
-        .filter(F.col("src") != F.col("dst"))
-        .groupBy("src", "dst")
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
-    und = (
-        d0.select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-            "w",
-        )
-        .groupBy("a", "b")
-        .agg(F.sum("w").alias("w"))
-    )
-    thresh = und.agg(F.avg("w").alias("avg_w"))
-    ek = (
-        und.crossJoin(F.broadcast(thresh))
-        .filter(F.col("w") > 1.5 * F.col("avg_w"))
-        .select("a", "b", "w")
-    )
-    esym = ek.select(
-        F.col("a").alias("src"), F.col("b").alias("dst"), "w"
-    ).unionAll(
-        ek.select(F.col("b").alias("src"), F.col("a").alias("dst"), "w")
-    ).localCheckpoint()
+    esym = _symmetrize(_heavy_pairs(spark, sf_dir, 1.5), "w").localCheckpoint()
     nodes = esym.select(F.col("src").alias("node")).distinct()
     labels = nodes.select("node", F.col("node").alias("label"))
     w_top = Window.partitionBy("node").orderBy(F.desc("wt"), F.asc("label"))
@@ -1441,31 +1212,7 @@ def personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     written identically on both engines, and the seed pick is an
     integer-weight argmax (engine-stable ties by name). Same scale
     shape: checkpointed edge list, rank state node-sized."""
-    l = T(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = T(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    # supplier/customer are DATA-SIZED (SFx10k / SFx150k rows): no broadcast
-    # hint — AQE broadcasts them at small SF and shuffles at 100 TB.
-    s = T(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    c = T(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n1 = F.broadcast(
-        T(spark, sf_dir, "nation").select(
-            F.col("n_nationkey").alias("n1_key"), F.col("n_name").alias("src")
-        )
-    )
-    n2 = F.broadcast(
-        T(spark, sf_dir, "nation").select(
-            F.col("n_nationkey").alias("n2_key"), F.col("n_name").alias("dst")
-        )
-    )
-    e0 = (
-        l.join(s, l.l_suppkey == s.s_suppkey)
-        .join(o, l.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(n1, F.col("s_nationkey") == F.col("n1_key"))
-        .join(n2, F.col("c_nationkey") == F.col("n2_key"))
-        .groupBy("src", "dst")
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
+    e0 = _trade_edges(spark, sf_dir)
     # r9 optimization: the edge table is |nations|^2-bounded BY
     # CONSTRUCTION (the explain-audit broadcast standard), so it is
     # collected ONCE and the node set, dst semi-join filter, integer
@@ -1481,11 +1228,9 @@ def personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     nset = set(nlist)
     erows = [(src, dst, w) for src, dst, w in rows0 if dst in nset]
     wout: dict = {}
-    tw: dict = {}
     for src, _, w in erows:
         wout[src] = wout.get(src, 0) + w
-        tw[src] = tw.get(src, 0) + w
-    seed_name = min(tw, key=lambda nd: (-tw[nd], nd)) if tw else None
+    seed_name = min(wout, key=lambda nd: (-wout[nd], nd)) if wout else None
     if seed_name is None:
         return spark.createDataFrame(
             [], "nation string, is_seed boolean, ppr double"
@@ -1598,31 +1343,14 @@ def bradley_terry_trade_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-verified by the chained-CTE oracle. Scale: one fact-table
     edge build (the Q7 join shape); everything after is a
     |nations|^2-bounded pair table."""
-    l = T(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = T(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    # supplier/customer are DATA-SIZED (SFx10k / SFx150k rows): no broadcast
-    # hint — AQE broadcasts them at small SF and shuffles at 100 TB.
-    s = T(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    c = T(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n1 = F.broadcast(
-        T(spark, sf_dir, "nation").select(
-            F.col("n_nationkey").alias("n1_key"), F.col("n_name").alias("src")
-        )
-    )
-    n2 = F.broadcast(
-        T(spark, sf_dir, "nation").select(
-            F.col("n_nationkey").alias("n2_key"), F.col("n_name").alias("dst")
-        )
-    )
     w = (
-        l.join(s, l.l_suppkey == s.s_suppkey)
-        .join(o, l.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(n1, F.col("s_nationkey") == F.col("n1_key"))
-        .join(n2, F.col("c_nationkey") == F.col("n2_key"))
+        _trade_edges(spark, sf_dir)
         .filter(F.col("src") != F.col("dst"))
-        .groupBy(F.col("src").alias("i"), F.col("dst").alias("j"))
-        .agg(F.count(F.lit(1)).cast("long").alias("wins"))
+        .select(
+            F.col("src").alias("i"),
+            F.col("dst").alias("j"),
+            F.col("w").alias("wins"),
+        )
     )
     # r9 optimization: the pair table is |nations|^2-bounded BY
     # CONSTRUCTION, so Hunter's MM rounds replay on the driver with
@@ -1772,31 +1500,10 @@ def nation_closeness_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Isolated nations (no trade edges) report 0 reachable and NULL
     centralities via the left join against the full nation dim."""
-    l = T(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = T(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    # supplier/customer are DATA-SIZED (SFx10k / SFx150k rows): no broadcast
-    # hint — AQE broadcasts them at small SF and shuffles at 100 TB.
-    s = T(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    c = T(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n1 = F.broadcast(
-        T(spark, sf_dir, "nation").select(
-            F.col("n_nationkey").alias("n1_key"), F.col("n_name").alias("src")
-        )
-    )
-    n2 = F.broadcast(
-        T(spark, sf_dir, "nation").select(
-            F.col("n_nationkey").alias("n2_key"), F.col("n_name").alias("dst")
-        )
-    )
     e0 = (
-        l.join(s, l.l_suppkey == s.s_suppkey)
-        .join(o, l.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(n1, F.col("s_nationkey") == F.col("n1_key"))
-        .join(n2, F.col("c_nationkey") == F.col("n2_key"))
+        _trade_edges(spark, sf_dir)
         .filter(F.col("src") != F.col("dst"))
         .select("src", "dst")
-        .distinct()
     )
     und = e0.union(
         e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))

@@ -34,6 +34,80 @@ _HEX6_SQL = (
 )
 
 
+def _time_to_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One row per user: time to first purchase, the relation every
+    survival estimator here runs on — (cohort, dur, evt, x).
+
+    - ``cohort``: 'A'/'B' by the parity of the user id's md5 prefix.
+    - ``dur``: whole hours from the user's first event to the first
+      purchase, or to the corpus horizon (last event) if none.
+    - ``evt``: 1 if the user purchased, 0 if right-censored.
+    - ``x``: the user's total event count (the Cox covariate).
+
+    One per-user aggregate is the only row-proportional shuffle; the
+    horizon is one broadcast scalar. Unused columns are pruned, so a
+    caller that ignores ``cohort`` or ``x`` computes neither."""
+    ev = T(spark, sf_dir, "events").select(
+        "user_id", F.col("ts").cast("long").alias("sec"), "event_type"
+    )
+    pu = ev.groupBy("user_id").agg(
+        F.min("sec").alias("t0"),
+        F.min(
+            F.when(F.col("event_type") == "purchase", F.col("sec"))
+        ).alias("t_evt"),
+        F.count(F.lit(1)).cast("long").alias("x"),
+    )
+    horizon = ev.agg(F.max("sec").alias("t_max"))
+    cohort = F.when(
+        F.conv(
+            F.substring(F.md5(F.col("user_id").cast("string")), 1, 6), 16, 10
+        ).cast("long")
+        % 2
+        == 0,
+        F.lit("A"),
+    ).otherwise(F.lit("B"))
+    return pu.crossJoin(F.broadcast(horizon)).select(
+        cohort.alias("cohort"),
+        F.floor(
+            (F.coalesce(F.col("t_evt"), F.col("t_max")) - F.col("t0"))
+            / F.lit(3600.0)
+        )
+        .cast("long")
+        .alias("dur"),
+        F.when(F.col("t_evt").isNotNull(), 1).otherwise(0).alias("evt"),
+        "x",
+    )
+
+
+def _cohort_risk_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The per-cohort life table: (cohort, dur, d_i, n_i) with d_i the
+    events at duration ``dur`` and n_i the users still at risk there
+    (total minus everyone who left at an earlier duration). Bounded by
+    the time span, not by users, so its ordered windows stay small at
+    any data scale."""
+    tbl = _time_to_purchase(spark, sf_dir).groupBy("cohort", "dur").agg(
+        F.sum("evt").cast("long").alias("d_i"),
+        F.sum(F.lit(1) - F.col("evt")).cast("long").alias("c_i"),
+    )
+    w_tot = Window.partitionBy("cohort")
+    w_prev = (
+        Window.partitionBy("cohort")
+        .orderBy("dur")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    return tbl.select(
+        "cohort",
+        "dur",
+        "d_i",
+        (
+            F.sum(F.col("d_i") + F.col("c_i")).over(w_tot)
+            - F.coalesce(
+                F.sum(F.col("d_i") + F.col("c_i")).over(w_prev), F.lit(0)
+            )
+        ).alias("n_i"),
+    )
+
+
 @query(
     "kaplan_meier_survival",
     oracle=f"""
@@ -99,56 +173,8 @@ def kaplan_meier_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: per-user agg is partial/final on user_id; the life table
     and windows are driver-trivial state. The censoring horizon is one
     broadcast scalar."""
-    ev = T(spark, sf_dir, "events").select(
-        "user_id", F.col("ts").cast("long").alias("sec"), "event_type"
-    )
-    pu = ev.groupBy("user_id").agg(
-        F.min("sec").alias("t0"),
-        F.min(
-            F.when(F.col("event_type") == "purchase", F.col("sec"))
-        ).alias("t_evt"),
-    )
-    horizon = ev.agg(F.max("sec").alias("t_max"))
-    cohort = F.when(
-        F.conv(
-            F.substring(F.md5(F.col("user_id").cast("string")), 1, 6), 16, 10
-        ).cast("long")
-        % 2
-        == 0,
-        F.lit("A"),
-    ).otherwise(F.lit("B"))
-    d = pu.crossJoin(F.broadcast(horizon)).select(
-        cohort.alias("cohort"),
-        F.floor(
-            (F.coalesce(F.col("t_evt"), F.col("t_max")) - F.col("t0"))
-            / F.lit(3600.0)
-        )
-        .cast("long")
-        .alias("dur"),
-        F.when(F.col("t_evt").isNotNull(), 1).otherwise(0).alias("evt"),
-    )
-    tbl = d.groupBy("cohort", "dur").agg(
-        F.sum("evt").cast("long").alias("d_i"),
-        F.sum(F.lit(1) - F.col("evt")).cast("long").alias("c_i"),
-    )
-    w_tot = Window.partitionBy("cohort")
-    w_prev = (
-        Window.partitionBy("cohort")
-        .orderBy("dur")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
+    risk = _cohort_risk_sets(spark, sf_dir)
     w_run = Window.partitionBy("cohort").orderBy("dur")
-    risk = tbl.select(
-        "cohort",
-        "dur",
-        "d_i",
-        (
-            F.sum(F.col("d_i") + F.col("c_i")).over(w_tot)
-            - F.coalesce(
-                F.sum(F.col("d_i") + F.col("c_i")).over(w_prev), F.lit(0)
-            )
-        ).alias("n_i"),
-    )
     # A row with d_i == n_i (everyone still at risk dies there) can only
     # be the cohort's terminal row — survival is exactly 0 and the
     # ln(0) term is excluded from the cumulative sum.
@@ -675,33 +701,10 @@ def logrank_test_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-sided p comes from the shared A&S erf polynomial
     (functions/scalars.NORMAL_SF_SQL — same closed form as the Welch
     and chi-square tests). At 100 TB: identical scale shape to KM."""
-    ev = T(spark, sf_dir, "events").select(
-        "user_id", F.col("ts").cast("long").alias("sec"), "event_type"
-    )
-    pu = ev.groupBy("user_id").agg(
-        F.min("sec").alias("t0"),
-        F.min(
-            F.when(F.col("event_type") == "purchase", F.col("sec"))
-        ).alias("t_evt"),
-    )
-    horizon = ev.agg(F.max("sec").alias("t_max"))
-    grp = F.when(
-        F.conv(
-            F.substring(F.md5(F.col("user_id").cast("string")), 1, 6), 16, 10
-        ).cast("long")
-        % 2
-        == 0,
-        1,
-    ).otherwise(0)
-    d = pu.crossJoin(F.broadcast(horizon)).select(
-        grp.alias("grp"),
-        F.floor(
-            (F.coalesce(F.col("t_evt"), F.col("t_max")) - F.col("t0"))
-            / F.lit(3600.0)
-        )
-        .cast("long")
-        .alias("dur"),
-        F.when(F.col("t_evt").isNotNull(), 1).otherwise(0).alias("evt"),
+    d = _time_to_purchase(spark, sf_dir).select(
+        F.when(F.col("cohort") == "A", 1).otherwise(0).alias("grp"),
+        "dur",
+        "evt",
     )
     tbl = d.groupBy("dur").agg(
         F.sum(F.when(F.col("grp") == 1, F.col("evt")).otherwise(0))
@@ -1097,56 +1100,8 @@ def km_greenwood_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumulative sum of exact integer ratios (d=n terminal rows excluded
     from the sum exactly as the ln term is), z pinned as the 17-digit
     literal. Same scale shape as KM."""
-    ev = T(spark, sf_dir, "events").select(
-        "user_id", F.col("ts").cast("long").alias("sec"), "event_type"
-    )
-    pu = ev.groupBy("user_id").agg(
-        F.min("sec").alias("t0"),
-        F.min(
-            F.when(F.col("event_type") == "purchase", F.col("sec"))
-        ).alias("t_evt"),
-    )
-    horizon = ev.agg(F.max("sec").alias("t_max"))
-    cohort = F.when(
-        F.conv(
-            F.substring(F.md5(F.col("user_id").cast("string")), 1, 6), 16, 10
-        ).cast("long")
-        % 2
-        == 0,
-        F.lit("A"),
-    ).otherwise(F.lit("B"))
-    d = pu.crossJoin(F.broadcast(horizon)).select(
-        cohort.alias("cohort"),
-        F.floor(
-            (F.coalesce(F.col("t_evt"), F.col("t_max")) - F.col("t0"))
-            / F.lit(3600.0)
-        )
-        .cast("long")
-        .alias("dur"),
-        F.when(F.col("t_evt").isNotNull(), 1).otherwise(0).alias("evt"),
-    )
-    tbl = d.groupBy("cohort", "dur").agg(
-        F.sum("evt").cast("long").alias("d_i"),
-        F.sum(F.lit(1) - F.col("evt")).cast("long").alias("c_i"),
-    )
-    w_tot = Window.partitionBy("cohort")
-    w_prev = (
-        Window.partitionBy("cohort")
-        .orderBy("dur")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
+    risk = _cohort_risk_sets(spark, sf_dir)
     w_run = Window.partitionBy("cohort").orderBy("dur")
-    risk = tbl.select(
-        "cohort",
-        "dur",
-        "d_i",
-        (
-            F.sum(F.col("d_i") + F.col("c_i")).over(w_tot)
-            - F.coalesce(
-                F.sum(F.col("d_i") + F.col("c_i")).over(w_prev), F.lit(0)
-            )
-        ).alias("n_i"),
-    )
     surv = F.when(F.col("d_i") == F.col("n_i"), F.lit(0.0)).otherwise(
         F.exp(
             F.sum(
@@ -1250,56 +1205,8 @@ def nelson_aalen_hazard(spark: SparkSession, sf_dir: str) -> DataFrame:
     time-span-bounded life table with ordered cumulative windows; both
     engines sum the per-step double ratios in the same ascending-
     duration order, so drift is libm ulps absorbed by round 6."""
-    ev = T(spark, sf_dir, "events").select(
-        "user_id", F.col("ts").cast("long").alias("sec"), "event_type"
-    )
-    pu = ev.groupBy("user_id").agg(
-        F.min("sec").alias("t0"),
-        F.min(
-            F.when(F.col("event_type") == "purchase", F.col("sec"))
-        ).alias("t_evt"),
-    )
-    horizon = ev.agg(F.max("sec").alias("t_max"))
-    cohort = F.when(
-        F.conv(
-            F.substring(F.md5(F.col("user_id").cast("string")), 1, 6), 16, 10
-        ).cast("long")
-        % 2
-        == 0,
-        F.lit("A"),
-    ).otherwise(F.lit("B"))
-    d = pu.crossJoin(F.broadcast(horizon)).select(
-        cohort.alias("cohort"),
-        F.floor(
-            (F.coalesce(F.col("t_evt"), F.col("t_max")) - F.col("t0"))
-            / F.lit(3600.0)
-        )
-        .cast("long")
-        .alias("dur"),
-        F.when(F.col("t_evt").isNotNull(), 1).otherwise(0).alias("evt"),
-    )
-    tbl = d.groupBy("cohort", "dur").agg(
-        F.sum("evt").cast("long").alias("d_i"),
-        F.sum(F.lit(1) - F.col("evt")).cast("long").alias("c_i"),
-    )
-    w_tot = Window.partitionBy("cohort")
-    w_prev = (
-        Window.partitionBy("cohort")
-        .orderBy("dur")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
+    risk = _cohort_risk_sets(spark, sf_dir)
     w_run = Window.partitionBy("cohort").orderBy("dur")
-    risk = tbl.select(
-        "cohort",
-        "dur",
-        "d_i",
-        (
-            F.sum(F.col("d_i") + F.col("c_i")).over(w_tot)
-            - F.coalesce(
-                F.sum(F.col("d_i") + F.col("c_i")).over(w_prev), F.lit(0)
-            )
-        ).alias("n_i"),
-    )
     dn = F.col("d_i").cast("double") / F.col("n_i").cast("double")
     haz = F.sum(dn).over(w_run)
     var_h = F.sum(
@@ -1421,26 +1328,7 @@ def weibull_survival_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one per-user aggregate is the only row-proportional shuffle;
     the life table, plot points, and moments are horizon-bounded."""
-    ev = T(spark, sf_dir, "events").select(
-        "user_id", F.col("ts").cast("long").alias("sec"), "event_type"
-    )
-    pu = ev.groupBy("user_id").agg(
-        F.min("sec").alias("t0"),
-        F.min(
-            F.when(F.col("event_type") == "purchase", F.col("sec"))
-        ).alias("t_evt"),
-    )
-    horizon = ev.agg(F.max("sec").alias("t_max"))
-    d = pu.crossJoin(F.broadcast(horizon)).select(
-        F.floor(
-            (F.coalesce(F.col("t_evt"), F.col("t_max")) - F.col("t0"))
-            / F.lit(3600.0)
-        )
-        .cast("long")
-        .alias("dur"),
-        F.when(F.col("t_evt").isNotNull(), 1).otherwise(0).alias("evt"),
-    )
-    tbl = d.groupBy("dur").agg(
+    tbl = _time_to_purchase(spark, sf_dir).groupBy("dur").agg(
         F.sum("evt").cast("long").alias("d_i"),
         F.sum(F.lit(1) - F.col("evt")).cast("long").alias("c_i"),
     )
@@ -1639,28 +1527,7 @@ def cox_score_one_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exactness: x, x^2, event sums are integers; each event-time's U and
     I term floors into 1e-9 fixed point before the order-free integer
     sums; z and the erf-polynomial p round at the end."""
-    ev = T(spark, sf_dir, "events").select(
-        "user_id", F.col("ts").cast("long").alias("sec"), "event_type"
-    )
-    pu = ev.groupBy("user_id").agg(
-        F.min("sec").alias("t0"),
-        F.min(
-            F.when(F.col("event_type") == "purchase", F.col("sec"))
-        ).alias("t_evt"),
-        F.count(F.lit(1)).cast("long").alias("x"),
-    )
-    horizon = ev.agg(F.max("sec").alias("t_max"))
-    d = pu.crossJoin(F.broadcast(horizon)).select(
-        F.floor(
-            (F.coalesce(F.col("t_evt"), F.col("t_max")) - F.col("t0"))
-            / F.lit(3600.0)
-        )
-        .cast("long")
-        .alias("dur"),
-        F.when(F.col("t_evt").isNotNull(), 1).otherwise(0).alias("evt"),
-        "x",
-    )
-    g = d.groupBy("dur").agg(
+    g = _time_to_purchase(spark, sf_dir).groupBy("dur").agg(
         F.count(F.lit(1)).cast("long").alias("n_d"),
         F.sum("x").cast("long").alias("sx_d"),
         F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx_d"),

@@ -1,5 +1,6 @@
-"""Wave-44 plans: McNemar's paired test + propensity caliper matching —
-independent sequential Python recounts beyond the DuckDB value oracle."""
+"""plans/survival.py: independent sequential Python recounts and
+structural invariants beyond the DuckDB value oracle (McNemar's paired
+test, propensity caliper matching)."""
 
 from __future__ import annotations
 

@@ -309,17 +309,10 @@ BROADCAST_BOUNDS: dict[tuple[str, str], str] = {
     ("plans/events.py", "dft24_hourly_spectrum"): "24-row DFT twiddle table",
     ("plans/events.py", "cusum_control_chart"): "per-type moment totals (|types| rows)",
     ("plans/events.py", "pinball_loss_forecast_eval"): "3-row quantile-level grid",
-    ("plans/graphops.py", "nation_trade_pagerank"): "nation dim (25 rows; node set of the trade graph)",
-    ("plans/graphops.py", "trade_triangle_counts"): "nation dim (25 rows)",
-    ("plans/graphops.py", "label_propagation_communities"): "nation dim (25 rows)",
-    ("plans/graphops.py", "trade_kcore_peeling"): "nation dim (25 rows)",
-    ("plans/graphops.py", "trade_hits_scores"): "nation dim (25 rows)",
-    ("plans/graphops.py", "trade_link_prediction"): "nation dim + node degrees + edge key set (<=25 nodes / <=625 edges)",
-    ("plans/graphops.py", "trade_degree_assortativity"): "nation dim + node degrees (<=25 rows)",
-    ("plans/graphops.py", "lp_community_modularity"): "nation dim + node label table (<=25 rows)",
-    ("plans/graphops.py", "personalized_pagerank"): "nation dim (25 rows)",
-    ("plans/graphops.py", "bradley_terry_trade_strength"): "nation dim (25 rows)",
-    ("plans/graphops.py", "nation_closeness_centrality"): "nation dim (25 rows)",
+    ("plans/graphops.py", "_trade_edges"): "nation dim (25 rows; node set of every trade-graph query)",
+    ("plans/graphops.py", "trade_link_prediction"): "node degrees + edge key set (<=25 nodes / <=625 edges)",
+    ("plans/graphops.py", "trade_degree_assortativity"): "node degrees (<=25 rows)",
+    ("plans/graphops.py", "lp_community_modularity"): "node label table (<=25 rows)",
     ("plans/layout.py", "audit"): "file-manifest sizes (file-count-bounded)",
     ("plans/relational.py", "region_overview_rollup"): "nation (25) + region (5) dims",
     ("plans/relational.py", "q5_revenue_by_nation"): "nation (25) + filtered region (<=5) dims",
